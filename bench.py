@@ -49,7 +49,7 @@ CORES_HI = int(os.environ.get("BENCH_CORES_HI", "4"))
 # a real 4N-executor cluster does NOT share (each executor brings its
 # own memory; same reasoning as measuring 1→4 instead of 8→32 — the
 # 2→8 pair measured 0.73-0.77 purely from the shared-bandwidth wall).
-# Measured round-3 shape sweep (tools/scaling_exp.py): 2M×KB-pages
+# Measured round-3 shape sweep (BENCH.md "Round-3 shape sweep"): 2M×KB-pages
 # 0.78-0.81, 10M×tiny-pages 0.69-0.80 (shuffle-dominated, noisy),
 # 6M×rep-4 0.87-0.89 consistently.
 SCALING_EVENTS = int(os.environ.get("BENCH_SCALING_EVENTS", "6000000"))

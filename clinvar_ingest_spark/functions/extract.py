@@ -208,45 +208,3 @@ def extract_text(html_col: Column | str) -> Column:
     """Column expression: extracted text of an ``html:binary`` column."""
     col = F.col(html_col) if isinstance(html_col, str) else html_col
     return _extract_text_udf(col)
-
-
-def coalesce_extract_arrow(text_col: str = "text", html_col: str = "html"):
-    """Fused writer-stage transform: ``text = coalesce(text,
-    extract(html))`` applied to a pyarrow Table INSIDE the direct
-    writer's Python stage.
-
-    Why: as a Column-level pandas UDF the extraction costs one full
-    JVM→Python→JVM round trip of the winner rows, followed by a second
-    JVM→Python crossing in the direct writer. Fusing the transform into
-    the writer batch loop makes it ONE crossing — the bytes land in
-    Python once, get extracted, and are parquet-encoded in place.
-
-    Byte-identity with the Column path is by construction: the pandas
-    pipeline below is the same regex objects and same ops as
-    ``_extract_text_udf`` (asserted in tests/test_extract.py). Only
-    NULL-text rows are extracted (coalesce semantics: stored winners
-    keep their text byte-for-byte, tombstones keep NULL).
-    """
-
-    def _fn(tbl):
-        import pyarrow as pa
-
-        text = tbl[text_col].to_pandas()
-        mask = text.isna()
-        if mask.any():
-            html = tbl[html_col].to_pandas()[mask]
-            s = html.map(
-                lambda b: None
-                if b is None
-                else b.decode("utf-8", errors="replace")
-            )
-            s = s.str.replace(_RE_MARKUP, " ", regex=True)
-            s = s.str.replace(_RE_ENTITY, _decode_entity, regex=True)
-            s = s.str.replace(_RE_WS, " ", regex=True).str.strip(_WS_CHARS)
-            text.loc[mask] = s
-        idx = tbl.schema.get_field_index(text_col)
-        return tbl.set_column(
-            idx, text_col, pa.Array.from_pandas(text, type=pa.string())
-        )
-
-    return _fn

@@ -58,7 +58,6 @@ class IngestPipeline:
         dedup_strategy: str = "window",
         merge_mode: str = "cow",
         derived: dict[str, Callable[[DataFrame], DataFrame]] | None = None,
-        fused_extract: bool = False,
         dlq: bool = False,
         dlq_reason: Callable[[], object] | None = None,
     ):
@@ -77,23 +76,6 @@ class IngestPipeline:
         # NULL for valid rows, a short reason string otherwise.
         self.dlq = dlq
         self._dlq_reason = dlq_reason
-        # fused_extract=True runs the html→text extraction inside the
-        # direct writer's Python stage (ONE JVM→Python crossing:
-        # extract + parquet-encode together) instead of a Column-level
-        # pandas UDF stage. Measured A/B at 2M events: fused wins
-        # slightly at 1 core (fewer crossings) but loses ~15% at 4+
-        # cores — the separate ArrowEvalPython stage pipelines with the
-        # shuffle/write across cores, overlap the fused single stage
-        # gives up. Default is therefore the Column path; fuse only for
-        # low-parallelism/edge deployments. Byte-identity between the
-        # two paths is asserted in tests/test_extract.py.
-        # dedup_strategy="bucket_local" (single-shuffle merge) does its
-        # dedup inside the writer stage, so extraction must fuse there.
-        self._fused = (
-            (fused_extract or dedup_strategy == "bucket_local")
-            and transform is None
-            and target.write_salts <= 1
-        )
         self.transform = transform or self.default_transform
         self.dedup_strategy = dedup_strategy
         self.merge_mode = merge_mode
@@ -444,14 +426,6 @@ class IngestPipeline:
                 "hwm_by_part": folded["hwm_by_part"],
             }
 
-        if self._fused:
-            from clinvar_ingest_spark.functions.extract import (
-                coalesce_extract_arrow,
-            )
-
-            transform_kw = {"arrow_transform": coalesce_extract_arrow()}
-        else:
-            transform_kw = {"post_merge_transform": self.transform}
         try:
             with stage("batch.merge"):
                 res = self.target.merge_upsert(
@@ -462,7 +436,7 @@ class IngestPipeline:
                     dedup_strategy=self.dedup_strategy,
                     batch_stats=batch_stats,
                     merge_mode=self.merge_mode,
-                    **transform_kw,
+                    post_merge_transform=self.transform,
                 )
         finally:
             # merge failure hygiene: never leave a still-pending profile
@@ -684,46 +658,15 @@ class IngestPipeline:
 
     # ------------------------------------------------------------ audit
     def verify_lineage(self) -> dict:
-        """Audit replay determinism bookkeeping: per source partition the
-        lineage ranges must be strictly increasing and non-overlapping,
-        their max must equal the committed per-part HWM, and every
-        batch must reference a committed snapshot. Reference analog:
-        the processing_history consistency checks
-        (processing_history.py:406-427, 596-635)."""
-        rows = sorted(
-            (
-                (r["part"], r["seq_lo"], r["seq_hi"], r["batch_id"], r["snapshot_id"])
-                for r in self.lineage().collect()
-            )
-        )
-        problems = []
-        last_hi: dict[int, int] = {}
-        for part, lo, hi, batch_id, snap in rows:
-            if lo <= last_hi.get(part, -1):
-                problems.append(
-                    f"part {part}: range ({lo},{hi}] overlaps previous "
-                    f"hi={last_hi[part]} (batch {batch_id})"
-                )
-            if hi < lo:
-                problems.append(f"part {part}: inverted range ({lo},{hi}]")
-            last_hi[part] = hi
-        hwm = self.checkpoints()
-        for part, hi in last_hi.items():
-            if hwm.get(str(part)) != hi:
-                problems.append(
-                    f"part {part}: lineage max {hi} != checkpoint HWM "
-                    f"{hwm.get(str(part))}"
-                )
-        import json as _json
-
-        snaps = set()
-        for name in self.target.history():
-            with open(f"{self.target.path}/_manifests/{name}") as f:
-                snaps.add(_json.load(f)["snapshot_id"])
-        for part, lo, hi, batch_id, snap in rows:
-            if snap not in snaps:
-                problems.append(f"batch {batch_id}: snapshot {snap} missing")
-        return {"ok": not problems, "problems": problems, "n_lineage_rows": len(rows)}
+        """Full audit of replay determinism bookkeeping: per source
+        partition the lineage ranges must be strictly increasing and
+        non-overlapping, their max must equal the committed per-part
+        HWM, and every batch must reference a committed snapshot.
+        Reference analog: the processing_history consistency checks
+        (processing_history.py:406-427, 596-635). It is the incremental
+        audit run from an empty cursor, and it leaves the persisted
+        cursor untouched."""
+        return self._audit_lineage({"audited_through_batch": -1, "last_hi": {}})[0]
 
     def verify_lineage_incremental(self) -> dict:
         """O(new-batches) lineage audit (SCALE.md: "at scale it becomes
@@ -732,26 +675,40 @@ class IngestPipeline:
 
         A cursor sidecar (``_lineage/_audit_cursor.json``) records the
         highest audited batch and the per-partition hi it left each
-        partition at. Each call reads ONLY the lineage files of batches
-        past the cursor (driver-side pyarrow, same as the writer —
-        metadata-scale, no Spark job), seeds the continuity check from
-        the cursor's per-part hi, verifies the new batches' snapshots
-        are committed, and re-checks the per-part HWM equality. The
-        cursor advances only on a clean audit, so a detected problem
-        keeps being reported until repaired. At 10^5 batches this is a
-        handful of tiny reads per call instead of a full-table scan."""
+        partition at. Each call audits ONLY the batches past the
+        cursor. The cursor advances only on a clean audit, so a
+        detected problem keeps being reported until repaired. At 10^5
+        batches this is a handful of tiny reads per call instead of a
+        full-table scan."""
         import json as _json
 
-        import pyarrow.parquet as _pq
-
-        root = f"{self.target.path}/_lineage"
-        cur_path = f"{root}/_audit_cursor.json"
+        cur_path = f"{self.target.path}/_lineage/_audit_cursor.json"
         cursor = {"audited_through_batch": -1, "last_hi": {}}
         try:
             with open(cur_path) as f:
                 cursor = _json.load(f)
         except (OSError, ValueError):
             pass
+        res, advanced = self._audit_lineage(cursor)
+        if res["ok"] and res["n_new_batches"]:
+            fd, tmp = tempfile.mkstemp(dir=self.target.path)
+            with os.fdopen(fd, "w") as f:
+                _json.dump(advanced, f)
+            os.replace(tmp, cur_path)
+        return res
+
+    def _audit_lineage(self, cursor: dict) -> tuple[dict, dict]:
+        """Audit the lineage batches past ``cursor``: read their files
+        (driver-side pyarrow, same as the writer — metadata-scale, no
+        Spark job), seed the continuity check from the cursor's per-part
+        hi, verify the batches' snapshots are committed, and re-check
+        the per-part HWM equality. Returns the verdict and the cursor a
+        clean audit advances to."""
+        import json as _json
+
+        import pyarrow.parquet as _pq
+
+        root = f"{self.target.path}/_lineage"
         done = int(cursor["audited_through_batch"])
         last_hi = {int(k): int(v) for k, v in cursor["last_hi"].items()}
 
@@ -796,24 +753,17 @@ class IngestPipeline:
                     f"part {part}: lineage max {hi} != checkpoint HWM "
                     f"{hwm.get(str(part))}"
                 )
-        ok = not problems
-        if ok and new_bids:
-            fd, tmp = tempfile.mkstemp(dir=self.target.path)
-            with os.fdopen(fd, "w") as f:
-                _json.dump(
-                    {
-                        "audited_through_batch": new_bids[-1],
-                        "last_hi": {str(k): v for k, v in last_hi.items()},
-                    },
-                    f,
-                )
-            os.replace(tmp, cur_path)
-        return {
-            "ok": ok,
+        report = {
+            "ok": not problems,
             "problems": problems,
             "n_new_batches": len(new_bids),
             "n_lineage_rows": n_rows,
         }
+        advanced = {
+            "audited_through_batch": new_bids[-1] if new_bids else done,
+            "last_hi": {str(k): v for k, v in last_hi.items()},
+        }
+        return report, advanced
 
     # ------------------------------------------------------------ reads
     def current_state(self) -> DataFrame:

@@ -26,6 +26,7 @@ on plain Parquet + JSON manifests:
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import os
@@ -216,16 +217,11 @@ class SnapshotTable:
         path: str,
         key_col: str = "url",
         n_buckets: int = 64,
-        write_salts: int = 1,
     ):
         self.spark = spark
         self.path = path
         self.key_col = key_col
         self.n_buckets = n_buckets
-        # >1 → several files per bucket per commit (write parallelism for
-        # buckets larger than one task's worth; target-file-size analog).
-        # compact() later merges them back to one file per bucket.
-        self.write_salts = write_salts
 
     # ------------------------------------------------------------------ meta
     def _ptr_path(self) -> str:
@@ -2052,7 +2048,6 @@ class SnapshotTable:
                 dst_path,
                 key_col=self.key_col,
                 n_buckets=int(m.get("n_buckets", self.n_buckets)),
-                write_salts=self.write_salts,
             )
             if clone.exists():
                 raise ValueError(f"table {dst_path} already exists")
@@ -2246,73 +2241,28 @@ class SnapshotTable:
         return self
 
     def _write_buckets(
-        self, df: DataFrame, snapshot_hint: int, arrow_transform=None,
+        self, df: DataFrame, snapshot_hint: int,
         sort_by: list[str] | None = None,
     ) -> dict[int, list[str]]:
         """Write df (already carrying BUCKET_COL) as one file per bucket.
 
-        Default path is a DIRECT write, the Iceberg-writer shape: tasks
-        stream Arrow batches into per-bucket pyarrow ParquetWriters at
-        their FINAL paths (unique uuid names) and return (bucket, path)
-        rows; there is no ``_temporary`` staging, no task/job commit
-        renames, no output-dir listing. Visibility is controlled by the
-        manifest commit alone — a crashed or speculatively-retried task
-        leaves an orphan file that no manifest references (GC'd by
+        A DIRECT write, the Iceberg-writer shape: the explicit
+        repartition on BUCKET_COL puts a bucket wholly in one task,
+        which streams its Arrow batches inside ``mapInArrow`` into
+        per-bucket pyarrow ParquetWriters at their FINAL paths (unique
+        uuid names) and returns (bucket, path, n_rows) rows; there is
+        no ``_temporary`` staging, no task/job commit renames, no
+        output-dir listing. Visibility is controlled by the manifest
+        commit alone — a crashed or speculatively-retried task leaves
+        an orphan file that no manifest references (GC'd by
         maintenance), exactly Iceberg's contract. Measured: the Hadoop
         committer costs ~2s per 64-dir partitioned write regardless of
         data volume — pure serial driver/rename overhead that sits on
         every batch's Amdahl floor; the direct write cuts it to ~1s.
-
-        ``write_salts > 1`` keeps the Hive-layout ``partitionBy`` path
-        (one file per (bucket, salt) via the writer's own clustering).
         """
         out_dir = os.path.join(
             self.path, _DATA, f"s{snapshot_hint:08d}-{uuid.uuid4().hex[:8]}"
         )
-        if self.write_salts <= 1:
-            return self._write_buckets_direct(
-                df, out_dir, arrow_transform, sort_by
-            )
-        if sort_by:
-            raise ValueError("sort_by requires the direct writer (write_salts=1)")
-        if arrow_transform is not None:
-            raise ValueError(
-                "arrow_transform requires the direct writer (write_salts=1)"
-            )
-        df = df.withColumn("_pb", F.col(BUCKET_COL))
-        part_by = ["_pb"]
-        if self.write_salts > 1:
-            # the salt is a real output partition (_pb=X/_ps=Y/): the
-            # writer's own clustering then guarantees one file per
-            # (bucket, salt) — V1 planned-write re-plans any manual
-            # repartition to cluster by the partition columns, so a
-            # salt that is not a partition column gets collapsed.
-            df = df.withColumn(
-                "_ps", F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(self.write_salts))
-            )
-            part_by.append("_ps")
-        else:
-            df = df.repartition(F.col(BUCKET_COL))
-        df.write.partitionBy(*part_by).mode("overwrite").parquet(out_dir)
-        buckets: dict[int, list[str]] = {}
-        for root, _dirs, files in os.walk(out_dir):
-            pbs = [seg for seg in root.split(os.sep) if seg.startswith("_pb=")]
-            if not pbs:
-                continue
-            b = int(pbs[0].split("=")[1])
-            for f in files:
-                if f.endswith(".parquet"):
-                    buckets.setdefault(b, []).append(os.path.join(root, f))
-        return {b: sorted(fs) for b, fs in buckets.items()}
-
-    def _write_buckets_direct(
-        self, df: DataFrame, out_dir: str, arrow_transform=None,
-        sort_by: list[str] | None = None,
-    ) -> dict[int, list[str]]:
-        """Direct per-bucket parquet write inside ``mapInArrow``: each
-        task opens one ParquetWriter per bucket it holds (the explicit
-        repartition on BUCKET_COL puts a bucket wholly in one task) and
-        streams its Arrow batches straight to the final file."""
         os.makedirs(out_dir, exist_ok=True)
 
         def _write(batches):
@@ -2325,11 +2275,6 @@ class SnapshotTable:
             n_rows_by_bucket: dict[int, int] = {}
             for batch in batches:
                 tbl = pa.Table.from_batches([batch])
-                if arrow_transform is not None:
-                    # fused row transform (e.g. html→text extraction):
-                    # runs HERE so the data crosses into Python exactly
-                    # once — transform + parquet-encode in one stage
-                    tbl = arrow_transform(tbl)
                 for b in pc.unique(tbl[BUCKET_COL]).to_pylist():
                     sub = tbl.filter(pc.equal(tbl[BUCKET_COL], b))
                     if b not in writers:
@@ -2384,97 +2329,6 @@ class SnapshotTable:
             # seed the commit-time row-count map: the writer already
             # knows every new file's row count, so the commit never
             # re-opens footers it just wrote
-            _file_rows_put(r["path"], int(r["n_rows"]))
-        return {b: sorted(fs) for b, fs in buckets.items()}
-
-    def _merge_write_bucket_local(
-        self,
-        df: DataFrame,
-        out_dir: str,
-        order_cols: list[str],
-        op_col: str,
-        delete_op: str,
-        arrow_transform,
-        data_cols: list[str],
-    ) -> dict[int, list[str]]:
-        """Fused partition-local merge writer: per shuffle partition,
-        concat the Arrow batches, sort by (key, *order_cols) ascending
-        with nulls FIRST (matching the window path's DESC-nulls-last:
-        a NULL version column always loses), keep the last row per key
-        (the LWW winner), convert ``op`` to the tombstone flag, apply
-        the writer-stage transform (extraction), and stream per-bucket
-        parquet files at final paths.
-
-        Memory: one partition = one-or-few buckets resident as a single
-        Arrow table — bucket sizing (n_buckets vs total rows) is the
-        knob that keeps this inside executor memory at scale, the same
-        knob that sizes CoW rewrite units. Only the KEY column is ever
-        materialized to pandas (run-boundary detection); payload bytes
-        stay in Arrow until the parquet encoder."""
-        key = self.key_col
-        os.makedirs(out_dir, exist_ok=True)
-
-        def _proc(batches):
-            import numpy as np
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            parts = [pa.Table.from_batches([b]) for b in batches]
-            if not parts:
-                return
-            tbl = pa.concat_tables(parts)
-            if tbl.num_rows == 0:
-                return
-            tbl = tbl.sort_by(
-                [(key, "ascending")] + [(c, "ascending") for c in order_cols],
-                null_placement="at_start",
-            )
-            k = tbl[key].to_pandas()
-            last_of_run = np.flatnonzero(k.ne(k.shift(-1)).values)
-            tbl = tbl.take(last_of_run)
-            deleted = pc.equal(tbl[op_col], delete_op)
-            tbl = tbl.drop_columns([op_col]).append_column(
-                pa.field(DELETED_COL, pa.bool_()), pc.fill_null(deleted, False)
-            )
-            if arrow_transform is not None:
-                tbl = arrow_transform(tbl)
-            writers: dict[int, Any] = {}
-            paths: dict[int, str] = {}
-            n_rows_of: dict[int, int] = {}
-            for b in pc.unique(tbl[BUCKET_COL]).to_pylist():
-                sub = tbl.filter(pc.equal(tbl[BUCKET_COL], b))
-                p = os.path.join(
-                    out_dir, f"b{b:05d}-{uuid.uuid4().hex[:8]}.parquet"
-                )
-                paths[b] = p
-                n_rows_of[b] = sub.num_rows
-                w = pq.ParquetWriter(p, sub.schema, compression="snappy")
-                w.write_table(sub)
-                w.close()
-            out_schema = pa.schema([
-                ("bucket", pa.int32()), ("path", pa.string()),
-                ("n_rows", pa.int64()),
-            ])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(sorted(paths), type=pa.int32()),
-                    pa.array([paths[b] for b in sorted(paths)], type=pa.string()),
-                    pa.array(
-                        [n_rows_of[b] for b in sorted(paths)], type=pa.int64()
-                    ),
-                ],
-                schema=out_schema,
-            )
-
-        rows = (
-            df.repartition(F.col(BUCKET_COL))
-            .mapInArrow(_proc, "bucket int, path string, n_rows long")
-            .collect()
-        )
-        buckets: dict[int, list[str]] = {}
-        for r in rows:
-            buckets.setdefault(int(r["bucket"]), []).append(r["path"])
             _file_rows_put(r["path"], int(r["n_rows"]))
         return {b: sorted(fs) for b, fs in buckets.items()}
 
@@ -2597,7 +2451,6 @@ class SnapshotTable:
         properties: dict[str, Any] | None = None,
         dedup_strategy: str = "window",
         post_merge_transform=None,
-        arrow_transform=None,
         batch_stats: dict[str, Any] | None = None,
         merge_mode: str = "cow",
         stage_ref: str | None = None,
@@ -2611,28 +2464,33 @@ class SnapshotTable:
             WHEN MATCHED AND s is newer      THEN UPDATE SET *
             WHEN NOT MATCHED AND s.op != 'delete' THEN INSERT *
 
-        Physical plan (two exchanges total, measured fastest of the
-        candidate shapes — see BENCH.md):
+        Physical plan (measured fastest of the candidate shapes — see
+        BENCH.md):
 
-        1. union {batch ∪ touched-target-buckets} — target rows carry
-           their stored version, tombstones included, so LWW across
-           batches is correct and a *stale* replayed batch is a no-op
-           (idempotent re-apply = exactly-once under retry);
-        2. ONE explicit ``repartition(P, key)`` (a numbered repartition
-           is exempt from AQE coalescing, keeping the downstream Arrow
-           UDF stage wide) feeding a window row_number top-1 per key —
-           the window reuses the repartition's hash partitioning, no
-           second exchange;
+        1. source = the batch (MoR) or {batch ∪ touched-target-buckets}
+           (CoW) — target rows carry their stored version, tombstones
+           included, so LWW across batches is correct and a *stale*
+           replayed batch is a no-op (idempotent re-apply =
+           exactly-once under retry);
+        2. ``lww_dedup`` top-1 per key. The window strategy adds NO
+           explicit repartition: the Window's required distribution
+           inserts the one hash exchange, and Spark plants a PARTIAL
+           WindowGroupLimit below it, so duplicate versions are dropped
+           map-side (tests/test_plans.py guards this shape). Row
+           lineage keeps one explicit ``repartition(P, key)`` that its
+           window aggregates share;
         3. ``post_merge_transform`` (e.g. ``text = coalesce(text,
            extract(html))``) runs inline on FINAL winners only — a batch
            row that loses to the stored state is never extracted;
         4. bucket-partitioned write of only the touched buckets
-           (manifest pruning = Iceberg partition-level copy-on-write).
+           (manifest pruning = Iceberg partition-level copy-on-write),
+           then the shared commit tail :meth:`_commit_files`.
 
-        ``dedup_strategy``: "window" (default; explicit wide partitioning),
-        "salted_window" or "max_by" (skew-proof variants; aggregates get
-        map-side partial combine so hot keys pre-reduce per input
-        partition).
+        ``dedup_strategy``: "window" (default), "salted_window" or
+        "max_by" (skew-proof variants; aggregates get map-side partial
+        combine so hot keys pre-reduce per input partition; their
+        winners are repartitioned to 2x defaultParallelism so the
+        downstream Arrow stage stays wide).
 
         ``merge_mode``: "cow" (above — touched buckets rewritten, reads
         stay plain scans) or "mor" (merge-on-read — batch winners are
@@ -2710,7 +2568,6 @@ class SnapshotTable:
         # aggregate (bucket, op only — no payload, no UDF), or the
         # caller's precomputed stats (the pipeline folds this into its
         # lineage job so a batch costs exactly two Spark jobs)
-        deferred = False
         if batch_stats is None:
             stat_rows = (
                 batch.groupBy(BUCKET_COL)
@@ -2720,223 +2577,79 @@ class SnapshotTable:
                 )
                 .collect()
             )
-            touched = sorted(int(r[BUCKET_COL]) for r in stat_rows)
-            n_up = sum(int(r["u"] or 0) for r in stat_rows)
-            n_del = sum(int(r["d"] or 0) for r in stat_rows)
-        elif batch_stats["touched"] is None:
-            # caller defers stats (bootstrap overlap: the profile job
-            # runs concurrently with this merge): touched is derived
-            # below from the writer's own output — exact when the
-            # target holds no data files, because every bucket the
-            # merge writes IS a touched bucket and there is nothing
-            # stored to prune. The un-pruned target read is free on an
-            # empty manifest. The event counts below are the caller's
-            # PLACEHOLDERS — the properties() callable resolves the
-            # real stats and writes them back into batch_stats, so they
-            # are re-read after that call (deferred=True) to keep the
-            # CommitResult contract identical across both stats modes.
-            deferred = True
-            touched = None
-            n_up = int(batch_stats["n_upserts"])
-            n_del = int(batch_stats["n_deletes"])
-        else:
-            touched = sorted(int(b) for b in batch_stats["touched"])
-            n_up = int(batch_stats["n_upserts"])
-            n_del = int(batch_stats["n_deletes"])
-        # --- merge-on-read: append batch winners as deltas, no rewrite
-        if merge_mode == "mor":
-            par = self.spark.sparkContext.defaultParallelism * 2
-            # window strategy: NO explicit repartition — letting the
-            # Window's own required distribution insert the exchange
-            # makes Spark plant a PARTIAL WindowGroupLimit below it
-            # (map-side top-1 per key before the shuffle), so duplicate
-            # versions of a key — hot keys especially — are dropped on
-            # the map side and never cross the wire (guide §2.3
-            # "aggregate before you shuffle"; measured 2.76→2.24 s on
-            # the 2M-event dedup at local[32], plan shows
-            # WindowGroupLimit Partial+Final vs Final-only before). An
-            # explicit repartition satisfied the distribution early and
-            # suppressed the partial. AQE's parallelismFirst keeps the
-            # post-shuffle Arrow stage at defaultParallelism width.
-            winners = lww_dedup(
-                batch.select(*data_cols, op_col),
-                key_cols=(self.key_col,),
-                order_cols=list(order_cols),
-                strategy=dedup_strategy,
-            )
-            if dedup_strategy != "window":
-                winners = winners.repartition(par)
-            survivors = winners.withColumn(
-                DELETED_COL, F.col(op_col) == F.lit(delete_op)
-            ).drop(op_col)
-            if post_merge_transform is not None:
-                survivors = post_merge_transform(survivors)
-                for f in survivors.schema.fields:
-                    if f.name not in data_cols and f.name != DELETED_COL:
-                        data_cols.append(f.name)
-            evolved = T.StructType(
-                [f for f in target_schema.fields if f.name != DELETED_COL]
-                + [f for f in survivors.schema.fields
-                   if f.name not in target_schema.names and f.name != DELETED_COL]
-                + [T.StructField(DELETED_COL, T.BooleanType())]
-            )
-            with _stage("merge.write"):
-                new_files = self._write_buckets(
-                    survivors.select(*data_cols, DELETED_COL),
-                    m["snapshot_id"] + 1,
-                    arrow_transform=arrow_transform,
-                )
-            buckets = {int(b): list(f) for b, f in m["buckets"].items()}
-            for b, files in new_files.items():
-                buckets.setdefault(b, [])
-                buckets[b] = buckets[b] + files  # APPEND, never replace
-            if touched is None:
-                touched = sorted(new_files.keys())
-            props = dict(m.get("properties", {}))
-            props.update(
-                properties() if callable(properties) else (properties or {})
-            )
-            if deferred:
-                n_up = int(batch_stats["n_upserts"])
-                n_del = int(batch_stats["n_deletes"])
-            with _stage("merge.footer_stats"):
-                n_after = _footer_rows(
-                    [f for fs in buckets.values() for f in fs]
-                )
-            with _stage("merge.commit"):
-                sid, mp = self._commit(
-                    buckets, evolved, props, m["snapshot_id"],
-                    {"n_rows_raw": n_after},
-                    read_mode="lww", order_cols=list(order_cols),
-                    parent_name=m["_name"], stage_ref=stage_ref,
-                )
-            return CommitResult(sid, mp, touched, n_up, n_del, n_after, props)
+            batch_stats = {
+                "touched": [r[BUCKET_COL] for r in stat_rows],
+                "n_upserts": sum(int(r["u"] or 0) for r in stat_rows),
+                "n_deletes": sum(int(r["d"] or 0) for r in stat_rows),
+            }
+        # touched=None: the caller defers stats (bootstrap overlap: the
+        # profile job runs concurrently with this merge). touched is
+        # then derived from the writer's own output — exact when the
+        # target holds no data files, because every bucket the merge
+        # writes IS a touched bucket and there is nothing stored to
+        # prune. The un-pruned target read is free on an empty
+        # manifest. The event counts are the caller's PLACEHOLDERS
+        # until its properties() callable writes the real ones back
+        # into batch_stats; _commit_files reads them after that call.
+        touched = batch_stats["touched"]
+        if touched is not None:
+            touched = sorted(int(b) for b in touched)
 
-        # Tombstones MUST take part in the merge: a late out-of-order
-        # older update loses LWW against a stored delete and stays dead.
-        # On a merge-on-read table the target is read UNRESOLVED
-        # (resolve=False): the merge's own LWW over {target ∪ batch}
-        # subsumes the read-time resolve — one window, not two — and
-        # still folds the touched buckets' deltas into the rewrite.
-        pruned_target = self.read(
-            buckets=touched, snapshot=m, include_deleted=True, resolve=False
-        )
-        for f in new_fields:
+        mor = merge_mode == "mor"
+        source = batch.select(*data_cols, op_col)
+        if not mor:
+            # Tombstones MUST take part in the merge: a late out-of-order
+            # older update loses LWW against a stored delete and stays
+            # dead. On a merge-on-read table the target is read
+            # UNRESOLVED (resolve=False): the merge's own LWW over
+            # {target ∪ batch} subsumes the read-time resolve — one
+            # window, not two — and still folds the touched buckets'
+            # deltas into the rewrite. MoR skips the target entirely:
+            # batch winners are appended and reads resolve versions.
+            pruned_target = self.read(
+                buckets=touched, snapshot=m, include_deleted=True, resolve=False
+            )
+            for f in new_fields:
+                pruned_target = pruned_target.withColumn(
+                    f.name, F.lit(None).cast(f.dataType)
+                )
             pruned_target = pruned_target.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-        pruned_target = pruned_target.withColumn(
-            op_col,
-            F.when(
-                F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit(delete_op)
-            ).otherwise(F.lit("existing")),
-        ).select(*data_cols, op_col)
+                op_col,
+                F.when(
+                    F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit(delete_op)
+                ).otherwise(F.lit("existing")),
+            ).select(*data_cols, op_col)
+            if lineage:
+                # source marker: the lineage aggregates must tell the
+                # stored row (and its mark/_row_id) apart from batch events
+                pruned_target = pruned_target.withColumn("_li_src", F.lit("t"))
+                source = source.withColumn("_li_src", F.lit("b"))
+            source = pruned_target.unionByName(source)
 
-        bat_side = batch.select(*data_cols, op_col)
+        par = self.spark.sparkContext.defaultParallelism * 2
         if lineage:
-            # source marker: the lineage aggregates must tell the stored
-            # row (and its mark/_row_id) apart from batch events
-            pruned_target = pruned_target.withColumn("_li_src", F.lit("t"))
-            bat_side = bat_side.withColumn("_li_src", F.lit("b"))
-        everything = pruned_target.unionByName(bat_side)
-
-        if dedup_strategy == "bucket_local":
-            # SINGLE-SHUFFLE merge: bucket = f(key), so hash-partitioning
-            # on the bucket co-locates every version of a key; the LWW
-            # dedup is then PARTITION-LOCAL and runs inside the writer's
-            # Arrow stage together with extraction and parquet encode —
-            # one exchange total (vs repartition(key) + window + write
-            # repartition(bucket) = two), no Window node at all.
-            #
-            # Measured A/B vs the window plan (2M events, interleaved
-            # attempts): LOSES at every parallelism level — 0.75-0.9x at
-            # 1-4 cores, 0.3x at 32 — because each partition becomes ONE
-            # single-threaded Python unit (concat + sort + extract +
-            # encode) while the window plan streams Arrow batches through
-            # a Tungsten sort and pipelines the extract stage with the
-            # shuffle across cores. Kept as the shuffle-minimal variant
-            # for when the exchange, not compute, dominates (very wide
-            # rows, cheap/no transform, network-bound clusters); the
-            # default remains "window".
-            if post_merge_transform is not None:
-                raise ValueError(
-                    "bucket_local takes arrow_transform (writer-stage), "
-                    "not a Column-level post_merge_transform"
-                )
-            evolved = T.StructType(
-                [f for f in target_schema.fields if f.name != DELETED_COL]
-                + [T.StructField(f.name, f.dataType) for f in new_fields]
-                + [T.StructField(DELETED_COL, T.BooleanType())]
+            # lineage aggregates share the key partitioning across
+            # several window specs — keep the one explicit exchange
+            source = self._lineage_cols(
+                source.repartition(par, F.col(self.key_col)),
+                list(order_cols), op_col, delete_op,
             )
-            out_dir = os.path.join(
-                self.path, _DATA,
-                f"s{m['snapshot_id'] + 1:08d}-{uuid.uuid4().hex[:8]}",
-            )
-            new_bucket_files = (
-                self._merge_write_bucket_local(
-                    everything.select(*data_cols, op_col), out_dir,
-                    list(order_cols), op_col, delete_op, arrow_transform,
-                    data_cols,
-                )
-                if (touched is None or touched)
-                else {}
-            )
-            if touched is None:
-                touched = sorted(new_bucket_files.keys())
-            buckets = {int(b): f for b, f in m["buckets"].items()}
-            for b in touched:
-                buckets[b] = new_bucket_files.get(b, [])
-            buckets = {b: f for b, f in buckets.items() if f}
-            n_after = _footer_rows([f for fs in buckets.values() for f in fs])
-            props = dict(m.get("properties", {}))
-            props.update(
-                properties() if callable(properties) else (properties or {})
-            )
-            if deferred:
-                n_up = int(batch_stats["n_upserts"])
-                n_del = int(batch_stats["n_deletes"])
-            sid, mp = self._commit(
-                buckets, evolved, props, m["snapshot_id"], {"n_rows": n_after},
-                read_mode=m.get("read_mode", "plain"),
-                order_cols=m.get("order_cols"),
-                parent_name=m["_name"], stage_ref=stage_ref,
-            )
-            return CommitResult(sid, mp, touched, n_up, n_del, n_after, props)
-
-        if dedup_strategy == "window":
-            par = self.spark.sparkContext.defaultParallelism * 2
-            if lineage:
-                # lineage aggregates share the key partitioning across
-                # several window specs — keep the one explicit exchange
-                wide = everything.repartition(par, F.col(self.key_col))
-                wide = self._lineage_cols(wide, list(order_cols), op_col, delete_op)
-            else:
-                # NO explicit repartition: the Window's required
-                # distribution inserts the exchange itself, and Spark
-                # then plants a PARTIAL WindowGroupLimit below it —
-                # map-side top-1 per key, so duplicate versions (hot
-                # keys especially) are dropped before the shuffle
-                # (guide §2.3; measured 2.76→2.24 s on the 2M-event
-                # dedup at local[32]; plan: WindowGroupLimit
-                # Partial+Final vs Final-only). AQE parallelismFirst
-                # keeps the post-shuffle Arrow stage wide.
-                wide = everything
-            merged = lww_dedup(
-                wide,
-                key_cols=(self.key_col,),
-                order_cols=list(order_cols),
-                strategy="window",
-            )
-            if lineage:
-                merged = self._assign_row_ids(merged, list(order_cols), op_col, delete_op)
-        else:
-            par = self.spark.sparkContext.defaultParallelism * 2
-            merged = lww_dedup(
-                everything,
-                key_cols=(self.key_col,),
-                order_cols=list(order_cols),
-                strategy=dedup_strategy,
-            ).repartition(par)
+        # window strategy: NO explicit repartition (docstring step 2) —
+        # one would satisfy the Window's distribution early and suppress
+        # the map-side PARTIAL WindowGroupLimit (guide §2.3 "aggregate
+        # before you shuffle"; measured 2.76→2.24 s on the 2M-event
+        # dedup at local[32]). AQE's parallelismFirst keeps the
+        # post-shuffle Arrow stage at defaultParallelism width.
+        merged = lww_dedup(
+            source,
+            key_cols=(self.key_col,),
+            order_cols=list(order_cols),
+            strategy=dedup_strategy,
+        )
+        if lineage:
+            merged = self._assign_row_ids(merged, list(order_cols), op_col, delete_op)
+        elif dedup_strategy != "window":
+            merged = merged.repartition(par)
 
         survivors = merged.withColumn(
             DELETED_COL, F.col(op_col) == F.lit(delete_op)
@@ -2954,54 +2667,97 @@ class SnapshotTable:
                if f.name not in target_schema.names and f.name != DELETED_COL]
             + [T.StructField(DELETED_COL, T.BooleanType())]
         )
-
-        # --- rewrite only touched buckets --------------------------------
-        out_cols = data_cols + [DELETED_COL]
         with _stage("merge.write"):
-            new_bucket_files = (
+            new_files = (
                 self._write_buckets(
-                    survivors.select(*out_cols), m["snapshot_id"] + 1,
-                    arrow_transform=arrow_transform,
+                    survivors.select(*data_cols, DELETED_COL),
+                    m["snapshot_id"] + 1,
                 )
                 if (touched is None or touched)
                 else {}
             )
-        if touched is None:  # deferred stats: writer output IS the set
-            touched = sorted(new_bucket_files.keys())
-        buckets = {int(b): f for b, f in m["buckets"].items()}
-        for b in touched:
-            buckets[b] = new_bucket_files.get(b, [])  # bucket may be emptied
-        buckets = {b: f for b, f in buckets.items() if f}
+        # the CoW/MoR differences are data: MoR APPENDS its deltas,
+        # counts raw (multi-version) rows and switches reads to the LWW
+        # resolve under its order columns; CoW REPLACES the touched
+        # buckets and keeps the parent's read mode — sticky, because a
+        # CoW batch on a MoR table resolves only the touched buckets,
+        # the rest may still be multi-version
+        return self._commit_files(
+            m, new_files,
+            sorted(new_files) if touched is None else touched,
+            append=mor,
+            schema=evolved,
+            properties=properties,
+            stats_key="n_rows_raw" if mor else "n_rows",
+            read_mode="lww" if mor else None,
+            order_cols=list(order_cols) if mor else None,
+            batch_stats=batch_stats,
+            stage_ref=stage_ref,
+        )
 
-        # row stats from parquet footers (Iceberg file-stats analog —
-        # no recompute of the merged plan)
+    def _commit_files(
+        self,
+        m: dict[str, Any],
+        new_files: dict[int, list[str]],
+        touched: list[int],
+        *,
+        append: bool = False,
+        schema: T.StructType | None = None,
+        properties=None,
+        stats_key: str = "n_rows",
+        read_mode: str | None = None,
+        order_cols: list[str] | None = None,
+        batch_stats: dict[str, Any] | None = None,
+        stage_ref: str | None = None,
+        schema_evolution: dict[str, Any] | None = None,
+    ) -> CommitResult:
+        """The one write→commit tail: fold ``new_files`` into the
+        parent manifest ``m``'s bucket map, count rows from parquet
+        footers (Iceberg file-stats analog — no recompute of the
+        written plan), resolve ``properties`` and CAS-commit.
+
+        ``append=False`` (copy-on-write): the new files REPLACE the
+        file lists of the ``touched`` buckets, and a touched bucket
+        left without files is dropped. ``append=True`` (merge-on-read):
+        the new files are added to their buckets, nothing is replaced.
+
+        ``properties`` may be a callable, evaluated just before the
+        atomic commit — callers overlap side computations with the
+        write while still committing their state atomically. The
+        event counts in ``batch_stats`` are read AFTER that call, so a
+        callable that resolves deferred stats reports true counts.
+        ``schema``, ``read_mode`` and ``order_cols`` default to the
+        parent's."""
+        buckets = {int(b): list(f) for b, f in m["buckets"].items()}
+        if append:
+            for b, fs in new_files.items():
+                buckets[b] = buckets.get(b, []) + fs
+        else:
+            for b in touched:
+                buckets[b] = new_files.get(b, [])
+            buckets = {b: f for b, f in buckets.items() if f}
         with _stage("merge.footer_stats"):
-            n_after = _footer_rows(
-                [f for fs in buckets.values() for f in fs]
-            )
-
+            n_after = _footer_rows([f for fs in buckets.values() for f in fs])
         props = dict(m.get("properties", {}))
-        # properties may be a callable (evaluated now, just before the
-        # atomic commit — lets callers overlap side computations with
-        # the merge while still committing their state atomically)
         props.update(properties() if callable(properties) else (properties or {}))
-        if deferred:
+        n_up = n_del = 0
+        if batch_stats is not None:
             n_up = int(batch_stats["n_upserts"])
             n_del = int(batch_stats["n_deletes"])
         with _stage("merge.commit"):
             sid, mp = self._commit(
                 buckets,
-                evolved,
+                schema or T.StructType.fromJson(m["schema"]),
                 props,
                 m["snapshot_id"],
-                {"n_rows": n_after},
-                # sticky: a CoW batch on a MoR table resolves only the
-                # touched buckets, the rest may still be multi-version
-                read_mode=m.get("read_mode", "plain"),
-                order_cols=m.get("order_cols"),
-                parent_name=m["_name"], stage_ref=stage_ref,
+                {stats_key: n_after},
+                read_mode=read_mode or m.get("read_mode", "plain"),
+                order_cols=order_cols or m.get("order_cols"),
+                parent_name=m["_name"],
+                schema_evolution=schema_evolution,
+                stage_ref=stage_ref,
             )
-        return CommitResult(sid, mp, touched, n_up, n_del, n_after, props)
+        return CommitResult(sid, mp, list(touched), n_up, n_del, n_after, props)
 
     def merge_upsert_retrying(
         self, batch: DataFrame, retries: int = 3, **kwargs
@@ -3069,51 +2825,19 @@ class SnapshotTable:
                 # commit so downstream snapshot-mode-gated paths
                 # (column-stats pruning, range_scan) work without a
                 # rewrite.
-                buckets = {int(b): list(f) for b, f in m["buckets"].items()}
-                n = _footer_rows(
-                    [f for fs in buckets.values() for f in fs]
-                )
-                sid, mp = self._commit(
-                    buckets, T.StructType.fromJson(m["schema"]),
-                    dict(m.get("properties", {})), m["snapshot_id"],
-                    {"n_rows": n}, read_mode="plain",
-                    order_cols=m.get("order_cols"),
-                    parent_name=m["_name"],
-                )
-                return CommitResult(
-                    sid, mp, [], 0, 0, n, m.get("properties", {})
-                )
+                return self._commit_files(m, {}, [], read_mode="plain")
             return None
         df = self.read(buckets=fat, snapshot=m, include_deleted=True)
-        # compaction writes unsalted: one file per bucket is the goal
-        salts, self.write_salts = self.write_salts, 1
-        try:
-            new_files = self._write_buckets(
-                df, m["snapshot_id"] + 1, sort_by=sort_by
-            )
-        finally:
-            self.write_salts = salts
-        buckets = {int(b): f for b, f in m["buckets"].items()}
-        for b in fat:
-            buckets[b] = new_files.get(b, [])
-        buckets = {b: f for b, f in buckets.items() if f}
-        n = _footer_rows([f for fs in buckets.values() for f in fs])
+        new_files = self._write_buckets(df, m["snapshot_id"] + 1, sort_by=sort_by)
         # MoR resolution: read() LWW-resolved the fat buckets before the
         # rewrite; single-file buckets hold one version per key by
         # construction (each delta file is one batch's deduped winners),
         # so full compaction returns the table to plain-scan reads.
-        if max_files_per_bucket == 1:
-            read_mode = "plain"
-        else:
-            read_mode = m.get("read_mode", "plain")
-        sid, mp = self._commit(
-            buckets, T.StructType.fromJson(m["schema"]),
-            dict(m.get("properties", {})), m["snapshot_id"], {"n_rows": n},
-            read_mode=read_mode, order_cols=m.get("order_cols"),
-            parent_name=m["_name"],
+        return self._commit_files(
+            m, new_files, fat,
+            read_mode="plain" if max_files_per_bucket == 1 else None,
             schema_evolution={"delete_files": []} if dels else None,
         )
-        return CommitResult(sid, mp, fat, 0, 0, n, m.get("properties", {}))
 
     def delete_where(self, predicate, mode: str = "cow") -> CommitResult | None:
         """Row-level DELETE (Iceberg DELETE analog): drop live rows
@@ -3315,22 +3039,15 @@ class SnapshotTable:
         dels = list(m.get("delete_files", [])) + [
             {"path": p, "sid": sid_next} for p in dpaths
         ]
-        buckets = {int(b): list(f) for b, f in m["buckets"].items()}
-        for b, fs in new_files.items():
-            buckets.setdefault(b, [])
-            buckets[b] = buckets[b] + fs  # APPEND, never replace
-        sid, mp = self._commit(
-            buckets, target_schema, dict(m.get("properties", {})),
-            m["snapshot_id"],
-            {"n_rows": _footer_rows([f for fs in buckets.values() for f in fs])},
-            read_mode=m.get("read_mode", "plain"),
-            order_cols=m.get("order_cols"), parent_name=m["_name"],
+        res = self._commit_files(
+            m, new_files, sorted(new_files), append=True,
             schema_evolution={"delete_files": dels},
         )
-        return CommitResult(
-            sid, mp, sorted(new_files), n_updated, 0,
-            int(m.get("stats", {}).get("n_rows", -1)),
-            m.get("properties", {}),
+        # the update changes no key's liveness: report the parent's
+        # live-row count, not the raw (pre-anti-join) footer count
+        return dataclasses.replace(
+            res, n_upserts=n_updated,
+            n_rows_after=int(m.get("stats", {}).get("n_rows", -1)),
         )
 
     # -- CHECK constraints (Delta ADD CONSTRAINT analog) ---------------
@@ -3544,26 +3261,14 @@ class SnapshotTable:
     def _rewrite_buckets(self, m, touched, df) -> CommitResult:
         """CoW-rewrite ``touched`` buckets with ``df``'s rows (which
         must already carry BUCKET_COL and DELETED_COL), commit via CAS."""
-        target_schema = T.StructType.fromJson(m["schema"])
         out_cols = [
-            f.name for f in target_schema.fields if f.name != BUCKET_COL
+            f.name for f in T.StructType.fromJson(m["schema"]).fields
+            if f.name != BUCKET_COL
         ]
         new_files = self._write_buckets(
             df.select(*out_cols, BUCKET_COL), m["snapshot_id"] + 1
         )
-        buckets = {int(b): f for b, f in m["buckets"].items()}
-        for b in touched:
-            buckets[b] = new_files.get(b, [])
-        buckets = {b: f for b, f in buckets.items() if f}
-        n = _footer_rows([f for fs in buckets.values() for f in fs])
-        sid, mp = self._commit(
-            buckets, target_schema, dict(m.get("properties", {})),
-            m["snapshot_id"], {"n_rows": n},
-            read_mode=m.get("read_mode", "plain"),
-            order_cols=m.get("order_cols"),
-            parent_name=m["_name"],
-        )
-        return CommitResult(sid, mp, list(touched), 0, 0, n, m.get("properties", {}))
+        return self._commit_files(m, new_files, touched)
 
     def vacuum_tombstones(self, watermark_ts, ts_col: str = "warc_ts") -> CommitResult:
         """GC tombstones older than a watermark.

@@ -64,19 +64,19 @@ def test_changes_between_insert_update_delete(spark, tmp_table_dir):
 def test_changes_between_skips_rewritten_but_identical_rows(spark, tmp_table_dir):
     """A compaction (or a co-resident key's rewrite) changes a bucket's
     file list without changing rows — those rows must not show up."""
-    t = SnapshotTable(
-        spark, tmp_table_dir, "url", n_buckets=1, write_salts=2
-    ).create(SCHEMA)
-    t.merge_upsert(
-        _batch(spark, [("u1", TS, 1, "v1", "insert"), ("u2", TS, 2, "v1", "insert")])
-    )  # snapshot 1: everything in bucket 0 (2 salted files)
-    t.compact()  # snapshot 2: same rows, new file list
-    assert t.changes_between(1, 2).count() == 0
+    t = SnapshotTable(spark, tmp_table_dir, "url", n_buckets=1).create(SCHEMA)
+    # two merge-on-read merges of disjoint keys: bucket 0 holds 2 files
+    t.merge_upsert(_batch(spark, [("u1", TS, 1, "v1", "insert")]), merge_mode="mor")
+    t.merge_upsert(_batch(spark, [("u2", TS, 2, "v1", "insert")]), merge_mode="mor")
+    assert len(t.current_manifest()["buckets"]["0"]) == 2  # snapshot 2
+    t.compact()  # snapshot 3: same rows, new file list
+    assert len(t.current_manifest()["buckets"]["0"]) == 1
+    assert t.changes_between(2, 3).count() == 0
     # but a real change in the shared bucket still surfaces alone
     t.merge_upsert(
         _batch(spark, [("u1", TS + dt.timedelta(1), 3, "v2", "update")])
-    )  # snapshot 3
-    rows = t.changes_between(2, 3).collect()
+    )  # snapshot 4
+    rows = t.changes_between(3, 4).collect()
     assert [(r["url"], r["change_op"]) for r in rows] == [("u1", "update")]
 
 

@@ -63,38 +63,6 @@ def test_exact_dedup(spark):
     assert out == {"x": (1, 2), "y": (3, 1)}
 
 
-def test_bucket_local_merge_equals_window_merge(spark, tmp_path):
-    """The single-shuffle bucket_local merge must produce the identical
-    final state to the window merge across multi-batch replays with
-    updates, deletes, and stale events (same LWW + tombstone semantics,
-    one exchange instead of two)."""
-    from pyspark.sql import types as T
-
-    from clinvar_ingest_spark.sources import ChangeLogSource, synthetic_change_log
-    from clinvar_ingest_spark.streaming import IngestPipeline
-    from clinvar_ingest_spark.tables import SnapshotTable
-
-    pages = T.StructType([T.StructField(n, t) for n, t in [
-        ("url", T.StringType()), ("warc_ts", T.TimestampType()),
-        ("seq", T.LongType()), ("html", T.BinaryType()),
-        ("lang", T.StringType()), ("text", T.StringType())]])
-    log = synthetic_change_log(spark, 1500, n_urls=200)
-
-    states = {}
-    for strat in ("window", "bucket_local"):
-        t = SnapshotTable(spark, str(tmp_path / strat), "url", 8).create(pages)
-        p = IngestPipeline(
-            spark, ChangeLogSource(log), t, dedup_strategy=strat
-        )
-        p.run_to_end(span=500)
-        states[strat] = sorted(
-            (r["url"], r["seq"], r["text"])
-            for r in p.current_state().collect()
-        )
-    assert states["window"] == states["bucket_local"]
-    assert len(states["window"]) > 100
-
-
 def test_derive_curated_corpus_keeper_by_quality(spark):
     """Cluster keeper = highest quality (NOT lowest id); singletons
     survive as their own cluster."""

@@ -45,43 +45,6 @@ def test_plan_is_arrow_vectorized(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_fused_writer_extraction_byte_identical_to_column_path(spark, tmp_path):
-    """The fused (writer-stage) extraction must produce byte-identical
-    text to the Column-level pandas-UDF path, across the REAL pipeline
-    (tombstones, stored-winner coalesce, multi-batch)."""
-    from pyspark.sql import types as T
-
-    from clinvar_ingest_spark.sources import ChangeLogSource, synthetic_change_log
-    from clinvar_ingest_spark.streaming import IngestPipeline
-    from clinvar_ingest_spark.tables import SnapshotTable
-
-    pages = T.StructType([T.StructField(n, t) for n, t in [
-        ("url", T.StringType()), ("warc_ts", T.TimestampType()),
-        ("seq", T.LongType()), ("html", T.BinaryType()),
-        ("lang", T.StringType()), ("text", T.StringType())]])
-    log = synthetic_change_log(spark, 1500, n_urls=200)
-
-    t_fused = SnapshotTable(spark, str(tmp_path / "f"), "url", 8).create(pages)
-    p_fused = IngestPipeline(
-        spark, ChangeLogSource(log), t_fused, fused_extract=True
-    )
-    assert p_fused._fused
-    p_fused.run_to_end(span=500)
-
-    t_col = SnapshotTable(spark, str(tmp_path / "c"), "url", 8).create(pages)
-    p_col = IngestPipeline(spark, ChangeLogSource(log), t_col)  # default
-    assert not p_col._fused
-    p_col.run_to_end(span=500)
-
-    a = sorted(
-        (r["url"], r["seq"], r["text"]) for r in p_fused.current_state().collect()
-    )
-    b = sorted(
-        (r["url"], r["seq"], r["text"]) for r in p_col.current_state().collect()
-    )
-    assert a == b and len(a) > 100
-
-
 def test_re2_fast_path_byte_identical_to_reference():
     """The Arrow/RE2 extraction must equal extract_text_py byte-for-byte
     on adversarial inputs: entity nesting, unicode whitespace, unclosed

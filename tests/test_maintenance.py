@@ -21,17 +21,18 @@ PAGES = T.StructType(
 )
 
 
-def _pipe(spark, path, n=900, write_salts=1):
-    tbl = SnapshotTable(spark, path, "url", 8, write_salts=write_salts).create(PAGES)
+def _pipe(spark, path, n=900, merge_mode="cow"):
+    tbl = SnapshotTable(spark, path, "url", 8).create(PAGES)
     return IngestPipeline(
-        spark, ChangeLogSource(synthetic_change_log(spark, n, n_urls=120)), tbl
+        spark, ChangeLogSource(synthetic_change_log(spark, n, n_urls=120)), tbl,
+        merge_mode=merge_mode,
     )
 
 
 def test_compact_reduces_files_preserves_state(spark, tmp_path):
-    # write_salts=3 → several files per bucket per commit (the
-    # write-parallelism path for oversized buckets)
-    pipe = _pipe(spark, str(tmp_path / "t"), write_salts=3)
+    # merge-on-read batches append one delta file per touched bucket,
+    # so three batches leave several files per bucket
+    pipe = _pipe(spark, str(tmp_path / "t"), merge_mode="mor")
     pipe.run_to_end(span=300)
     before = sorted(
         (r["url"], r["seq"], r["text"]) for r in pipe.current_state().collect()

@@ -305,3 +305,69 @@ def test_pq_encode_is_shuffle_free(spark):
     assert "Exchange" not in plan
     assert "Window" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _merge_write_plan(spark, tmp_path, monkeypatch, lineage=False, **merge_kw):
+    """Plan string of the DataFrame ``merge_upsert`` hands to the bucket
+    writer for a merge over an already-populated table (two merges of
+    the same synthetic log; the second one's plan is returned)."""
+    from pyspark.sql import types as T
+
+    from clinvar_ingest_spark.sources import synthetic_change_log
+    from clinvar_ingest_spark.streaming import IngestPipeline
+    from clinvar_ingest_spark.tables import SnapshotTable
+
+    plans = []
+    write = SnapshotTable._write_buckets
+
+    def spy(self, df, *a, **kw):
+        plans.append(executed_plan(df))
+        return write(self, df, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "_write_buckets", spy)
+    pages = T.StructType([T.StructField(n, t) for n, t in [
+        ("url", T.StringType()), ("warc_ts", T.TimestampType()),
+        ("seq", T.LongType()), ("html", T.BinaryType()),
+        ("lang", T.StringType()), ("text", T.StringType())]])
+    t = SnapshotTable(spark, str(tmp_path / "t"), "url", 8).create(
+        pages, row_lineage=lineage
+    )
+    log = synthetic_change_log(spark, 600, n_urls=100).drop("part")
+    for half in ("seq < 300", "seq >= 300"):
+        t.merge_upsert(
+            log.filter(half),
+            post_merge_transform=IngestPipeline.default_transform,
+            **merge_kw,
+        )
+    assert len(plans) == 2
+    return plans[-1]
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_merge_dedup_is_map_side_window_group_limit(
+    spark, tmp_path, monkeypatch, merge_mode
+):
+    """A window merge adds no explicit repartition, so Spark plants a
+    PARTIAL WindowGroupLimit below the one hash exchange and a FINAL one
+    above it: duplicate versions of a key are dropped before the
+    shuffle. The extraction stays a vectorized Arrow UDF."""
+    plan = _merge_write_plan(spark, tmp_path, monkeypatch, merge_mode=merge_mode)
+    lines = plan.splitlines()
+    wgl = [i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln]
+    exch = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    assert len(wgl) == 2 and len(exch) == 1, plan
+    assert wgl[0] < exch[0] < wgl[1], plan
+    assert lines[wgl[0]].rstrip().endswith("Final"), plan
+    assert lines[wgl[1]].rstrip().endswith("Partial"), plan
+    assert "ArrowEvalPython" in plan
+    assert "BatchEvalPython" not in plan
+
+
+def test_lineage_merge_keeps_explicit_key_repartition(spark, tmp_path, monkeypatch):
+    """Row-lineage merges share ONE explicit repartition on the key
+    across their window aggregates — no second exchange."""
+    plan = _merge_write_plan(spark, tmp_path, monkeypatch, lineage=True)
+    exch = [ln for ln in plan.splitlines() if "Exchange " in ln]
+    assert len(exch) == 1, plan
+    assert "hashpartitioning(url" in exch[0], plan
+    assert "REPARTITION_BY_NUM" in exch[0], plan

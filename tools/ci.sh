@@ -7,11 +7,14 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/3 pytest =="
+echo "== 1/4 pytest =="
 python -m pytest tests/ -x -q
 
-echo "== 2/3 full-registry oracle sweep (all queries, sf0.01) =="
+echo "== 2/4 benchmark harness toy self-test =="
+python -m pytest perfbench/tests -q
+
+echo "== 3/4 full-registry oracle sweep (all queries, sf0.01) =="
 python tools/check_oracle.py
 
-echo "== 3/3 bench (sf0.1, one JSON line) =="
+echo "== 4/4 bench (sf0.1, one JSON line) =="
 python bench.py
