@@ -30,7 +30,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# same default as session.get_spark: every core of this host
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 INGEST_EVENTS = int(os.environ.get("BENCH_INGEST_EVENTS", "2000000"))
 # N vs 4N scaling pair. 1→4 rather than 8→32: past ~8-12 cores a single
 # local JVM saturates host memory bandwidth / page cache, which a real

@@ -21,7 +21,6 @@ replay byte-for-byte (tested in tests/test_pipeline.py).
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 from dataclasses import dataclass
 from typing import Callable
@@ -31,7 +30,7 @@ from pyspark.sql import functions as F
 
 from clinvar_ingest_spark.functions.extract import extract_text
 from clinvar_ingest_spark.sources.change_log import ChangeLogSource, OffsetRange
-from clinvar_ingest_spark.tables import SnapshotTable
+from clinvar_ingest_spark.tables import SnapshotTable, _atomic_write
 
 
 @dataclass
@@ -691,10 +690,7 @@ class IngestPipeline:
             pass
         res, advanced = self._audit_lineage(cursor)
         if res["ok"] and res["n_new_batches"]:
-            fd, tmp = tempfile.mkstemp(dir=self.target.path)
-            with os.fdopen(fd, "w") as f:
-                _json.dump(advanced, f)
-            os.replace(tmp, cur_path)
+            _atomic_write(cur_path, _json.dumps(advanced))
         return res
 
     def _audit_lineage(self, cursor: dict) -> tuple[dict, dict]:

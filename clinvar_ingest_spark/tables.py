@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import dataclasses
 import hashlib
+import itertools
 import json
 import os
 import re
@@ -37,7 +38,7 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +50,11 @@ _PTR = "_ptr"
 _MANIFESTS = "_manifests"
 _DATA = "data"
 _LOCK = "_commit.lock"
+# JSON sidecars at the table root, each read-modify-written under _LOCK
+_REFS = "_refs.json"
+_STAGED = "_staged.json"
+_BRANCHES = "_branches.json"
+_CLONES = "_clones.json"
 BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"
 # Iceberg-style type promotion (widen_column): the only allowed
@@ -136,8 +142,8 @@ def _file_rows_put(path: str, n: int) -> None:
     # check-list-delete must not interleave with another thread's
     with _FILE_ROWS_LOCK:
         if len(_FILE_ROWS) >= _FILE_ROWS_CAP:
-            for k in list(_FILE_ROWS)[: _FILE_ROWS_CAP // 4]:
-                _FILE_ROWS.pop(k, None)
+            for k in list(itertools.islice(_FILE_ROWS, _FILE_ROWS_CAP // 4)):
+                del _FILE_ROWS[k]
         _FILE_ROWS.pop(path, None)  # re-insert at the end (recency)
         _FILE_ROWS[path] = n
 
@@ -148,6 +154,17 @@ def _file_rows_forget(path: str) -> None:
     with _FILE_ROWS_LOCK:
         _FILE_ROWS.pop(path, None)
         _FILE_ROWS.pop(os.path.realpath(path), None)
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` atomically: write a temp file in
+    the target's directory, then ``os.replace`` it over the target — a
+    reader sees the old content or the new, never a torn file. Pointer
+    swaps, manifest rewrites and every JSON sidecar go through here."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
+    with os.fdopen(fd, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def _footer_rows(files: list[str]) -> int:
@@ -164,13 +181,13 @@ def _footer_rows(files: list[str]) -> int:
 
     counts: dict[str, int] = {}
     missing: list[str] = []
-    for f in files:
-        n = _FILE_ROWS.get(f)
-        if n is None:
-            missing.append(f)
-        else:
-            counts[f] = n
-            _file_rows_put(f, n)  # refresh recency on hit
+    with _FILE_ROWS_LOCK:  # one acquisition refreshes every hit's recency
+        for f in files:
+            n = _FILE_ROWS.pop(f, None)
+            if n is None:
+                missing.append(f)
+            else:
+                counts[f] = _FILE_ROWS[f] = n  # re-insert at the end
 
     def _read(f: str) -> tuple[str, int]:
         n = pq.ParquetFile(f).metadata.num_rows
@@ -230,6 +247,18 @@ class SnapshotTable:
     def exists(self) -> bool:
         return os.path.exists(self._ptr_path())
 
+    def _load_side(self, name: str, default):
+        """JSON sidecar ``name`` at the table root, or ``default`` when it
+        is missing or unreadable."""
+        try:
+            with open(os.path.join(self.path, name)) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return default
+
+    def _save_side(self, name: str, obj) -> None:
+        _atomic_write(os.path.join(self.path, name), json.dumps(obj))
+
     def _read_main_ptr(self) -> str | None:
         if not self.exists():
             return None
@@ -242,7 +271,7 @@ class SnapshotTable:
         and every commit CAS routes through here, which is what makes
         merge/DML/compact/rollback work on a branch unchanged)."""
         if self._branch is not None:
-            brs = self._read_branches()
+            brs = self._load_side(_BRANCHES, {})
             if self._branch not in brs:
                 raise ValueError(
                     f"branch {self._branch!r} does not exist (dropped or "
@@ -256,6 +285,15 @@ class SnapshotTable:
             m = json.load(f)
         m["_name"] = name  # in-memory only; _commit builds a fresh dict
         return m
+
+    def _rewrite_manifest(self, m: dict[str, Any]) -> None:
+        """Rewrite a committed manifest in place (expiry re-rooting,
+        clone materialization, GDPR purge) — atomically, so a crash can
+        never leave a truncated manifest on the chain."""
+        body = {k: v for k, v in m.items() if k != "_name"}
+        _atomic_write(
+            os.path.join(self.path, _MANIFESTS, m["_name"]), json.dumps(body)
+        )
 
     def current_manifest(self) -> dict[str, Any] | None:
         name = self._read_ptr()
@@ -316,31 +354,47 @@ class SnapshotTable:
             name = m["parent_name"]
         return list(reversed(chain))
 
+    def _walk_manifests(
+        self, chain: list[str] | None = None
+    ) -> Iterator[dict[str, Any]]:
+        """Yield every manifest reachable from the table's roots, each
+        once, by parent links: ``chain`` (default: the committed
+        :meth:`history`) plus the staged (WAP) and branch heads, whose
+        commits are off the main chain. Names that fail to load are
+        skipped. The one manifest-graph walk: the orphan GC, clone
+        materialization, GDPR purge and vacuum all read through it."""
+        stack = (
+            (self.history() if chain is None else list(chain))
+            + list(self._load_side(_STAGED, {}).values())
+            + list(self._load_side(_BRANCHES, {}).values())
+        )
+        seen: set[str] = set()
+        while stack:
+            name = stack.pop()
+            if name in seen:
+                continue
+            seen.add(name)
+            try:
+                m = self._load_manifest(name)
+            except OSError:
+                continue
+            yield m
+            if m.get("parent_name") is not None:
+                stack.append(m["parent_name"])
+
     def _gc_orphan_manifests(self, chain_head: str) -> None:
         """Drop manifests unreachable from the committed chain (torn
         commits); runs inside the commit lock so no concurrent writer's
         in-flight manifest can be swept."""
         d = os.path.join(self.path, _MANIFESTS)
-        reachable = set()
         # staged (write-audit-publish) manifests and branch heads are
         # roots too: they are not on the pointer chain, but
         # publish_staged / fast_forward will need them
-        heads = (
-            [chain_head]
-            + list(self._read_staged().values())
-            + list(self._read_branches().values())
-        )
-        for head in heads:
-            name: str | None = head
-            while name is not None and name not in reachable:
-                reachable.add(name)
-                try:
-                    m = self._load_manifest(name)
-                except OSError:
-                    break
-                name = m.get("parent_name")
-                if name is None and "parent_name" not in m:
-                    return  # legacy chain: can't prove orphan-ness, keep all
+        reachable = set()
+        for m in self._walk_manifests([chain_head]):
+            if "parent_name" not in m:
+                return  # legacy chain: can't prove orphan-ness, keep all
+            reachable.add(m["_name"])
         for f in os.listdir(d):
             if f not in reachable:
                 try:
@@ -594,10 +648,9 @@ class SnapshotTable:
                     out[c][name] = [int(r[f"w{w}"]) for w in range(n_words)]
         os.makedirs(os.path.join(self.path, self._BLOOM_DIR), exist_ok=True)
         path = self._bloom_path(m["snapshot_id"])
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"m": self.BLOOM_M, "k": self.BLOOM_K, "cols": out}, fh)
-        os.replace(tmp, path)
+        _atomic_write(
+            path, json.dumps({"m": self.BLOOM_M, "k": self.BLOOM_K, "cols": out})
+        )
         return path
 
     def bloom_prune_buckets(self, col: str, value) -> list[int] | None:
@@ -722,10 +775,7 @@ class SnapshotTable:
             os.path.join(self.path, self._COLSTATS_DIR), exist_ok=True
         )
         path = self._colstats_path(m["snapshot_id"])
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"cols": list(cols), "files": out}, fh)
-        os.replace(tmp, path)
+        _atomic_write(path, json.dumps({"cols": list(cols), "files": out}))
         return path
 
     def stats_prune_files(self, col: str, lo=None, hi=None):
@@ -1045,20 +1095,14 @@ class SnapshotTable:
         self.n_buckets = new_n_buckets
         try:
             new_files = self._write_buckets(df, m["snapshot_id"] + 1)
-            buckets = {b: f for b, f in new_files.items() if f}
-            n = _footer_rows([f for fs in buckets.values() for f in fs])
-            sid, mp = self._commit(
-                buckets, T.StructType.fromJson(m["schema"]),
-                dict(m.get("properties", {})), m["snapshot_id"],
-                {"n_rows": n}, read_mode="plain",
-                order_cols=m.get("order_cols"), parent_name=m["_name"],
+            # every bucket is replaced
+            return self._commit_files(
+                {**m, "buckets": {}}, new_files, sorted(new_files),
+                stats_key="n_rows", read_mode="plain",
             )
         except BaseException:
             self.n_buckets = old_n
             raise
-        return CommitResult(
-            sid, mp, sorted(buckets), 0, 0, n, m.get("properties", {})
-        )
 
     # --------------------------------------------------- schema evolution
     _PROTECTED_COLS = (BUCKET_COL, DELETED_COL, ROW_ID_COL)
@@ -1107,17 +1151,9 @@ class SnapshotTable:
         )
         log = list(m.get("renames", []))
         log.append({"sid": m["snapshot_id"] + 1, "from": old, "to": new})
-        sid, mp = self._commit(
-            {int(b): list(f) for b, f in m["buckets"].items()},
-            new_schema, dict(m.get("properties", {})), m["snapshot_id"],
-            dict(m.get("stats", {})),
-            read_mode=m.get("read_mode", "plain"),
-            order_cols=m.get("order_cols"), parent_name=m["_name"],
-            schema_evolution={"renames": log},
+        return self._commit_files(
+            m, {}, [], schema=new_schema, schema_evolution={"renames": log}
         )
-        return CommitResult(sid, mp, [], 0, 0,
-                            int(m.get("stats", {}).get("n_rows", -1)),
-                            m.get("properties", {}))
 
     def drop_column(self, name: str) -> CommitResult:
         """METADATA-ONLY column drop: the field leaves the schema, old
@@ -1139,17 +1175,9 @@ class SnapshotTable:
         )
         dropped = list(m.get("dropped", []))
         dropped.append(name)
-        sid, mp = self._commit(
-            {int(b): list(f) for b, f in m["buckets"].items()},
-            new_schema, dict(m.get("properties", {})), m["snapshot_id"],
-            dict(m.get("stats", {})),
-            read_mode=m.get("read_mode", "plain"),
-            order_cols=m.get("order_cols"), parent_name=m["_name"],
-            schema_evolution={"dropped": dropped},
+        return self._commit_files(
+            m, {}, [], schema=new_schema, schema_evolution={"dropped": dropped}
         )
-        return CommitResult(sid, mp, [], 0, 0,
-                            int(m.get("stats", {}).get("n_rows", -1)),
-                            m.get("properties", {}))
 
     def add_column(
         self, name: str, dtype, default=None
@@ -1201,17 +1229,9 @@ class SnapshotTable:
                 "type": dtype.simpleString(),
             }
         )
-        sid, mp = self._commit(
-            {int(b): list(f) for b, f in m["buckets"].items()},
-            new_schema, dict(m.get("properties", {})), m["snapshot_id"],
-            dict(m.get("stats", {})),
-            read_mode=m.get("read_mode", "plain"),
-            order_cols=m.get("order_cols"), parent_name=m["_name"],
-            schema_evolution={"adds": log},
+        return self._commit_files(
+            m, {}, [], schema=new_schema, schema_evolution={"adds": log}
         )
-        return CommitResult(sid, mp, [], 0, 0,
-                            int(m.get("stats", {}).get("n_rows", -1)),
-                            m.get("properties", {}))
 
     def widen_column(self, name: str, new_type) -> CommitResult:
         """METADATA-ONLY type widening (Iceberg type-promotion analog):
@@ -1260,17 +1280,9 @@ class SnapshotTable:
                 "to": new_type.typeName(),
             }
         )
-        sid, mp = self._commit(
-            {int(b): list(f) for b, f in m["buckets"].items()},
-            new_schema, dict(m.get("properties", {})), m["snapshot_id"],
-            dict(m.get("stats", {})),
-            read_mode=m.get("read_mode", "plain"),
-            order_cols=m.get("order_cols"), parent_name=m["_name"],
-            schema_evolution={"widens": log},
+        return self._commit_files(
+            m, {}, [], schema=new_schema, schema_evolution={"widens": log}
         )
-        return CommitResult(sid, mp, [], 0, 0,
-                            int(m.get("stats", {}).get("n_rows", -1)),
-                            m.get("properties", {}))
 
     @staticmethod
     def _file_write_sid(path: str) -> int:
@@ -1359,16 +1371,6 @@ class SnapshotTable:
         return stored_schema, pairs, casts, fills
 
     # ------------------------------------------------------------------ refs
-    def _refs_path(self) -> str:
-        return os.path.join(self.path, "_refs.json")
-
-    def _read_refs(self) -> dict[str, int]:
-        try:
-            with open(self._refs_path()) as f:
-                return {k: int(v) for k, v in json.load(f).items()}
-        except (OSError, ValueError):
-            return {}
-
     def tag(self, name: str, snapshot_id: int | None = None) -> int:
         """Name a snapshot (Iceberg tag analog): ``read_ref(name)``
         then time-travels to it regardless of later commits, and
@@ -1383,22 +1385,19 @@ class SnapshotTable:
         try:
             sid = self.snapshot_id() if snapshot_id is None else snapshot_id
             self.manifest_at(sid)  # must exist on the committed chain
-            refs = self._read_refs()
+            refs = self.refs()
             refs[name] = sid
-            fd, tmp = tempfile.mkstemp(dir=self.path)
-            with os.fdopen(fd, "w") as f:
-                json.dump(refs, f)
-            os.replace(tmp, self._refs_path())
+            self._save_side(_REFS, refs)
         finally:
             self._release_lock(lock)
         return sid
 
     def refs(self) -> dict[str, int]:
         """All tags: name → snapshot_id."""
-        return self._read_refs()
+        return {k: int(v) for k, v in self._load_side(_REFS, {}).items()}
 
     def read_ref(self, name: str) -> DataFrame:
-        refs = self._read_refs()
+        refs = self.refs()
         if name not in refs:
             raise ValueError(f"no tag {name!r} on {self.path}")
         return self.read_at(refs[name])
@@ -1406,12 +1405,9 @@ class SnapshotTable:
     def drop_ref(self, name: str) -> None:
         lock = self._acquire_lock()
         try:
-            refs = self._read_refs()
+            refs = self.refs()
             refs.pop(name, None)
-            fd, tmp = tempfile.mkstemp(dir=self.path)
-            with os.fdopen(fd, "w") as f:
-                json.dump(refs, f)
-            os.replace(tmp, self._refs_path())
+            self._save_side(_REFS, refs)
         finally:
             self._release_lock(lock)
 
@@ -1714,52 +1710,33 @@ class SnapshotTable:
             with open(mpath, "w") as f:
                 json.dump(manifest, f)
             if stage_ref is not None:
-                staged = self._read_staged()
+                staged = self._load_side(_STAGED, {})
                 staged[stage_ref] = name
-                self._write_staged(staged)
+                self._save_side(_STAGED, staged)
             elif self._branch is not None:
                 # branch commit: the CAS above already compared against
                 # the branch head (branch-aware _read_ptr); advance the
                 # branch ref, never the main pointer
-                brs = self._read_branches()
+                brs = self._load_side(_BRANCHES, {})
                 brs[self._branch] = name
-                self._write_branches(brs)
+                self._save_side(_BRANCHES, brs)
                 main = self._read_main_ptr()
                 if main is not None:
                     self._gc_orphan_manifests(main)
             else:
-                fd, tmp = tempfile.mkstemp(dir=self.path)
-                with os.fdopen(fd, "w") as f:
-                    f.write(name)
-                os.replace(tmp, self._ptr_path())  # the commit point
+                _atomic_write(self._ptr_path(), name)  # the commit point
                 self._gc_orphan_manifests(name)
         finally:
             self._release_lock(lock)
         return sid, mpath
 
     # -- write-audit-publish staging (Iceberg WAP analog) --------------
-    def _staged_path(self) -> str:
-        return os.path.join(self.path, "_staged.json")
-
-    def _read_staged(self) -> dict[str, str]:
-        try:
-            with open(self._staged_path()) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}
-
-    def _write_staged(self, staged: dict[str, str]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path)
-        with os.fdopen(fd, "w") as f:
-            json.dump(staged, f)
-        os.replace(tmp, self._staged_path())
-
     def staged_refs(self) -> dict[str, str]:
-        return dict(self._read_staged())
+        return dict(self._load_side(_STAGED, {}))
 
     def read_staged(self, ref: str) -> DataFrame:
         """Read the staged snapshot (the audit step's view)."""
-        staged = self._read_staged()
+        staged = self._load_side(_STAGED, {})
         if ref not in staged:
             raise ValueError(f"no staged ref {ref!r}")
         return self.read(snapshot=self._load_manifest(staged[ref]))
@@ -1774,7 +1751,7 @@ class SnapshotTable:
             raise ValueError("publish_staged runs on the main table")
         lock = self._acquire_lock()
         try:
-            staged = self._read_staged()
+            staged = self._load_side(_STAGED, {})
             if ref not in staged:
                 raise ValueError(f"no staged ref {ref!r}")
             name = staged.pop(ref)
@@ -1786,11 +1763,8 @@ class SnapshotTable:
                     f"{man.get('parent_name')!r} but the pointer now "
                     f"names {current!r} — abort and re-stage"
                 )
-            fd, tmp = tempfile.mkstemp(dir=self.path)
-            with os.fdopen(fd, "w") as f:
-                f.write(name)
-            os.replace(tmp, self._ptr_path())
-            self._write_staged(staged)
+            _atomic_write(self._ptr_path(), name)
+            self._save_side(_STAGED, staged)
             self._gc_orphan_manifests(name)
             return man["snapshot_id"]
         finally:
@@ -1801,11 +1775,11 @@ class SnapshotTable:
         become orphans; vacuum_orphans sweeps them)."""
         lock = self._acquire_lock()
         try:
-            staged = self._read_staged()
+            staged = self._load_side(_STAGED, {})
             if ref not in staged:
                 raise ValueError(f"no staged ref {ref!r}")
             name = staged.pop(ref)
-            self._write_staged(staged)
+            self._save_side(_STAGED, staged)
             try:
                 os.unlink(os.path.join(self.path, _MANIFESTS, name))
             except OSError:
@@ -1816,35 +1790,18 @@ class SnapshotTable:
     # -- branch refs (Iceberg branch analog) ---------------------------
     # A branch is a named head in _branches.json that advances through
     # the SAME _commit CAS as main (compare-and-swap against the branch
-    # head, under the table lock). Because every reader and writer
-    # resolves its head through the branch-aware _read_ptr, the full
-    # write surface — merge_upsert (all three modes), merge_into,
-    # delete_where/update_where, compact, rollback_to, schema evolution
-    # — works on a branch with zero extra code: Iceberg's branch
-    # semantics, but uniform across the whole engine. WAP staging
-    # (stage_ref) is the single-commit special case; branches are the
-    # multi-commit generalization.
-
-    def _branches_path(self) -> str:
-        return os.path.join(self.path, "_branches.json")
-
-    def _read_branches(self) -> dict[str, str]:
-        try:
-            with open(self._branches_path()) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}
-
-    def _write_branches(self, brs: dict[str, str]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path)
-        with os.fdopen(fd, "w") as f:
-            json.dump(brs, f)
-        os.replace(tmp, self._branches_path())
+    # head, under the table lock). Every snapshot-producing write ends
+    # in _commit_files (rollback_to in _commit), and every reader and
+    # writer resolves its head through the branch-aware _read_ptr, so
+    # the whole write surface works on a branch with zero extra code:
+    # Iceberg's branch semantics, but uniform across the whole engine.
+    # WAP staging (stage_ref) is the single-commit special case;
+    # branches are the multi-commit generalization.
 
     def branches(self) -> dict[str, int]:
         """branch name -> head snapshot id."""
         out = {}
-        for name, mname in self._read_branches().items():
+        for name, mname in self._load_side(_BRANCHES, {}).items():
             try:
                 out[name] = self._load_manifest(mname)["snapshot_id"]
             except OSError:
@@ -1860,7 +1817,7 @@ class SnapshotTable:
             raise ValueError("create_branch must run on the main table")
         lock = self._acquire_lock()
         try:
-            brs = self._read_branches()
+            brs = self._load_side(_BRANCHES, {})
             if name in brs:
                 raise ValueError(f"branch {name!r} already exists")
             if snapshot_id is None:
@@ -1870,7 +1827,7 @@ class SnapshotTable:
             else:
                 head = self.manifest_at(snapshot_id)["_name"]
             brs[name] = head
-            self._write_branches(brs)
+            self._save_side(_BRANCHES, brs)
             return self._load_manifest(head)["snapshot_id"]
         finally:
             self._release_lock(lock)
@@ -1882,7 +1839,7 @@ class SnapshotTable:
 
         if self._branch is not None:
             raise ValueError("already a branch view; branch from main")
-        if name not in self._read_branches():
+        if name not in self._load_side(_BRANCHES, {}):
             raise ValueError(f"branch {name!r} does not exist")
         view = copy.copy(self)
         view._branch = name
@@ -1894,11 +1851,11 @@ class SnapshotTable:
         vacuum_orphans)."""
         lock = self._acquire_lock()
         try:
-            brs = self._read_branches()
+            brs = self._load_side(_BRANCHES, {})
             if name not in brs:
                 raise ValueError(f"branch {name!r} does not exist")
             brs.pop(name)
-            self._write_branches(brs)
+            self._save_side(_BRANCHES, brs)
         finally:
             self._release_lock(lock)
 
@@ -1910,7 +1867,7 @@ class SnapshotTable:
         caller must replay/rebase instead (CommitConflictError)."""
         lock = self._acquire_lock()
         try:
-            brs = self._read_branches()
+            brs = self._load_side(_BRANCHES, {})
             if name not in brs:
                 raise ValueError(f"branch {name!r} does not exist")
             head = brs[name]
@@ -1932,12 +1889,9 @@ class SnapshotTable:
                     "was created; replay the branch commits instead"
                 )
             if head != cur:
-                fd, tmp = tempfile.mkstemp(dir=self.path)
-                with os.fdopen(fd, "w") as f:
-                    f.write(head)
-                os.replace(tmp, self._ptr_path())
+                _atomic_write(self._ptr_path(), head)
             brs.pop(name)
-            self._write_branches(brs)
+            self._save_side(_BRANCHES, brs)
             self._gc_orphan_manifests(head)
             return self._load_manifest(head)["snapshot_id"]
         finally:
@@ -1952,58 +1906,17 @@ class SnapshotTable:
     # and its GC treats clone-reachable files as referenced; ownership
     # ops (purge_key, drop) refuse while foreign references exist, and
     # materialize() converts shallow→deep to restore full ownership.
-    def _clones_path(self) -> str:
-        return os.path.join(self.path, "_clones.json")
-
-    def _read_clones(self) -> list[str]:
-        try:
-            with open(self._clones_path()) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return []
-
-    def _write_clones(self, clones: list[str]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path)
-        with os.fdopen(fd, "w") as f:
-            json.dump(clones, f)
-        os.replace(tmp, self._clones_path())
-
     def clones(self) -> list[str]:
         """Registered shallow-clone paths whose table still exists
         (dropped clones self-deregister on the next read/vacuum)."""
         return [
             p
-            for p in self._read_clones()
+            for p in self._load_side(_CLONES, [])
             if os.path.exists(os.path.join(p, _PTR))
         ]
 
     def _data_root(self) -> str:
         return os.path.realpath(os.path.join(self.path, _DATA))
-
-    def _reachable_manifest_names(self) -> list[str]:
-        """Every manifest reachable from ANY root: the committed chain,
-        staged (WAP) heads, and branch heads, parent-walked."""
-        roots = (
-            list(self.history())
-            + list(self._read_staged().values())
-            + list(self._read_branches().values())
-        )
-        out: list[str] = []
-        seen: set[str] = set()
-        while roots:
-            name = roots.pop()
-            if name in seen:
-                continue
-            seen.add(name)
-            try:
-                m = self._load_manifest(name)
-            except OSError:
-                continue
-            out.append(name)
-            p = m.get("parent_name")
-            if p is not None:
-                roots.append(p)
-        return out
 
     def _foreign_files(self, manifests: list[dict[str, Any]]) -> list[str]:
         """Referenced data files living OUTSIDE this table's data dir
@@ -2090,15 +2003,12 @@ class SnapshotTable:
             name = f"m-{sid:08d}-{uuid.uuid4().hex[:8]}.json"
             with open(os.path.join(dst_path, _MANIFESTS, name), "w") as f:
                 json.dump(manifest, f)
-            fd, tmp = tempfile.mkstemp(dir=dst_path)
-            with os.fdopen(fd, "w") as f:
-                f.write(name)
-            os.replace(tmp, clone._ptr_path())
-            registry = self._read_clones()
+            _atomic_write(clone._ptr_path(), name)
+            registry = self._load_side(_CLONES, [])
             real_dst = os.path.realpath(dst_path)
             if real_dst not in registry:
                 registry.append(real_dst)
-                self._write_clones(registry)
+                self._save_side(_CLONES, registry)
             return clone
         finally:
             self._release_lock(lock)
@@ -2120,11 +2030,7 @@ class SnapshotTable:
         # ALL reachable manifests — staged (WAP) and branch chains
         # reference files too; remapping only the main chain would
         # deregister while they still point at the source
-        manifests = [
-            self._load_manifest(n)
-            for n in self._reachable_manifest_names()
-        ]
-        foreign = set(self._foreign_files(manifests))
+        foreign = set(self._foreign_files(list(self._walk_manifests())))
         if not foreign:
             return None
         root = self._data_root()
@@ -2147,8 +2053,7 @@ class SnapshotTable:
             # history, tags, staged refs, branches, and time travel all
             # become self-contained, not just the head
             head = self._read_ptr()
-            for mname in self._reachable_manifest_names():
-                mm_ = self._load_manifest(mname)
+            for mm_ in self._walk_manifests():
                 changed = False
                 for b, files in mm_["buckets"].items():
                     nf = [mapping.get(f, f) for f in files]
@@ -2161,15 +2066,7 @@ class SnapshotTable:
                         d["path"] = np_
                         changed = True
                 if changed:
-                    mm_.pop("_name", None)
-                    fd, tmp = tempfile.mkstemp(
-                        dir=os.path.join(self.path, _MANIFESTS)
-                    )
-                    with os.fdopen(fd, "w") as f:
-                        json.dump(mm_, f)
-                    os.replace(
-                        tmp, os.path.join(self.path, _MANIFESTS, mname)
-                    )
+                    self._rewrite_manifest(mm_)
             cur = self._load_manifest(head)
             # deregister from the source's clone registry — ownership
             # is now local, the source may GC/purge freely
@@ -2185,11 +2082,11 @@ class SnapshotTable:
                     # clone-then-source, so no cycle.
                     slock = src_tbl._acquire_lock()
                     try:
-                        reg = src_tbl._read_clones()
+                        reg = src_tbl._load_side(_CLONES, [])
                         me = os.path.realpath(self.path)
                         if me in reg:
                             reg.remove(me)
-                            src_tbl._write_clones(reg)
+                            src_tbl._save_side(_CLONES, reg)
                     finally:
                         src_tbl._release_lock(slock)
                 except OSError:
@@ -2333,28 +2230,29 @@ class SnapshotTable:
         return {b: sorted(fs) for b, fs in buckets.items()}
 
     def overwrite(self, df: DataFrame, properties: dict[str, Any] | None = None):
-        """Full rewrite (CTAS analog: create_tables.py:224)."""
-        m = self.current_manifest()
-        parent = -1 if m is None else m["snapshot_id"]
+        """Full rewrite (CTAS analog: create_tables.py:224); also
+        creates the table when none exists at the path yet."""
+        m = self.current_manifest() or {"snapshot_id": -1, "_name": None}
         if BUCKET_COL not in df.columns:
             df = df.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets))
         if DELETED_COL not in df.columns:
             df = df.withColumn(DELETED_COL, F.lit(False))
         os.makedirs(self.path, exist_ok=True)
-        buckets = self._write_buckets(df, parent + 1)
-        all_files = [f for fs in buckets.values() for f in fs]
-        n = (
-            df.sparkSession.read.schema(df.schema).parquet(*all_files).count()
-            if all_files
-            else 0
+        buckets = self._write_buckets(df, m["snapshot_id"] + 1)
+        # the parent contributes its properties only: every bucket, the
+        # read mode and the sort order are replaced
+        res = self._commit_files(
+            {
+                "snapshot_id": m["snapshot_id"],
+                "_name": m["_name"],
+                "buckets": {},
+                "properties": m.get("properties", {}),
+            },
+            buckets, sorted(buckets),
+            schema=df.schema, properties=properties,
+            stats_key="n_rows", read_mode="plain",
         )
-        props = dict((m or {}).get("properties", {}))
-        props.update(properties or {})
-        sid, mp = self._commit(
-            buckets, df.schema, props, parent, {"n_rows": n},
-            parent_name=None if m is None else m["_name"],
-        )
-        return CommitResult(sid, mp, sorted(buckets), n, 0, n, props)
+        return dataclasses.replace(res, n_upserts=res.n_rows_after)
 
     # ----------------------------------------------------------------- merge
     def _lineage_cols(self, wide, order_cols, op_col, delete_op):
@@ -2704,22 +2602,30 @@ class SnapshotTable:
         append: bool = False,
         schema: T.StructType | None = None,
         properties=None,
-        stats_key: str = "n_rows",
+        stats_key: str | None = None,
         read_mode: str | None = None,
         order_cols: list[str] | None = None,
         batch_stats: dict[str, Any] | None = None,
         stage_ref: str | None = None,
         schema_evolution: dict[str, Any] | None = None,
     ) -> CommitResult:
-        """The one write→commit tail: fold ``new_files`` into the
-        parent manifest ``m``'s bucket map, count rows from parquet
-        footers (Iceberg file-stats analog — no recompute of the
-        written plan), resolve ``properties`` and CAS-commit.
+        """The one commit tail for every data and metadata commit after
+        ``create``: fold ``new_files`` into the parent manifest ``m``'s
+        bucket map, count rows from parquet footers (Iceberg file-stats
+        analog — no recompute of the written plan), resolve
+        ``properties`` and CAS-commit.
 
         ``append=False`` (copy-on-write): the new files REPLACE the
         file lists of the ``touched`` buckets, and a touched bucket
         left without files is dropped. ``append=True`` (merge-on-read):
         the new files are added to their buckets, nothing is replaced.
+        A full rewrite passes ``m`` with an empty bucket map.
+
+        The footer count is recorded under ``stats_key`` (default
+        ``n_rows``). A commit that adds and replaces no files and names
+        no ``stats_key`` (schema evolution, properties, equality
+        deletes) keeps the parent's stats without reading a footer:
+        its files are the parent's.
 
         ``properties`` may be a callable, evaluated just before the
         atomic commit — callers overlap side computations with the
@@ -2736,8 +2642,13 @@ class SnapshotTable:
             for b in touched:
                 buckets[b] = new_files.get(b, [])
             buckets = {b: f for b, f in buckets.items() if f}
-        with _stage("merge.footer_stats"):
-            n_after = _footer_rows([f for fs in buckets.values() for f in fs])
+        if stats_key is None and not new_files and not touched:
+            stats = dict(m.get("stats", {}))
+            n_after = int(stats.get("n_rows", -1))
+        else:
+            with _stage("merge.footer_stats"):
+                n_after = _footer_rows([f for fs in buckets.values() for f in fs])
+            stats = {stats_key or "n_rows": n_after}
         props = dict(m.get("properties", {}))
         props.update(properties() if callable(properties) else (properties or {}))
         n_up = n_del = 0
@@ -2750,7 +2661,7 @@ class SnapshotTable:
                 schema or T.StructType.fromJson(m["schema"]),
                 props,
                 m["snapshot_id"],
-                {stats_key: n_after},
+                stats,
                 read_mode=read_mode or m.get("read_mode", "plain"),
                 order_cols=order_cols or m.get("order_cols"),
                 parent_name=m["_name"],
@@ -2824,8 +2735,11 @@ class SnapshotTable:
                 # LWW-equivalent. Flip the read mode in a METADATA-ONLY
                 # commit so downstream snapshot-mode-gated paths
                 # (column-stats pruning, range_scan) work without a
-                # rewrite.
-                return self._commit_files(m, {}, [], read_mode="plain")
+                # rewrite. The footers are counted afresh: the raw
+                # multi-version count becomes the plain n_rows.
+                return self._commit_files(
+                    m, {}, [], read_mode="plain", stats_key="n_rows"
+                )
             return None
         df = self.read(buckets=fat, snapshot=m, include_deleted=True)
         new_files = self._write_buckets(df, m["snapshot_id"] + 1, sort_by=sort_by)
@@ -2902,17 +2816,29 @@ class SnapshotTable:
         m = self.current_manifest()
         if m is None:
             raise ValueError(f"table {self.path} does not exist")
-        sid_next = m["snapshot_id"] + 1
-        matched = (
-            self.read(snapshot=m)
-            .filter(predicate)
-            .select(self.key_col, BUCKET_COL)
-            .distinct()
+        dels, n_keys = self._write_eq_deletes(
+            m, self.read(snapshot=m).filter(predicate)
         )
+        if n_keys == 0:
+            return None
+        return self._commit_files(
+            m, {}, [],
+            batch_stats={"n_upserts": 0, "n_deletes": n_keys},
+            schema_evolution={"delete_files": dels},
+        )
+
+    def _write_eq_deletes(
+        self, m: dict[str, Any], rows: DataFrame
+    ) -> tuple[list[dict[str, Any]], int]:
+        """Write the distinct (key, bucket) pairs of ``rows`` as
+        equality-delete files under the next snapshot's epoch dir.
+        Returns the manifest's ``delete_files`` with them appended, and
+        the number of keys written (0: nothing is kept on disk)."""
+        sid_next = m["snapshot_id"] + 1
         out_dir = os.path.join(
             self.path, _DATA, f"s{sid_next:08d}-eqdel-{uuid.uuid4().hex[:8]}"
         )
-        matched.write.parquet(out_dir)
+        rows.select(self.key_col, BUCKET_COL).distinct().write.parquet(out_dir)
         paths = sorted(
             os.path.join(out_dir, fn)
             for fn in os.listdir(out_dir)
@@ -2920,27 +2846,11 @@ class SnapshotTable:
         )
         n_keys = _footer_rows(paths)
         if n_keys == 0:
-            import shutil as _sh
-
-            _sh.rmtree(out_dir, ignore_errors=True)
-            return None
+            shutil.rmtree(out_dir, ignore_errors=True)
         dels = list(m.get("delete_files", [])) + [
             {"path": p, "sid": sid_next} for p in paths
         ]
-        sid, mp = self._commit(
-            {int(b): list(f) for b, f in m["buckets"].items()},
-            T.StructType.fromJson(m["schema"]),
-            dict(m.get("properties", {})), m["snapshot_id"],
-            dict(m.get("stats", {})),
-            read_mode=m.get("read_mode", "plain"),
-            order_cols=m.get("order_cols"), parent_name=m["_name"],
-            schema_evolution={"delete_files": dels},
-        )
-        return CommitResult(
-            sid, mp, [], 0, n_keys,
-            int(m.get("stats", {}).get("n_rows", -1)),
-            m.get("properties", {}),
-        )
+        return dels, n_keys
 
     def update_where(
         self, predicate, assignments: dict, mode: str = "cow"
@@ -3022,23 +2932,7 @@ class SnapshotTable:
             return None
         flat_new = [f for fs in new_files.values() for f in fs]
         n_updated = _footer_rows(flat_new)
-        out_dir = os.path.join(
-            self.path, _DATA, f"s{sid_next:08d}-eqdel-{uuid.uuid4().hex[:8]}"
-        )
-        (
-            self.spark.read.parquet(*flat_new)
-            .select(self.key_col, BUCKET_COL)
-            .distinct()
-            .write.parquet(out_dir)
-        )
-        dpaths = sorted(
-            os.path.join(out_dir, fn)
-            for fn in os.listdir(out_dir)
-            if fn.endswith(".parquet")
-        )
-        dels = list(m.get("delete_files", [])) + [
-            {"path": p, "sid": sid_next} for p in dpaths
-        ]
+        dels, _ = self._write_eq_deletes(m, self.spark.read.parquet(*flat_new))
         res = self._commit_files(
             m, new_files, sorted(new_files), append=True,
             schema_evolution={"delete_files": dels},
@@ -3071,17 +2965,9 @@ class SnapshotTable:
                 props.pop(k, None)
             else:
                 props[k] = v
-        buckets = {int(b): f for b, f in m["buckets"].items()}
-        sid, mp = self._commit(
-            buckets, T.StructType.fromJson(m["schema"]), props,
-            m["snapshot_id"], dict(m.get("stats", {"n_rows": 0})),
-            read_mode=m.get("read_mode", "plain"),
-            order_cols=m.get("order_cols"),
-            parent_name=m["_name"],
-        )
-        return CommitResult(
-            sid, mp, [], 0, 0, m.get("stats", {}).get("n_rows", 0), props
-        )
+        # the new map REPLACES the parent's (a None value removed its
+        # key), so the commit starts from no properties
+        return self._commit_files({**m, "properties": {}}, {}, [], properties=props)
 
     def add_check(self, name: str, expr_sql: str) -> "CommitResult":
         """Register a CHECK constraint; existing LIVE rows must already
@@ -3313,7 +3199,7 @@ class SnapshotTable:
         lock = self._acquire_lock()
         try:
             chain = self.history()
-            if keep_snapshots is not None and self._read_branches():
+            if keep_snapshots is not None and self._load_side(_BRANCHES, {}):
                 raise ValueError(
                     "snapshot expiry with live branches would cut "
                     "manifests a branch still reaches — drop or "
@@ -3323,7 +3209,7 @@ class SnapshotTable:
                 boundary = len(chain) - keep_snapshots
                 # tagged snapshots are retention roots: expiry never
                 # crosses the oldest tag (Iceberg ref-aware expiry)
-                tagged = set(self._read_refs().values())
+                tagged = set(self.refs().values())
                 if tagged:
                     for i, name in enumerate(chain[:boundary]):
                         if self._load_manifest(name)["snapshot_id"] in tagged:
@@ -3333,18 +3219,13 @@ class SnapshotTable:
                 boundary = 0
             if boundary > 0:
                 cut = chain[boundary:]
-                # re-link the oldest kept manifest as the new chain root;
-                # write-tempfile + os.replace so a crash mid-rewrite can
-                # never leave a truncated manifest (which would break
-                # history() and therefore every future commit)
+                # re-link the oldest kept manifest as the new chain root
+                # (atomically: a truncated manifest would break history()
+                # and therefore every future commit)
                 root = self._load_manifest(cut[0])
-                root.pop("_name", None)
                 root["parent_name"] = None
                 root["parent_id"] = -1
-                fd, tmp = tempfile.mkstemp(dir=os.path.join(self.path, _MANIFESTS))
-                with os.fdopen(fd, "w") as f:
-                    json.dump(root, f)
-                os.replace(tmp, os.path.join(self.path, _MANIFESTS, cut[0]))
+                self._rewrite_manifest(root)
                 for name in chain[:boundary]:
                     try:
                         os.unlink(os.path.join(self.path, _MANIFESTS, name))
@@ -3353,65 +3234,24 @@ class SnapshotTable:
                 chain = cut
         finally:
             self._release_lock(lock)
-        referenced: set[str] = set()
         # staged (unpublished) snapshots' and branch chains' files are
-        # NOT orphans; branch heads need a parent walk — their
-        # intermediate commits are off the main chain
-        roots = (
-            chain
-            + list(self._read_staged().values())
-            + list(self._read_branches().values())
-        )
-        seen_m: set[str] = set()
-        while roots:
-            name = roots.pop()
-            if name in seen_m:
-                continue
-            seen_m.add(name)
-            try:
-                m = self._load_manifest(name)
-            except OSError:
-                continue
-            p = m.get("parent_name")
-            if p is not None:
-                roots.append(p)
+        # NOT orphans. Shallow clones reference this table's files by
+        # absolute path: every live clone's reachable manifests are GC
+        # roots too (this is the contract Delta's VACUUM breaks — a
+        # vacuumed source silently corrupts its shallow clones).
+        # Dropped clones fall out of clones() and stop pinning anything.
+        walks = [self._walk_manifests(chain)] + [
+            SnapshotTable(self.spark, c, key_col=self.key_col)._walk_manifests()
+            for c in self.clones()
+        ]
+        referenced: set[str] = set()
+        for m in itertools.chain.from_iterable(walks):
             for files in m["buckets"].values():
                 referenced.update(os.path.realpath(f) for f in files)
             referenced.update(
                 os.path.realpath(d["path"])
                 for d in m.get("delete_files", [])
             )
-        # shallow clones reference this table's files by absolute path:
-        # every live clone's reachable manifests are GC roots too (this
-        # is the contract Delta's VACUUM breaks — a vacuumed source
-        # silently corrupts its shallow clones). Dropped clones fall
-        # out of clones() and stop pinning anything.
-        for cpath in self.clones():
-            ctbl = SnapshotTable(self.spark, cpath, key_col=self.key_col)
-            croots = (
-                list(ctbl.history())
-                + list(ctbl._read_staged().values())
-                + list(ctbl._read_branches().values())
-            )
-            cseen: set[str] = set()
-            while croots:
-                name = croots.pop()
-                if name in cseen:
-                    continue
-                cseen.add(name)
-                try:
-                    m = ctbl._load_manifest(name)
-                except OSError:
-                    continue
-                p = m.get("parent_name")
-                if p is not None:
-                    croots.append(p)
-                for files in m["buckets"].values():
-                    referenced.update(os.path.realpath(f) for f in files)
-                referenced.update(
-                    os.path.realpath(d["path"])
-                    for d in m.get("delete_files", [])
-                )
         data_root = os.path.join(self.path, _DATA)
         removed = kept = 0
         for dirpath, _dirs, files in os.walk(data_root):
@@ -3487,42 +3327,17 @@ class SnapshotTable:
                 f"the clones still reference: {live_clones} — purge and "
                 "materialize (or drop) each clone first"
             )
-        chain_ms = [
-            self._load_manifest(n) for n in self._reachable_manifest_names()
-        ]
-        if self._foreign_files(chain_ms):
+        # main chain + staged (WAP) heads + branch heads, with parent
+        # walks: branch-only commits are NOT on the main chain but
+        # absolutely carry the key — GDPR covers them
+        manifests = list(self._walk_manifests())
+        if self._foreign_files(manifests):
             raise ValueError(
                 "this table is an un-materialized shallow clone — its "
                 "purge would rewrite/unlink files owned by the source "
                 "table; call materialize() first"
             )
 
-        def _reachable() -> list[dict[str, Any]]:
-            # main chain + staged (WAP) heads + branch heads, with
-            # parent walks: branch-only commits are NOT on the main
-            # chain but absolutely carry the key — GDPR covers them
-            stack = (
-                list(self.history())
-                + list(self._read_staged().values())
-                + list(self._read_branches().values())
-            )
-            out, seen = [], set()
-            while stack:
-                n = stack.pop()
-                if n in seen:
-                    continue
-                seen.add(n)
-                try:
-                    m = self._load_manifest(n)
-                except OSError:
-                    continue
-                out.append(m)
-                p = m.get("parent_name")
-                if p is not None:
-                    stack.append(p)
-            return out
-
-        manifests = _reachable()
         nb_specs = sorted(
             {int(m.get("n_buckets", self.n_buckets)) for m in manifests}
         )
@@ -3608,7 +3423,7 @@ class SnapshotTable:
         lock = self._acquire_lock()
         try:
             head_name = self._read_ptr()
-            for m in _reachable():
+            for m in self._walk_manifests():
                 # exact per-manifest adjustment: sum removed over the
                 # old files THIS manifest referenced (pre-remap lists)
                 removed_here = sum(
@@ -3643,15 +3458,7 @@ class SnapshotTable:
                         hashlib.md5(str(value).encode()).hexdigest()
                     )
                     m["purges"] = log
-                name = m.pop("_name")
-                fd, tmp = tempfile.mkstemp(
-                    dir=os.path.join(self.path, _MANIFESTS)
-                )
-                with os.fdopen(fd, "w") as f:
-                    json.dump(m, f)
-                os.replace(
-                    tmp, os.path.join(self.path, _MANIFESTS, name)
-                )
+                self._rewrite_manifest(m)
                 manifests_updated += 1
             for old in changed:
                 try:

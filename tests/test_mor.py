@@ -4,12 +4,21 @@ The scale path for uniform update keys (SCALE.md): no per-batch
 rewrite; correctness must be indistinguishable from copy-on-write.
 """
 
+import datetime as dt
+
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from clinvar_ingest_spark.sources import ChangeLogSource, synthetic_change_log
 from clinvar_ingest_spark.streaming import IngestPipeline
-from clinvar_ingest_spark.tables import SnapshotTable
+from clinvar_ingest_spark.tables import (
+    BUCKET_COL,
+    DELETED_COL,
+    SnapshotTable,
+    bucket_expr,
+)
 
 PAGES = T.StructType(
     [
@@ -124,3 +133,151 @@ def test_mor_schema_evolution(spark, tmp_path):
             assert r["lang"] is not None
         else:
             assert r["lang"] is None  # old delta files read back with NULL
+
+
+# -- what each commit path carries forward on a merge-on-read table ---
+_ROWS_DDL = "url string, warc_ts timestamp, seq long, text string, op string"
+
+
+def _mor_table(spark, path):
+    """A MoR table with deltas over a CoW base, tombstones and one
+    pending equality-delete file."""
+    ts = dt.datetime(2020, 1, 1)
+    t = SnapshotTable(spark, path, "url", 8).create(
+        T.StructType(
+            [
+                T.StructField("url", T.StringType()),
+                T.StructField("warc_ts", T.TimestampType()),
+                T.StructField("seq", T.LongType()),
+                T.StructField("text", T.StringType()),
+            ]
+        )
+    )
+
+    def rows(lo, hi, seq0, op="insert"):
+        return spark.createDataFrame(
+            [
+                (f"u{i}", ts + dt.timedelta(seconds=seq0 + i), seq0 + i,
+                 f"t{seq0 + i}", op)
+                for i in range(lo, hi)
+            ],
+            _ROWS_DDL,
+        )
+
+    t.merge_upsert(rows(0, 30, 0))
+    t.merge_upsert(rows(10, 40, 100), merge_mode="mor")
+    t.merge_upsert(rows(0, 3, 200, op="delete"), merge_mode="mor")
+    t.delete_where(F.col("url") == "u20", mode="delta")
+    return t
+
+
+_META_OPS = {
+    "rename_column": lambda t: t.rename_column("text", "body"),
+    "add_column": lambda t: t.add_column("extra", "string", default="d"),
+    "add_check": lambda t: t.add_check("seq_nonneg", "seq >= 0"),
+    "delete_where_delta": lambda t: t.delete_where(
+        F.col("url") == "u25", mode="delta"
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_META_OPS))
+def test_metadata_commit_on_mor_keeps_files_stats_and_read_mode(
+    spark, tmp_path, op
+):
+    """A commit that writes no data file copies the parent's file lists,
+    stats (MoR's raw ``n_rows_raw`` count, read without any footer),
+    read mode, sort order and pending equality deletes forward."""
+    t = _mor_table(spark, str(tmp_path / "t"))
+    parent = t.current_manifest()
+    assert parent["read_mode"] == "lww" and "n_rows_raw" in parent["stats"]
+    before = sorted(r["url"] for r in t.read().collect())
+
+    res = _META_OPS[op](t)
+
+    m = t.current_manifest()
+    assert m["snapshot_id"] == parent["snapshot_id"] + 1
+    assert m["read_mode"] == "lww"
+    assert m["order_cols"] == parent["order_cols"]
+    assert m["stats"] == parent["stats"]
+    assert m["buckets"] == parent["buckets"]
+    assert m["delete_files"][: len(parent["delete_files"])] == (
+        parent["delete_files"]
+    )
+    # a MoR table records no resolved row count: the result says so
+    # with -1, the same on every metadata-only path
+    assert res.n_rows_after == -1
+    assert res.touched_buckets == [] and res.n_upserts == 0
+    after = sorted(r["url"] for r in t.read().collect())
+    if op == "delete_where_delta":
+        assert res.n_deletes == 1
+        assert len(m["delete_files"]) > len(parent["delete_files"])
+        assert after == [u for u in before if u != "u25"]
+    else:
+        assert res.n_deletes == 0
+        assert m["delete_files"] == parent["delete_files"]
+        assert after == before
+
+
+_REWRITE_OPS = {
+    "overwrite": lambda t: t.overwrite(
+        t.read(include_deleted=True).drop(BUCKET_COL)
+    ),
+    "rebucket": lambda t: t.rebucket(4),
+    "vacuum_tombstones": lambda t: t.vacuum_tombstones(dt.datetime(2021, 1, 1)),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_REWRITE_OPS))
+def test_full_rewrite_of_mor_table_commits_plain_with_footer_count(
+    spark, tmp_path, op
+):
+    t = _mor_table(spark, str(tmp_path / "t"))
+    live = sorted(r["url"] for r in t.read().collect())
+
+    res = _REWRITE_OPS[op](t)
+
+    m = t.current_manifest()
+    assert m["read_mode"] == "plain"
+    files = [f for fs in m["buckets"].values() for f in fs]
+    footer = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    assert res.n_rows_after == footer == m["stats"]["n_rows"]
+    assert res.touched_buckets == sorted(int(b) for b in m["buckets"])
+    assert sorted(r["url"] for r in t.read().collect()) == live
+    if op == "vacuum_tombstones":
+        assert footer == len(live)  # every tombstone was dropped
+
+
+def test_overwrite_creates_missing_table_with_write_job_only(spark, tmp_path):
+    """overwrite() on a path with no table commits snapshot 0, and runs
+    no Spark job besides its bucket write (row counts come from the
+    writer, not from a count() over the written files)."""
+    df = spark.createDataFrame(
+        [(f"u{i}", dt.datetime(2020, 1, 1), i, "x", "insert") for i in range(20)],
+        _ROWS_DDL,
+    ).drop("op")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, fn):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        return len(tracker.getJobIdsForGroup(group)), out
+
+    probe = SnapshotTable(spark, str(tmp_path / "probe"), "url", 4)
+    wide = df.withColumn(BUCKET_COL, bucket_expr("url", 4)).withColumn(
+        DELETED_COL, F.lit(False)
+    )
+    write_jobs, _ = jobs("probe-write", lambda: probe._write_buckets(wide, 0))
+
+    t = SnapshotTable(spark, str(tmp_path / "new"), "url", 4)
+    n_jobs, res = jobs("overwrite", lambda: t.overwrite(df))
+    assert n_jobs == write_jobs
+    assert res.snapshot_id == 0
+    assert res.n_rows_after == res.n_upserts == 20
+    assert t.current_manifest()["stats"] == {"n_rows": 20}
+    assert t.current_manifest()["parent_name"] is None

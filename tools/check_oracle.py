@@ -6,11 +6,16 @@ Runs each ``__spark_entry__.queries()[name]`` on Spark and the matching
 compares row count, column names, and order-insensitive values
 (column-name-sorted, row-sorted, floats rounded).
 
-Usage: python tools/check_oracle.py [name ...] [--sf DIR]
+Usage: python tools/check_oracle.py [pattern ...] [--sf=DIR]
+
+Each pattern is a query name or a shell-style glob over the registered
+names (``'cdc_*'``); a pattern that matches no registered query counts
+as a failure, so a typo cannot pass as "0/0 ok".
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import sys
 
@@ -66,8 +71,15 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = args or list(qs)
-    failed = []
+    names: list[str] = []
+    unmatched = []
+    for pat in args or ["*"]:
+        hits = [n for n in qs if fnmatch.fnmatchcase(n, pat)]
+        if not hits:
+            print(f"{pat:34s} NO REGISTERED QUERY MATCHES")
+            unmatched.append(pat)
+        names += [n for n in hits if n not in names]
+    failed = list(unmatched)
     for name in names:
         try:
             sdf = qs[name](spark, sf_dir)
@@ -133,7 +145,8 @@ def main():
             failed.append(name)
         else:
             print(f"{name:34s} rows={len(sv):6d} MATCH")
-    print(f"\n{len(names) - len(failed)}/{len(names)} ok")
+    total = len(names) + len(unmatched)
+    print(f"\n{total - len(failed)}/{total} ok")
     return 1 if failed else 0
 
 
