@@ -185,7 +185,6 @@ def run_ingest(
     st["merge.plan"] = round(
         st.get("batch.merge", 0.0)
         - st.get("merge.write", 0.0)
-        - st.get("merge.footer_stats", 0.0)
         - st.get("merge.commit", 0.0),
         3,
     )

@@ -1,7 +1,7 @@
 """Driver-side stage clock for the ingest path.
 
-Every stage of a batch (profile scan, merge+write action, footer stats,
-commit, sidecar writes) is a *blocking driver call*, so wall-clock
+Every stage of a batch (profile scan, merge+write action, commit,
+sidecar writes) is a *blocking driver call*, so wall-clock
 context managers on the driver capture the true per-stage split without
 touching the executor path. The accumulator makes per-stage time part of
 the bench artifact (``BENCH_r{N}.json`` ingest block), so a throughput

@@ -160,7 +160,7 @@ class IngestPipeline:
         ],
     }
 
-    def _side_write(self, kind: str, batch_id: int, rows: list[dict], schema: str):
+    def _side_write(self, kind: str, batch_id: int, rows: list[dict]):
         """Sidecar rows are a handful per batch — written driver-side via
         pyarrow (a Spark job for 4 rows costs seconds of scheduling).
         Layout stays Spark-readable parquet, idempotent per batch_id."""
@@ -176,6 +176,29 @@ class IngestPipeline:
              for name, typ in fields}
         )
         pq.write_table(table, f"{path}/part-0.parquet")
+
+    @staticmethod
+    def _sidecar_rows(
+        batch_id: int, part_ranges: list[dict], snapshot_id: int,
+        wall: float, lag: int,
+    ) -> dict[str, list[dict]]:
+        """The lineage rows (one per source partition) and the metrics
+        row of one committed batch, keyed by sidecar kind."""
+        n_events = sum(pr["n_rows"] for pr in part_ranges)
+        return {
+            "lineage": [
+                {"batch_id": batch_id, "part": pr["part"],
+                 "seq_lo": pr["seq_lo"], "seq_hi": pr["seq_hi"],
+                 "snapshot_id": snapshot_id, "n_rows": pr["n_rows"]}
+                for pr in part_ranges
+            ],
+            "metrics": [
+                {"batch_id": batch_id, "n_events": n_events,
+                 "wall_sec": wall,
+                 "events_per_sec": n_events / wall if wall > 0 else 0.0,
+                 "lag_events": lag}
+            ],
+        }
 
     def ensure_sidecars(self) -> list[int]:
         """Self-heal sidecars: rebuild lineage/metrics rows for any
@@ -212,23 +235,10 @@ class IngestPipeline:
             if lineage_ok and metrics_ok:
                 continue
             prs = self.source.part_ranges(self.source.batch(OffsetRange(lo, hi)))
-            if not lineage_ok:
-                self._side_write(
-                    "lineage", bid,
-                    [{"batch_id": bid, "part": pr["part"],
-                      "seq_lo": pr["seq_lo"], "seq_hi": pr["seq_hi"],
-                      "snapshot_id": snap, "n_rows": pr["n_rows"]}
-                     for pr in prs],
-                    "",
-                )
-            if not metrics_ok:
-                n_events = sum(pr["n_rows"] for pr in prs)
-                self._side_write(
-                    "metrics", bid,
-                    [{"batch_id": bid, "n_events": n_events, "wall_sec": 0.0,
-                      "events_per_sec": 0.0, "lag_events": end - hi}],
-                    "",
-                )
+            side = self._sidecar_rows(bid, prs, snap, 0.0, end - hi)
+            for kind, ok in (("lineage", lineage_ok), ("metrics", metrics_ok)):
+                if not ok:
+                    self._side_write(kind, bid, side[kind])
             healed.append(bid)
         return healed
 
@@ -302,7 +312,7 @@ class IngestPipeline:
             # scan per batch, only when dlq is on; the write is
             # idempotent per batch dir under the same HWM fence as the
             # data commit (fenced batches return above, never here).
-            from clinvar_ingest_spark.tables import _footer_rows
+            from clinvar_ingest_spark.tables import _parquet_rows
 
             reason = self.invalid_reason()
             dlq_path = f"{self.target.path}/_dlq/batch={batch_id}"
@@ -313,7 +323,7 @@ class IngestPipeline:
                 import glob as _glob
 
                 parts = _glob.glob(f"{dlq_path}/part-*.parquet")
-                n_dead = _footer_rows(parts)
+                n_dead = _parquet_rows(parts)
                 if not parts:
                     # keep _dlq free of empty (_SUCCESS-only) batch
                     # dirs so dead_letters() always infers a schema
@@ -344,7 +354,7 @@ class IngestPipeline:
         #   leaves the serial floor entirely.
         local_pool = None
         fut = _prefetched_profile if not self.dlq else None
-        bootstrap = not self.dlq and not any(m_cur.get("buckets") or {})
+        bootstrap = not self.dlq and not m_cur.get("buckets")
         if bootstrap and fut is None:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -457,48 +467,19 @@ class IngestPipeline:
         wall = time.monotonic() - t0
         part_ranges = folded["part_ranges"]
         n_up, n_del = folded["n_upserts"], folded["n_deletes"]
-        n_events = sum(pr["n_rows"] for pr in part_ranges)
 
         # Sidecar tables are re-derivable from the manifest chain; their
         # writes are idempotent per batch_id (overwrite of batch=N dir),
         # so a crash between commit and sidecar write self-heals on the
         # next run_batch / ensure_sidecars call.
         with stage("batch.sidecars"):
-            self._side_write(
-                "lineage",
-                batch_id,
-                [
-                    {
-                        "batch_id": batch_id,
-                        "part": pr["part"],
-                        "seq_lo": pr["seq_lo"],
-                        "seq_hi": pr["seq_hi"],
-                        "snapshot_id": res.snapshot_id,
-                        "n_rows": pr["n_rows"],
-                    }
-                    for pr in part_ranges
-                ],
-                "batch_id long, part int, seq_lo long, seq_hi long, "
-                "snapshot_id long, n_rows long",
-            )
-            eps = n_events / wall if wall > 0 else 0.0
             end = self.source.max_seq() if log_end_seq is None else log_end_seq
-            lag = end - rng.hi
-            self._side_write(
-                "metrics",
-                batch_id,
-                [
-                    {
-                        "batch_id": batch_id,
-                        "n_events": n_events,
-                        "wall_sec": wall,
-                        "events_per_sec": eps,
-                        "lag_events": lag,
-                    }
-                ],
-                "batch_id long, n_events long, wall_sec double, "
-                "events_per_sec double, lag_events long",
+            side = self._sidecar_rows(
+                batch_id, part_ranges, res.snapshot_id, wall, end - rng.hi
             )
+            for kind, rows in side.items():
+                self._side_write(kind, batch_id, rows)
+        eps = side["metrics"][0]["events_per_sec"]
         if self.derived:
             self.refresh_derived()
         return BatchReport(

@@ -7,7 +7,10 @@ on plain Parquet + JSON manifests:
 
 * data files are **immutable**; a *snapshot* is a JSON manifest mapping
   ``bucket -> [parquet files]`` (files may live in older snapshots'
-  directories — commits never copy untouched buckets),
+  directories — commits never copy untouched buckets) and
+  ``bucket -> rows`` (``bucket_rows``, the Iceberg manifest record-count
+  analog: every commit derives its row count from it, never from a
+  footer),
 * the current snapshot is a one-line pointer file swapped atomically
   with ``os.replace`` (same effect as an Iceberg catalog pointer swap),
 * a MERGE rewrites **only the buckets touched by the batch** — the
@@ -34,7 +37,6 @@ import os
 import re
 import shutil
 import tempfile
-import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -112,50 +114,6 @@ def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
-# Per-file row counts, keyed by path (Iceberg manifest file-stats
-# analog). Data files are immutable — written exactly once at
-# uuid-unique final paths, visibility controlled by the manifest commit
-# — so a count observed once holds for the file's lifetime. The direct
-# writers seed this from counts they tracked while writing (zero extra
-# IO); _footer_rows then only opens footers of files written by OTHER
-# processes. This takes the footer scan off every commit's driver-side
-# serial path: under MoR the referenced file set GROWS per batch
-# (batch k re-counted k·n_buckets footers — measured 1.7-2.2 s per
-# 8-batch leg at round-6 start), and at 10^5 files a commit would
-# otherwise re-open the world.
-_FILE_ROWS: dict[str, int] = {}
-# Bound the cache so a long-lived ops driver (ingest + compact + vacuum
-# for months) cannot grow it without limit: entries are only ever an
-# optimization — a missing path falls back to a footer read — so
-# eviction is always safe for correctness. Recency order: a put (or a
-# _footer_rows hit) re-inserts the key at the END of the dict, so the
-# oldest-quarter eviction drops least-recently-USED entries, not the
-# longest-lived — a live table's stable files stay cached while dead
-# (vacuumed/dropped) entries age out. 2^18 entries ≈ tens of MB, far
-# above any single commit's referenced-file count.
-_FILE_ROWS_CAP = 1 << 18
-_FILE_ROWS_LOCK = threading.Lock()
-
-
-def _file_rows_put(path: str, n: int) -> None:
-    # lock: _footer_rows fans puts out over a thread pool; eviction's
-    # check-list-delete must not interleave with another thread's
-    with _FILE_ROWS_LOCK:
-        if len(_FILE_ROWS) >= _FILE_ROWS_CAP:
-            for k in list(itertools.islice(_FILE_ROWS, _FILE_ROWS_CAP // 4)):
-                del _FILE_ROWS[k]
-        _FILE_ROWS.pop(path, None)  # re-insert at the end (recency)
-        _FILE_ROWS[path] = n
-
-
-def _file_rows_forget(path: str) -> None:
-    """Drop a deleted file's cached count (vacuum/drop hygiene: a
-    future writer reusing the path must never see a stale count)."""
-    with _FILE_ROWS_LOCK:
-        _FILE_ROWS.pop(path, None)
-        _FILE_ROWS.pop(os.path.realpath(path), None)
-
-
 def _atomic_write(path: str, text: str) -> None:
     """Replace ``path`` with ``text`` atomically: write a temp file in
     the target's directory, then ``os.replace`` it over the target — a
@@ -167,39 +125,22 @@ def _atomic_write(path: str, text: str) -> None:
     os.replace(tmp, path)
 
 
-def _footer_rows(files: list[str]) -> int:
-    """Row count for ``files`` — from the writer-seeded count map when
-    known, parquet footers otherwise; metadata-only, never recomputes
-    the plan. Footer opens are tiny IO-bound reads fanned out over a
-    thread pool: they sit on the DRIVER-side serial path of every
-    commit, so at high parallelism they would otherwise dominate the
-    Amdahl floor. Counts accumulate in a LOCAL map so a concurrent
-    cache eviction can never drop an entry this call still needs."""
-    from concurrent.futures import ThreadPoolExecutor
-
+def _parquet_rows(files: list[str]) -> int:
+    """Row count of parquet files written by Spark (equality deletes,
+    dead letters), whose writers report no per-file counts — summed
+    from the footers. Files this module writes itself carry their
+    counts in the manifest's ``bucket_rows`` instead."""
     import pyarrow.parquet as pq
 
-    counts: dict[str, int] = {}
-    missing: list[str] = []
-    with _FILE_ROWS_LOCK:  # one acquisition refreshes every hit's recency
-        for f in files:
-            n = _FILE_ROWS.pop(f, None)
-            if n is None:
-                missing.append(f)
-            else:
-                counts[f] = _FILE_ROWS[f] = n  # re-insert at the end
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
-    def _read(f: str) -> tuple[str, int]:
-        n = pq.ParquetFile(f).metadata.num_rows
-        _file_rows_put(f, n)
-        return f, n
 
-    if len(missing) <= 4:
-        counts.update(_read(f) for f in missing)
-    else:
-        with ThreadPoolExecutor(min(16, len(missing))) as ex:
-            counts.update(ex.map(_read, missing))
-    return sum(counts[f] for f in files)
+def _bucket_rows(m: dict[str, Any]) -> dict[int, int]:
+    """Manifest ``m``'s per-bucket row totals, int-keyed. A manifest
+    written before the totals were recorded counts its footers once."""
+    if "bucket_rows" in m:
+        return {int(b): int(n) for b, n in m["bucket_rows"].items()}
+    return {int(b): _parquet_rows(fs) for b, fs in m["buckets"].items()}
 
 
 @dataclass
@@ -399,7 +340,6 @@ class SnapshotTable:
             if f not in reachable:
                 try:
                     os.unlink(os.path.join(d, f))
-                    _file_rows_forget(os.path.join(d, f))
                 except OSError:
                     pass
 
@@ -1026,7 +966,7 @@ class SnapshotTable:
 
     def rollback_to(self, snapshot_id: int) -> CommitResult:
         """Iceberg ``rollback_to_snapshot`` analog: a METADATA-ONLY
-        commit whose content — file lists, schema, evolution log, read
+        commit whose content — file lists, row totals, schema, evolution log, read
         mode, sort order, bucket spec, properties (so CHECK constraints
         and retention settings revert too) — is the target snapshot's,
         with parent = the CURRENT head. No data file is touched or
@@ -1066,6 +1006,7 @@ class SnapshotTable:
                     "adds": list(t.get("adds", [])),
                     "delete_files": list(t.get("delete_files", [])),
                 },
+                bucket_rows=_bucket_rows(t),
             )
         except BaseException:
             self.n_buckets = old_n
@@ -1094,10 +1035,10 @@ class SnapshotTable:
         old_n = self.n_buckets
         self.n_buckets = new_n_buckets
         try:
-            new_files = self._write_buckets(df, m["snapshot_id"] + 1)
+            new_files, new_rows = self._write_buckets(df, m["snapshot_id"] + 1)
             # every bucket is replaced
             return self._commit_files(
-                {**m, "buckets": {}}, new_files, sorted(new_files),
+                {**m, "buckets": {}}, new_files, new_rows, sorted(new_files),
                 stats_key="n_rows", read_mode="plain",
             )
         except BaseException:
@@ -1152,7 +1093,7 @@ class SnapshotTable:
         log = list(m.get("renames", []))
         log.append({"sid": m["snapshot_id"] + 1, "from": old, "to": new})
         return self._commit_files(
-            m, {}, [], schema=new_schema, schema_evolution={"renames": log}
+            m, {}, {}, [], schema=new_schema, schema_evolution={"renames": log}
         )
 
     def drop_column(self, name: str) -> CommitResult:
@@ -1176,7 +1117,7 @@ class SnapshotTable:
         dropped = list(m.get("dropped", []))
         dropped.append(name)
         return self._commit_files(
-            m, {}, [], schema=new_schema, schema_evolution={"dropped": dropped}
+            m, {}, {}, [], schema=new_schema, schema_evolution={"dropped": dropped}
         )
 
     def add_column(
@@ -1230,7 +1171,7 @@ class SnapshotTable:
             }
         )
         return self._commit_files(
-            m, {}, [], schema=new_schema, schema_evolution={"adds": log}
+            m, {}, {}, [], schema=new_schema, schema_evolution={"adds": log}
         )
 
     def widen_column(self, name: str, new_type) -> CommitResult:
@@ -1281,7 +1222,7 @@ class SnapshotTable:
             }
         )
         return self._commit_files(
-            m, {}, [], schema=new_schema, schema_evolution={"widens": log}
+            m, {}, {}, [], schema=new_schema, schema_evolution={"widens": log}
         )
 
     @staticmethod
@@ -1639,8 +1580,12 @@ class SnapshotTable:
         parent_name: str | None = None,
         schema_evolution: dict[str, Any] | None = None,
         stage_ref: str | None = None,
+        bucket_rows: dict[int, int] | None = None,
     ) -> tuple[int, str]:
         """Commit = CAS on the pointer (Iceberg catalog analog).
+
+        ``bucket_rows`` holds the row total of each bucket in
+        ``buckets``; only a commit with no buckets may omit it.
 
         ``stage_ref``: write-audit-publish staging — the manifest is
         written and registered under ``_staged.json[stage_ref]`` but
@@ -1687,6 +1632,9 @@ class SnapshotTable:
             "n_buckets": self.n_buckets,
             "schema": schema.jsonValue(),
             "buckets": {str(b): f for b, f in sorted(buckets.items())},
+            "bucket_rows": {
+                str(b): n for b, n in sorted((bucket_rows or {}).items())
+            },
             "properties": properties,
             "stats": stats,
             "read_mode": read_mode,
@@ -1986,6 +1934,9 @@ class SnapshotTable:
                     b: [os.path.realpath(f) for f in files]
                     for b, files in m["buckets"].items()
                 },
+                "bucket_rows": {
+                    str(b): n for b, n in sorted(_bucket_rows(m).items())
+                },
                 "properties": {
                     **m.get("properties", {}),
                     "cloned_from": os.path.realpath(self.path),
@@ -2140,8 +2091,10 @@ class SnapshotTable:
     def _write_buckets(
         self, df: DataFrame, snapshot_hint: int,
         sort_by: list[str] | None = None,
-    ) -> dict[int, list[str]]:
+    ) -> tuple[dict[int, list[str]], dict[int, int]]:
         """Write df (already carrying BUCKET_COL) as one file per bucket.
+        Returns the new files and the rows written, both by bucket —
+        the counts :meth:`_commit_files` records as ``bucket_rows``.
 
         A DIRECT write, the Iceberg-writer shape: the explicit
         repartition on BUCKET_COL puts a bucket wholly in one task,
@@ -2221,13 +2174,12 @@ class SnapshotTable:
             .collect()
         )
         buckets: dict[int, list[str]] = {}
+        counts: dict[int, int] = {}
         for r in rows:
-            buckets.setdefault(int(r["bucket"]), []).append(r["path"])
-            # seed the commit-time row-count map: the writer already
-            # knows every new file's row count, so the commit never
-            # re-opens footers it just wrote
-            _file_rows_put(r["path"], int(r["n_rows"]))
-        return {b: sorted(fs) for b, fs in buckets.items()}
+            b = int(r["bucket"])
+            buckets.setdefault(b, []).append(r["path"])
+            counts[b] = counts.get(b, 0) + int(r["n_rows"])
+        return {b: sorted(fs) for b, fs in buckets.items()}, counts
 
     def overwrite(self, df: DataFrame, properties: dict[str, Any] | None = None):
         """Full rewrite (CTAS analog: create_tables.py:224); also
@@ -2238,7 +2190,7 @@ class SnapshotTable:
         if DELETED_COL not in df.columns:
             df = df.withColumn(DELETED_COL, F.lit(False))
         os.makedirs(self.path, exist_ok=True)
-        buckets = self._write_buckets(df, m["snapshot_id"] + 1)
+        buckets, rows = self._write_buckets(df, m["snapshot_id"] + 1)
         # the parent contributes its properties only: every bucket, the
         # read mode and the sort order are replaced
         res = self._commit_files(
@@ -2248,7 +2200,7 @@ class SnapshotTable:
                 "buckets": {},
                 "properties": m.get("properties", {}),
             },
-            buckets, sorted(buckets),
+            buckets, rows, sorted(buckets),
             schema=df.schema, properties=properties,
             stats_key="n_rows", read_mode="plain",
         )
@@ -2566,13 +2518,13 @@ class SnapshotTable:
             + [T.StructField(DELETED_COL, T.BooleanType())]
         )
         with _stage("merge.write"):
-            new_files = (
+            new_files, new_rows = (
                 self._write_buckets(
                     survivors.select(*data_cols, DELETED_COL),
                     m["snapshot_id"] + 1,
                 )
                 if (touched is None or touched)
-                else {}
+                else ({}, {})
             )
         # the CoW/MoR differences are data: MoR APPENDS its deltas,
         # counts raw (multi-version) rows and switches reads to the LWW
@@ -2581,7 +2533,7 @@ class SnapshotTable:
         # CoW batch on a MoR table resolves only the touched buckets,
         # the rest may still be multi-version
         return self._commit_files(
-            m, new_files,
+            m, new_files, new_rows,
             sorted(new_files) if touched is None else touched,
             append=mor,
             schema=evolved,
@@ -2597,6 +2549,7 @@ class SnapshotTable:
         self,
         m: dict[str, Any],
         new_files: dict[int, list[str]],
+        new_rows: dict[int, int],
         touched: list[int],
         *,
         append: bool = False,
@@ -2610,22 +2563,25 @@ class SnapshotTable:
         schema_evolution: dict[str, Any] | None = None,
     ) -> CommitResult:
         """The one commit tail for every data and metadata commit after
-        ``create``: fold ``new_files`` into the parent manifest ``m``'s
-        bucket map, count rows from parquet footers (Iceberg file-stats
-        analog — no recompute of the written plan), resolve
-        ``properties`` and CAS-commit.
+        ``create``: fold ``new_files`` and their per-bucket row counts
+        ``new_rows`` (as :meth:`_write_buckets` returns them) into the
+        parent manifest ``m``'s ``buckets`` and ``bucket_rows``, resolve
+        ``properties`` and CAS-commit. No footer is read: the row count
+        is the sum of the bucket totals (Iceberg manifest record-count
+        analog).
 
         ``append=False`` (copy-on-write): the new files REPLACE the
-        file lists of the ``touched`` buckets, and a touched bucket
-        left without files is dropped. ``append=True`` (merge-on-read):
-        the new files are added to their buckets, nothing is replaced.
-        A full rewrite passes ``m`` with an empty bucket map.
+        file lists and totals of the ``touched`` buckets, and a touched
+        bucket left without files is dropped. ``append=True``
+        (merge-on-read): the new files and rows are added to their
+        buckets, nothing is replaced. Untouched buckets keep the
+        parent's totals. A full rewrite passes ``m`` with an empty
+        bucket map.
 
-        The footer count is recorded under ``stats_key`` (default
+        The row count is recorded under ``stats_key`` (default
         ``n_rows``). A commit that adds and replaces no files and names
         no ``stats_key`` (schema evolution, properties, equality
-        deletes) keeps the parent's stats without reading a footer:
-        its files are the parent's.
+        deletes) keeps the parent's stats: its files are the parent's.
 
         ``properties`` may be a callable, evaluated just before the
         atomic commit — callers overlap side computations with the
@@ -2635,19 +2591,22 @@ class SnapshotTable:
         ``schema``, ``read_mode`` and ``order_cols`` default to the
         parent's."""
         buckets = {int(b): list(f) for b, f in m["buckets"].items()}
+        rows = _bucket_rows(m)
         if append:
             for b, fs in new_files.items():
                 buckets[b] = buckets.get(b, []) + fs
+                rows[b] = rows.get(b, 0) + new_rows[b]
         else:
             for b in touched:
                 buckets[b] = new_files.get(b, [])
+                rows[b] = new_rows.get(b, 0)
             buckets = {b: f for b, f in buckets.items() if f}
+        rows = {b: rows[b] for b in buckets}
         if stats_key is None and not new_files and not touched:
             stats = dict(m.get("stats", {}))
             n_after = int(stats.get("n_rows", -1))
         else:
-            with _stage("merge.footer_stats"):
-                n_after = _footer_rows([f for fs in buckets.values() for f in fs])
+            n_after = sum(rows.values())
             stats = {stats_key or "n_rows": n_after}
         props = dict(m.get("properties", {}))
         props.update(properties() if callable(properties) else (properties or {}))
@@ -2667,6 +2626,7 @@ class SnapshotTable:
                 parent_name=m["_name"],
                 schema_evolution=schema_evolution,
                 stage_ref=stage_ref,
+                bucket_rows=rows,
             )
         return CommitResult(sid, mp, list(touched), n_up, n_del, n_after, props)
 
@@ -2735,20 +2695,22 @@ class SnapshotTable:
                 # LWW-equivalent. Flip the read mode in a METADATA-ONLY
                 # commit so downstream snapshot-mode-gated paths
                 # (column-stats pruning, range_scan) work without a
-                # rewrite. The footers are counted afresh: the raw
-                # multi-version count becomes the plain n_rows.
+                # rewrite. The raw multi-version count (the bucket
+                # totals) becomes the plain n_rows.
                 return self._commit_files(
-                    m, {}, [], read_mode="plain", stats_key="n_rows"
+                    m, {}, {}, [], read_mode="plain", stats_key="n_rows"
                 )
             return None
         df = self.read(buckets=fat, snapshot=m, include_deleted=True)
-        new_files = self._write_buckets(df, m["snapshot_id"] + 1, sort_by=sort_by)
+        new_files, new_rows = self._write_buckets(
+            df, m["snapshot_id"] + 1, sort_by=sort_by
+        )
         # MoR resolution: read() LWW-resolved the fat buckets before the
         # rewrite; single-file buckets hold one version per key by
         # construction (each delta file is one batch's deduped winners),
         # so full compaction returns the table to plain-scan reads.
         return self._commit_files(
-            m, new_files, fat,
+            m, new_files, new_rows, fat,
             read_mode="plain" if max_files_per_bucket == 1 else None,
             schema_evolution={"delete_files": []} if dels else None,
         )
@@ -2822,7 +2784,7 @@ class SnapshotTable:
         if n_keys == 0:
             return None
         return self._commit_files(
-            m, {}, [],
+            m, {}, {}, [],
             batch_stats={"n_upserts": 0, "n_deletes": n_keys},
             schema_evolution={"delete_files": dels},
         )
@@ -2844,7 +2806,7 @@ class SnapshotTable:
             for fn in os.listdir(out_dir)
             if fn.endswith(".parquet")
         )
-        n_keys = _footer_rows(paths)
+        n_keys = _parquet_rows(paths)
         if n_keys == 0:
             shutil.rmtree(out_dir, ignore_errors=True)
         dels = list(m.get("delete_files", [])) + [
@@ -2925,22 +2887,21 @@ class SnapshotTable:
         out_cols = [
             f.name for f in target_schema.fields if f.name != BUCKET_COL
         ]
-        new_files = self._write_buckets(
+        new_files, new_rows = self._write_buckets(
             upd.select(*out_cols, BUCKET_COL), sid_next
         )
         if not new_files:
             return None
         flat_new = [f for fs in new_files.values() for f in fs]
-        n_updated = _footer_rows(flat_new)
         dels, _ = self._write_eq_deletes(m, self.spark.read.parquet(*flat_new))
         res = self._commit_files(
-            m, new_files, sorted(new_files), append=True,
+            m, new_files, new_rows, sorted(new_files), append=True,
             schema_evolution={"delete_files": dels},
         )
         # the update changes no key's liveness: report the parent's
-        # live-row count, not the raw (pre-anti-join) footer count
+        # live-row count, not the raw (pre-anti-join) bucket totals
         return dataclasses.replace(
-            res, n_upserts=n_updated,
+            res, n_upserts=sum(new_rows.values()),
             n_rows_after=int(m.get("stats", {}).get("n_rows", -1)),
         )
 
@@ -2967,7 +2928,9 @@ class SnapshotTable:
                 props[k] = v
         # the new map REPLACES the parent's (a None value removed its
         # key), so the commit starts from no properties
-        return self._commit_files({**m, "properties": {}}, {}, [], properties=props)
+        return self._commit_files(
+            {**m, "properties": {}}, {}, {}, [], properties=props
+        )
 
     def add_check(self, name: str, expr_sql: str) -> "CommitResult":
         """Register a CHECK constraint; existing LIVE rows must already
@@ -3151,10 +3114,10 @@ class SnapshotTable:
             f.name for f in T.StructType.fromJson(m["schema"]).fields
             if f.name != BUCKET_COL
         ]
-        new_files = self._write_buckets(
+        new_files, new_rows = self._write_buckets(
             df.select(*out_cols, BUCKET_COL), m["snapshot_id"] + 1
         )
-        return self._commit_files(m, new_files, touched)
+        return self._commit_files(m, new_files, new_rows, touched)
 
     def vacuum_tombstones(self, watermark_ts, ts_col: str = "warc_ts") -> CommitResult:
         """GC tombstones older than a watermark.
@@ -3263,7 +3226,6 @@ class SnapshotTable:
                     try:
                         os.unlink(full)
                         removed += 1
-                        _file_rows_forget(full)
                     except OSError:
                         pass
         # sweep now-empty snapshot dirs
@@ -3293,13 +3255,14 @@ class SnapshotTable:
         key are dropped. Under the commit lock the manifest chain is
         re-resolved (a commit that landed mid-rewrite and copied old
         file refs forward still gets remapped), every manifest's bucket
-        lists are swapped old→new with ``n_rows`` adjusted exactly, the
-        head manifest logs an md5 audit entry (never the key itself),
-        and only then are the old files unlinked. Bloom sidecars keep
-        irreversible hashed bits only and stay conservative ("maybe
-        contains" → bucket read finds nothing), so they need no
-        rebuild. Keys re-inserted by commits AFTER the purge began are
-        new data and are not covered — re-run to purge them.
+        lists are swapped old→new with ``bucket_rows`` and the row-count
+        stat adjusted exactly, the head manifest logs an md5 audit entry
+        (never the key itself), and only then are the old files
+        unlinked. Bloom sidecars keep irreversible hashed bits only and
+        stay conservative ("maybe contains" → bucket read finds
+        nothing), so they need no rebuild. Keys re-inserted by commits
+        AFTER the purge began are new data and are not covered — re-run
+        to purge them.
 
         scale: one tiny Spark job computes the bucket per distinct
         bucket spec (≤ #specs rows collected); the rewrite is one task
@@ -3424,14 +3387,9 @@ class SnapshotTable:
         try:
             head_name = self._read_ptr()
             for m in self._walk_manifests():
-                # exact per-manifest adjustment: sum removed over the
-                # old files THIS manifest referenced (pre-remap lists)
-                removed_here = sum(
-                    rewrites[f][1]
-                    for fs in m["buckets"].values()
-                    for f in fs
-                    if f in rewrites
-                )
+                # exact per-bucket adjustment: each old file THIS
+                # manifest referenced gives up its removed rows
+                rows = _bucket_rows(m)
                 new_buckets: dict[str, list[str]] = {}
                 touched = False
                 for b, files in m["buckets"].items():
@@ -3439,6 +3397,7 @@ class SnapshotTable:
                     for f in files:
                         if f in changed:
                             touched = True
+                            rows[int(b)] -= rewrites[f][1]
                             if changed[f] is not None:
                                 kept_files.append(changed[f])
                         else:
@@ -3448,9 +3407,13 @@ class SnapshotTable:
                 if not touched and m["_name"] != head_name:
                     continue
                 m["buckets"] = new_buckets
+                m["bucket_rows"] = {b: rows[int(b)] for b in new_buckets}
+                # the manifest's own row-count stat: n_rows (CoW) or
+                # n_rows_raw (MoR) — both are the sum of the totals
                 stats = dict(m.get("stats", {}))
-                if "n_rows" in stats:
-                    stats["n_rows"] = int(stats["n_rows"]) - removed_here
+                for k in ("n_rows", "n_rows_raw"):
+                    if k in stats:
+                        stats[k] = sum(m["bucket_rows"].values())
                 m["stats"] = stats
                 if m["_name"] == head_name:
                     log = list(m.get("purges", []))
@@ -3463,7 +3426,6 @@ class SnapshotTable:
             for old in changed:
                 try:
                     os.unlink(old)
-                    _file_rows_forget(old)
                 except OSError:
                     pass
         finally:
@@ -3482,11 +3444,3 @@ class SnapshotTable:
             )
         if os.path.isdir(self.path):
             shutil.rmtree(self.path)
-            # trailing separator so /data/tbl never purges /data/tbl2
-            prefs = tuple(
-                p.rstrip(os.sep) + os.sep
-                for p in (self.path, os.path.realpath(self.path))
-            )
-            with _FILE_ROWS_LOCK:
-                for k in [k for k in _FILE_ROWS if k.startswith(prefs)]:
-                    _FILE_ROWS.pop(k, None)

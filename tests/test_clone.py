@@ -10,6 +10,7 @@ snapshot-ref table over this engine's manifest store.
 import datetime as dt
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
@@ -43,6 +44,13 @@ def _mk(spark, path, rows):
 
 def _state(t):
     return {r["url"]: (r["seq"], r["text"]) for r in t.read().collect()}
+
+
+def _footer_bucket_rows(m):
+    return {
+        b: sum(pq.ParquetFile(f).metadata.num_rows for f in fs)
+        for b, fs in m["buckets"].items()
+    }
 
 
 def _data_files(path):
@@ -138,6 +146,10 @@ def test_materialize_restores_ownership(spark, tmp_path):
     assert clone.materialize() is not None
     assert clone.materialize() is None  # idempotent: nothing foreign left
     assert _state(clone) == before
+    # the copies carry the source's per-bucket row totals unchanged
+    m = clone.current_manifest()
+    assert m["bucket_rows"] == src.current_manifest()["bucket_rows"]
+    assert m["bucket_rows"] == _footer_bucket_rows(m)
     assert _data_files(tmp_path / "clone")  # bytes now owned locally
     # registry cleared → source ownership ops work again…
     assert src.clones() == []
@@ -149,6 +161,46 @@ def test_materialize_restores_ownership(spark, tmp_path):
     # purge now works on the self-contained clone too
     clone.purge_key("u2")
     assert "u2" not in _state(clone)
+    m = clone.current_manifest()
+    assert m["bucket_rows"] == _footer_bucket_rows(m)
+    assert sum(m["bucket_rows"].values()) == m["stats"]["n_rows"]
+
+
+def test_mor_merge_into_materialized_clone_opens_no_footer(
+    spark, tmp_path, monkeypatch
+):
+    """A commit counts rows from the manifest's per-bucket totals: a
+    merge-on-read merge into a materialized clone — whose copied files
+    no writer in this process ever counted — opens no parquet footer
+    and records the exact raw row count."""
+    src = _mk(
+        spark,
+        tmp_path / "src",
+        [("u1", TS, 1, "v1", "insert"), ("u2", TS, 2, "v2", "insert")],
+    )
+    clone = src.shallow_clone(str(tmp_path / "clone"))
+    clone.materialize()
+
+    def _no_footer(*_args, **_kwargs):
+        raise AssertionError("the commit opened a parquet footer")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(pq, "ParquetFile", _no_footer)
+        res = clone.merge_upsert(
+            _batch(
+                spark,
+                [
+                    ("u1", TS + dt.timedelta(days=1), 3, "v1b", "update"),
+                    ("u3", TS, 4, "v3", "insert"),
+                ],
+            ),
+            merge_mode="mor",
+        )
+    m = clone.current_manifest()
+    assert m["read_mode"] == "lww"
+    assert res.n_rows_after == m["stats"]["n_rows_raw"] == 4
+    assert m["bucket_rows"] == _footer_bucket_rows(m)
+    assert _state(clone) == {"u1": (3, "v1b"), "u2": (2, "v2"), "u3": (4, "v3")}
 
 
 def test_clone_of_unmaterialized_clone_refused(spark, tmp_path):

@@ -175,66 +175,3 @@ def test_stats_tombstones_widen_not_leak(spark, tmp_table_dir):
     got = {r["url"] for r in t.range_scan("seq", 0, 100).collect()}
     assert "u3" not in got and len(got) == 9
 
-
-def test_footer_rows_survives_cache_eviction(tmp_path):
-    """The bounded row-count cache may evict entries at any moment
-    (including DURING a _footer_rows call, from its own thread pool's
-    puts): counts accumulate locally, so the sum never KeyErrors and is
-    exact even when the cap forces eviction of this call's own files."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from clinvar_ingest_spark import tables as tmod
-
-    files = []
-    for i in range(12):
-        p = str(tmp_path / f"f{i}.parquet")
-        pq.write_table(pa.table({"x": list(range(i + 1))}), p)
-        files.append(p)
-
-    old_cap, old_cache = tmod._FILE_ROWS_CAP, dict(tmod._FILE_ROWS)
-    try:
-        tmod._FILE_ROWS.clear()
-        tmod._FILE_ROWS_CAP = 4  # every put evicts
-        total = tmod._footer_rows(files)          # all missing, pool path
-        assert total == sum(range(1, 13))
-        assert len(tmod._FILE_ROWS) <= 4
-        total2 = tmod._footer_rows(files)         # mixed hit/miss path
-        assert total2 == total
-    finally:
-        tmod._FILE_ROWS_CAP = old_cap
-        tmod._FILE_ROWS.clear()
-        tmod._FILE_ROWS.update(old_cache)
-
-
-def test_footer_rows_hit_is_not_in_next_evicted_quarter(tmp_path):
-    """A cache hit refreshes recency: the files one _footer_rows call
-    found cached move to the end of the cache, so the eviction a later
-    put triggers drops the least-recently-used quarter instead."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from clinvar_ingest_spark import tables as tmod
-
-    files = []
-    for i in range(9):
-        p = str(tmp_path / f"f{i}.parquet")
-        pq.write_table(pa.table({"x": list(range(i + 1))}), p)
-        files.append(p)
-
-    old_cap, old_cache = tmod._FILE_ROWS_CAP, dict(tmod._FILE_ROWS)
-    try:
-        tmod._FILE_ROWS.clear()
-        tmod._FILE_ROWS_CAP = 8  # one eviction drops the oldest 2
-        for i, f in enumerate(files[:8]):
-            tmod._file_rows_put(f, i + 1)
-        assert tmod._footer_rows(files[:2]) == 1 + 2  # both hits
-        tmod._file_rows_put(files[8], 9)  # full: evicts a quarter
-        assert files[0] in tmod._FILE_ROWS and files[1] in tmod._FILE_ROWS
-        assert files[2] not in tmod._FILE_ROWS
-        assert files[3] not in tmod._FILE_ROWS
-        assert list(tmod._FILE_ROWS)[-3:] == [files[0], files[1], files[8]]
-    finally:
-        tmod._FILE_ROWS_CAP = old_cap
-        tmod._FILE_ROWS.clear()
-        tmod._FILE_ROWS.update(old_cache)

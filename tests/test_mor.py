@@ -171,6 +171,13 @@ def _mor_table(spark, path):
     return t
 
 
+def _footer_bucket_rows(m):
+    return {
+        b: sum(pq.ParquetFile(f).metadata.num_rows for f in fs)
+        for b, fs in m["buckets"].items()
+    }
+
+
 _META_OPS = {
     "rename_column": lambda t: t.rename_column("text", "body"),
     "add_column": lambda t: t.add_column("extra", "string", default="d"),
@@ -201,6 +208,8 @@ def test_metadata_commit_on_mor_keeps_files_stats_and_read_mode(
     assert m["order_cols"] == parent["order_cols"]
     assert m["stats"] == parent["stats"]
     assert m["buckets"] == parent["buckets"]
+    assert m["bucket_rows"] == parent["bucket_rows"] == _footer_bucket_rows(m)
+    assert sum(m["bucket_rows"].values()) == m["stats"]["n_rows_raw"]
     assert m["delete_files"][: len(parent["delete_files"])] == (
         parent["delete_files"]
     )
@@ -239,8 +248,8 @@ def test_full_rewrite_of_mor_table_commits_plain_with_footer_count(
 
     m = t.current_manifest()
     assert m["read_mode"] == "plain"
-    files = [f for fs in m["buckets"].values() for f in fs]
-    footer = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    assert m["bucket_rows"] == _footer_bucket_rows(m)
+    footer = sum(m["bucket_rows"].values())
     assert res.n_rows_after == footer == m["stats"]["n_rows"]
     assert res.touched_buckets == sorted(int(b) for b in m["buckets"])
     assert sorted(r["url"] for r in t.read().collect()) == live

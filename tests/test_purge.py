@@ -5,6 +5,8 @@ other row, the snapshot chain, stats, and time travel stay intact."""
 import datetime as dt
 import os
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -89,13 +91,25 @@ def test_purge_scrubs_bytes_on_disk(spark, tmp_table_dir):
     assert m.get("purges") and "u1" not in str(m["purges"])
 
 
-def test_purge_adjusts_stats_exactly(spark, tmp_table_dir):
-    t = _mk(spark, tmp_table_dir)
-    before = int(t.current_manifest()["stats"]["n_rows"])
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_purge_adjusts_stats_exactly(spark, tmp_table_dir, merge_mode):
+    """The head's row-count stat (MoR: the raw ``n_rows_raw``) and its
+    per-bucket totals drop by exactly the purged rows and still match
+    the files' footers."""
+    key = "n_rows_raw" if merge_mode == "mor" else "n_rows"
+    t = _mk(spark, tmp_table_dir, merge_mode=merge_mode)
+    before = int(t.current_manifest()["stats"][key])
     res = t.purge_key("u2")
-    after = int(t.current_manifest()["stats"]["n_rows"])
+    m = t.current_manifest()
+    after = int(m["stats"][key])
     assert after == before - 1
     assert res.rows_removed >= 1
+    footers = {
+        b: sum(pq.ParquetFile(f).metadata.num_rows for f in fs)
+        for b, fs in m["buckets"].items()
+    }
+    assert m["bucket_rows"] == footers
+    assert after == sum(footers.values())
 
 
 def test_purge_mor_deltas(spark, tmp_table_dir):
