@@ -4228,12 +4228,15 @@ def q_cdc_range_scan(spark, sf_dir):
     analog, tables.py build_column_stats/range_scan): after the 2-batch
     CDC replay a stats sidecar is built over ``seq`` and a range scan
     reads only files whose [min, max] can overlap — the residual filter
-    always applies, so stats only SKIP, never answer. Oracle replays
-    the LWW semantics in SQL with the same range predicate."""
+    always applies, so stats only SKIP, never answer. The range is the
+    band [m - m//50, m - m//100] below the log's max seq m, so at every
+    scale it keeps some live winners and drops most. Oracle replays the
+    LWW semantics in SQL with the same range predicate."""
     tbl = _run_cdc(spark, sf_dir, n_batches=2, return_table=True)
     tbl.build_column_stats(["seq"])
+    m = _t(spark, sf_dir, "events").agg(F.max("event_id")).first()[0]
     return (
-        tbl.range_scan("seq", 300, 1200)
+        tbl.range_scan("seq", m - m // 50, m - m // 100)
         .select("url", "seq", "text")
         .orderBy("url")
     )
@@ -4254,10 +4257,12 @@ winners AS (
          row_number() OVER (PARTITION BY url
                             ORDER BY warc_ts DESC, seq DESC) AS rn
   FROM log
-)
+),
+bounds AS (SELECT max(seq) AS m FROM log)
 SELECT url, seq, text
-FROM winners
-WHERE rn = 1 AND op <> 'delete' AND seq BETWEEN 300 AND 1200
+FROM winners, bounds
+WHERE rn = 1 AND op <> 'delete'
+  AND seq BETWEEN m - m // 50 AND m - m // 100
 ORDER BY url
 """
 

@@ -29,15 +29,6 @@ def get_spark(
     splitting), Arrow makes the pandas-UDF extraction path vectorized,
     and shuffle partitions are sized to the parallelism at hand.
     """
-    # Before the JVM exists: make google.protobuf resolvable (vendored
-    # mini runtime when nothing is installed). The transformWithState
-    # driver-side pre-init worker is spawned with the JVM's environment,
-    # which is frozen at launch — addPyFile reaches executor workers but
-    # not that process, so the PYTHONPATH export must happen here.
-    from clinvar_ingest_spark.vendor import ensure_protobuf
-
-    ensure_protobuf()
-
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     # Parse the local[N] core count ONCE; every derived knob below uses

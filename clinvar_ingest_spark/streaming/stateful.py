@@ -6,9 +6,9 @@ winner — i.e. a streaming change-feed of the LWW state, arbitrary
 stateful logic the built-in aggregations can't express (the emitted
 row depends on the state transition, not just the aggregate value).
 
-This complements the two other streaming modes:
-* foreachBatch → snapshot-table merge (structured.py) — the sink path,
+This complements the other streaming operators:
 * watermarked window aggs (windows.py) — bounded-state rollups,
+* dedup-at-ingest (dedup.py) — first-wins content dedup,
 * applyInPandasWithState (here) — custom per-key state machines.
 
 State is Arrow-batched per group.
@@ -34,7 +34,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql import types as T
 
 OUT_SCHEMA = T.StructType(
@@ -201,158 +200,3 @@ ROCKSDB_STATE_CONF = {
     ),
 }
 
-
-# ---- transformWithState variant (Spark 4.x stateful API) -----------
-#
-# ``transformWithStateInPandas`` is the successor to
-# ``applyInPandasWithState``: named state variables (value/list/map),
-# first-class timers, and initial-state bootstrap, all on the same
-# Arrow-batched per-key contract. The engine ships the change feed on
-# BOTH APIs with identical semantics (asserted against each other and
-# against the batch LWW oracle in tests) so a deployment can move to
-# the new API without a behavior change — and because timers survive
-# provider upgrades, the RocksDB path (ROCKSDB_STATE_CONF) composes
-# unchanged.
-#
-# Environment note: the transformWithState wire protocol is
-# protobuf-based. Where the real ``protobuf`` package is absent (this
-# sandbox), the engine activates its vendored clean-room mini runtime
-# (``clinvar_ingest_spark.vendor.ensure_protobuf``) and ships it to
-# python workers via ``addPyFile`` — the generated StateMessage_pb2
-# module runs unmodified on either runtime, so the equivalence tests
-# run everywhere. The applyInPandasWithState path remains the
-# gate-enforced default.
-
-
-class _LWWTracker(StatefulProcessor):
-    """StatefulProcessor for the LWW change feed (same transitions as
-    :func:`_make_track`: created/updated/deleted, plus 'expired' GC
-    audit rows when constructed with a retention)."""
-
-    def __init__(self, retention_ms: int | None = None):
-        self._retention_ms = retention_ms
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("winner", STATE_SCHEMA)
-
-    def close(self) -> None:
-        pass
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        raise NotImplementedError("change feed starts from the log")
-
-    def _emit(self, url, ts_us, seq, op, transition):
-        return pd.DataFrame(
-            {
-                "url": [url],
-                "warc_ts": [pd.Timestamp(ts_us, unit="us")],
-                "seq": [seq],
-                "op": [op],
-                "transition": [transition],
-            }
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        url = key[0]
-        if self._state.exists():
-            ts_us, seq, op = self._state.get()
-        else:
-            ts_us, seq, op = -1, -1, None
-        best_ts, best_seq, best_op = ts_us, seq, op
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            top = pdf.sort_values(["warc_ts", "seq"], kind="stable").iloc[-1]
-            r_ts = int(top["warc_ts"].value // 1000)  # ns → µs
-            if (r_ts, int(top["seq"])) > (best_ts, best_seq):
-                best_ts, best_seq, best_op = r_ts, int(top["seq"]), top["op"]
-
-        def _arm_timer() -> None:
-            if self._retention_ms is None:
-                return
-            # one live timer per key: re-arm by clearing earlier ones
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            wm = timerValues.getCurrentWatermarkInMs()
-            self._handle.registerTimer(
-                max(best_ts // 1000 + self._retention_ms, wm + 1)
-            )
-
-        if (best_ts, best_seq) == (ts_us, seq):
-            if self._state.exists():
-                _arm_timer()
-            return iter(())
-        self._state.update((best_ts, best_seq, best_op))
-        _arm_timer()
-        if best_op == "delete":
-            transition = "deleted"
-        elif op is None or op == "delete":
-            transition = "created"
-        else:
-            transition = "updated"
-        return iter([self._emit(url, best_ts, best_seq, best_op, transition)])
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        if not self._state.exists():
-            return iter(())
-        ts_us, seq, op = self._state.get()
-        self._state.clear()
-        return iter([self._emit(key[0], ts_us, seq, op, "expired")])
-
-
-def lww_change_feed_tws(
-    stream: DataFrame,
-    watermark: str | None = None,
-    retention: str | None = None,
-) -> DataFrame:
-    """:func:`lww_change_feed` on the transformWithState API — same
-    input/output contract, same transitions, timer-based GC."""
-    from clinvar_ingest_spark.vendor import ensure_protobuf
-
-    if not ensure_protobuf(stream.sparkSession):
-        raise RuntimeError(
-            "transformWithState needs google.protobuf and the vendored "
-            "mini runtime could not be activated"
-        )
-    # transformWithState stores each state variable in its own column
-    # family — only the RocksDB provider supports that. The provider
-    # conf is read at query start, so set it here when the session is
-    # still on the default HDFS-backed provider (queries already
-    # running, and their checkpoints, are unaffected).
-    spark = stream.sparkSession
-    provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    if "RocksDB" not in (provider or ""):
-        for k, v in ROCKSDB_STATE_CONF.items():
-            spark.conf.set(k, v)
-    src = stream.select("url", "warc_ts", "seq", "op")
-    if watermark is None:
-        return src.groupBy("url").transformWithStateInPandas(
-            statefulProcessor=_LWWTracker(),
-            outputStructType=OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    retention_ms = _interval_ms(retention if retention is not None else watermark)
-    return (
-        src.withWatermark("warc_ts", watermark)
-        .groupBy("url")
-        .transformWithStateInPandas(
-            statefulProcessor=_LWWTracker(retention_ms),
-            outputStructType=OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-def tws_available() -> bool:
-    """True when the transformWithState protobuf dependency is usable
-    (the API's state protocol imports google.protobuf at query start).
-    Activates the vendored mini runtime when nothing is installed, so
-    this is true everywhere the vendor tree ships."""
-    from clinvar_ingest_spark.vendor import ensure_protobuf
-
-    return ensure_protobuf()

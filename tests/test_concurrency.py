@@ -1,5 +1,5 @@
-"""Commit-conflict CAS, orphan-manifest GC, sidecar self-heal, and
-streaming run-token fencing.
+"""Commit-conflict CAS, orphan-manifest GC, sidecar self-heal and
+stale-lock recovery.
 
 Reference analog: the processing_history "already started" checks
 (clinvar_ingest/cloud/bigquery/processing_history.py:193-226) guard the
@@ -131,38 +131,6 @@ def test_ensure_sidecars_rebuilds_lost_lineage(spark, tmp_path):
     # the skipped-batch path heals too (idempotent; nothing missing now)
     rep = pipe.run_batch(OffsetRange(-1, 299), log_end_seq=599)
     assert rep.skipped
-
-
-def test_stream_restart_with_fresh_checkpoint_loses_nothing(spark, tmp_path):
-    """Restarting a stream against a NEW checkpointLocation resets
-    epoch_id to 0; the fence must not skip those re-delivered batches
-    (LWW idempotency absorbs the replay instead)."""
-    from clinvar_ingest_spark.sources.synthetic import synthetic_change_log
-    from clinvar_ingest_spark.streaming.structured import StreamingIngest
-
-    log_dir = str(tmp_path / "log")
-    log = synthetic_change_log(spark, 400, n_urls=80)
-    log.write.parquet(log_dir)
-    schema = spark.read.parquet(log_dir).schema
-
-    path = str(tmp_path / "t")
-    tbl = SnapshotTable(spark, path, "url", 8).create(PAGES)
-    ing = StreamingIngest(spark, tbl, str(tmp_path / "ckpt1"))
-    ing.run_available_now(log_dir, schema)
-    state1 = sorted(
-        (r["url"], r["seq"]) for r in tbl.read().select("url", "seq").collect()
-    )
-    assert state1  # drained something
-
-    # "operator deleted the checkpoint": fresh checkpoint dir replays
-    # the whole log from epoch 0 — final state must be unchanged, not
-    # silently missing every batch whose epoch_id <= stored epoch
-    ing2 = StreamingIngest(spark, tbl, str(tmp_path / "ckpt2"))
-    ing2.run_available_now(log_dir, schema)
-    state2 = sorted(
-        (r["url"], r["seq"]) for r in tbl.read().select("url", "seq").collect()
-    )
-    assert state2 == state1
 
 
 def test_stale_lock_from_dead_writer_is_broken(spark, tmp_table_dir):

@@ -1,6 +1,5 @@
 """applyInPandasWithState LWW change-feed: final emissions == batch LWW."""
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from clinvar_ingest_spark.operators.dedup import lww_dedup
@@ -179,108 +178,3 @@ def test_change_feed_on_rocksdb_state_store(spark, tmp_path):
     }
     assert got == want
 
-
-def test_tws_change_feed_matches_legacy_api(spark, tmp_path):
-    """The transformWithState (Spark 4.x API) change feed must converge
-    identically to the applyInPandasWithState one and to the batch LWW
-    oracle — API migration with zero behavior change."""
-    import pytest
-
-    from clinvar_ingest_spark.streaming.stateful import (
-        lww_change_feed_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("transformWithState needs google.protobuf (absent here)")
-
-    log = synthetic_change_log(spark, 600, n_urls=80)
-    log_dir = str(tmp_path / "log")
-    log.repartition(4).write.mode("overwrite").parquet(log_dir)
-
-    outs = {}
-    for name, feed_fn in (("legacy", lww_change_feed),
-                          ("tws", lww_change_feed_tws)):
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(log_dir)
-        )
-        out_dir = str(tmp_path / f"out_{name}")
-        q = (
-            feed_fn(stream)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", out_dir)
-            .start()
-        )
-        q.awaitTermination()
-        feed = spark.read.parquet(out_dir)
-        last = lww_dedup(feed, ("url",), ("warc_ts", "seq"), strategy="max_by")
-        outs[name] = {
-            r["url"]: (r["seq"], r["op"], r["transition"])
-            for r in last.collect()
-        }
-    assert outs["legacy"] == outs["tws"]
-    want = {
-        r["url"]: (r["seq"], r["op"])
-        for r in lww_dedup(
-            spark.read.parquet(log_dir), ("url",), ("warc_ts", "seq")
-        ).collect()
-    }
-    assert {u: v[:2] for u, v in outs["tws"].items()} == want
-
-
-def test_tws_state_gc_emits_expired_rows(spark, tmp_path):
-    """Timer-based GC on the new API: watermark passing winner_ts +
-    retention evicts the key and emits one 'expired' audit row."""
-    import datetime as dt
-
-    import pytest
-
-    from clinvar_ingest_spark.streaming.stateful import (
-        lww_change_feed_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("transformWithState needs google.protobuf (absent here)")
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        # old key, then much-later traffic on another key pushes the
-        # watermark far past old+retention
-        (0, 1, "update", "https://old/1", t0, None, None),
-        (0, 2, "update", "https://new/2", t0 + dt.timedelta(hours=6), None, None),
-        (0, 3, "update", "https://new/2", t0 + dt.timedelta(hours=7), None, None),
-    ]
-    log_dir = str(tmp_path / "log")
-    for i, r in enumerate(rows):  # one file per event -> 3 micro-batches
-        spark.createDataFrame([r], SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(log_dir)
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(log_dir)
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        lww_change_feed_tws(stream, watermark="10 minutes", retention="1 hour")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(out_dir)
-    trans = {
-        (r["url"], r["transition"]) for r in feed.collect()
-    }
-    assert ("https://old/1", "created") in trans
-    assert ("https://old/1", "expired") in trans

@@ -1,65 +1,5 @@
-"""Structured Streaming tail converges to the batch pipeline's state."""
-
-from pyspark.sql import types as T
-
-from clinvar_ingest_spark.sources import ChangeLogSource, synthetic_change_log
-from clinvar_ingest_spark.streaming import IngestPipeline
-from clinvar_ingest_spark.streaming.structured import StreamingIngest
-from clinvar_ingest_spark.tables import SnapshotTable
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("part", T.IntegerType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("op", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
-
-PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
-
-
-def test_streaming_matches_batch(spark, tmp_path):
-    n = 800
-    log = synthetic_change_log(spark, n, n_urls=120)
-    log_dir = str(tmp_path / "log")
-    # several files so maxFilesPerTrigger yields multiple micro-batches
-    log.repartition(6).write.mode("overwrite").parquet(log_dir)
-
-    # batch pipeline reference state
-    btbl = SnapshotTable(spark, str(tmp_path / "bt"), "url", 8).create(PAGES)
-    bpipe = IngestPipeline(spark, ChangeLogSource(spark.read.parquet(log_dir)), btbl)
-    bpipe.run_to_end(span=250)
-
-    stbl = SnapshotTable(spark, str(tmp_path / "st"), "url", 8).create(PAGES)
-    si = StreamingIngest(spark, stbl, str(tmp_path / "ckpt"))
-    si.run_available_now(log_dir, SCHEMA)
-
-    key = lambda r: (r["url"], r["seq"], r["text"], r["lang"])  # noqa: E731
-    bstate = sorted(map(key, bpipe.current_state().collect()))
-    sstate = sorted(
-        map(key, stbl.read().drop("_bucket", "_deleted").collect())
-    )
-    assert bstate == sstate
-    assert len(bstate) > 50
-
-    # resume: re-running availableNow over the same checkpoint is a no-op
-    sid = stbl.snapshot_id()
-    si2 = StreamingIngest(spark, stbl, str(tmp_path / "ckpt"))
-    si2.run_available_now(log_dir, SCHEMA)
-    assert stbl.snapshot_id() == sid
+"""Streaming dedup-at-ingest (``streaming/dedup.py``): first event per
+content fingerprint wins, across micro-batch boundaries."""
 
 
 def test_stream_exact_dedup_first_wins_across_batches(spark, tmp_path):

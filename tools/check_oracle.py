@@ -18,8 +18,10 @@ from __future__ import annotations
 import fnmatch
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# The checkout this file lives in, so a copy of the checker tests its own tree.
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
