@@ -4224,12 +4224,16 @@ ORDER BY doc_id, copy
 
 
 def q_cdc_range_scan(spark, sf_dir):
-    """File-level min/max stats pruning (Iceberg manifest file-stats
+    """File-level min/max stats range scan (Iceberg manifest file-stats
     analog, tables.py build_column_stats/range_scan): after the 2-batch
-    CDC replay a stats sidecar is built over ``seq`` and a range scan
-    reads only files whose [min, max] can overlap — the residual filter
-    always applies, so stats only SKIP, never answer. The range is the
-    band [m - m//50, m - m//100] below the log's max seq m, so at every
+    CDC replay a stats sidecar is built over ``seq`` and ``range_scan``
+    applies the residual filter over the stats-kept files. This gate
+    checks the sidecar build and the residual filter only: url-hash
+    bucketing spreads every seq band over all buckets, so the stats
+    keep every file (16 of 16 at sf0.01 and sf0.1). File skipping is
+    checked by tests/test_colstats.py
+    ``test_stats_prune_skips_disjoint_files``. The range is the band
+    [m - m//50, m - m//100] below the log's max seq m, so at every
     scale it keeps some live winners and drops most. Oracle replays the
     LWW semantics in SQL with the same range predicate."""
     tbl = _run_cdc(spark, sf_dir, n_batches=2, return_table=True)

@@ -623,17 +623,32 @@ class IngestPipeline:
             futs: dict[int, object] = {
                 0: pool.submit(self._profile_rows, self.source.batch(ranges[0]))
             }
-            for i, rng in enumerate(ranges):
-                if i + 1 < len(ranges):
-                    futs[i + 1] = pool.submit(
-                        self._profile_rows, self.source.batch(ranges[i + 1])
+            try:
+                for i, rng in enumerate(ranges):
+                    if i + 1 < len(ranges):
+                        futs[i + 1] = pool.submit(
+                            self._profile_rows, self.source.batch(ranges[i + 1])
+                        )
+                    reports.append(
+                        self.run_batch(
+                            rng, log_end_seq=end,
+                            _prefetched_profile=futs.pop(i),
+                        )
                     )
-                reports.append(
-                    self.run_batch(
-                        rng, log_end_seq=end,
-                        _prefetched_profile=futs.pop(i),
-                    )
-                )
+            except BaseException as e:
+                # a batch failed while the next batch's profile was in
+                # flight: cancel it, or wait for it and attach its own
+                # failure to the propagating error instead of dropping it
+                for k, fut in futs.items():
+                    if fut.cancel():
+                        continue
+                    exc = fut.exception()
+                    if exc is not None:
+                        e.add_note(
+                            f"prefetched profile of batch {ranges[k]} "
+                            f"also failed: {exc!r}"
+                        )
+                raise
         return reports
 
     # ------------------------------------------------------------ audit

@@ -53,7 +53,6 @@ _MANIFESTS = "_manifests"
 _DATA = "data"
 _LOCK = "_commit.lock"
 # JSON sidecars at the table root, each read-modify-written under _LOCK
-_REFS = "_refs.json"
 _STAGED = "_staged.json"
 _BRANCHES = "_branches.json"
 _CLONES = "_clones.json"
@@ -1311,125 +1310,6 @@ class SnapshotTable:
         )
         return stored_schema, pairs, casts, fills
 
-    # ------------------------------------------------------------------ refs
-    def tag(self, name: str, snapshot_id: int | None = None) -> int:
-        """Name a snapshot (Iceberg tag analog): ``read_ref(name)``
-        then time-travels to it regardless of later commits, and
-        ``vacuum_orphans(keep_snapshots=)`` never expires a tagged
-        snapshot's manifest. Written atomically (tempfile + replace)."""
-        # mutate refs under the table lock: concurrent tags would
-        # lose one in an unlocked read-modify-write, and a tag raced
-        # against vacuum_orphans expiry could validate its snapshot
-        # and then have it expired before the refs write lands
-        # (vacuum_orphans holds this same lock while reading refs).
-        lock = self._acquire_lock()
-        try:
-            sid = self.snapshot_id() if snapshot_id is None else snapshot_id
-            self.manifest_at(sid)  # must exist on the committed chain
-            refs = self.refs()
-            refs[name] = sid
-            self._save_side(_REFS, refs)
-        finally:
-            self._release_lock(lock)
-        return sid
-
-    def refs(self) -> dict[str, int]:
-        """All tags: name → snapshot_id."""
-        return {k: int(v) for k, v in self._load_side(_REFS, {}).items()}
-
-    def read_ref(self, name: str) -> DataFrame:
-        refs = self.refs()
-        if name not in refs:
-            raise ValueError(f"no tag {name!r} on {self.path}")
-        return self.read_at(refs[name])
-
-    def drop_ref(self, name: str) -> None:
-        lock = self._acquire_lock()
-        try:
-            refs = self.refs()
-            refs.pop(name, None)
-            self._save_side(_REFS, refs)
-        finally:
-            self._release_lock(lock)
-
-    # ------------------------------------------------------- metadata tables
-    def meta_snapshots(self) -> DataFrame:
-        """Iceberg ``table.snapshots`` analog: one row per committed
-        snapshot (id, parent, n_buckets_referenced, n_files, n_rows,
-        batch_id, global_hwm) — driver-built from the manifest chain
-        (metadata-sized), served as a DataFrame for SQL over ops state."""
-        rows = []
-        for name in self.history():
-            m = self._load_manifest(name)
-            props = m.get("properties", {})
-            files = [f for fs in m["buckets"].values() for f in fs]
-            rows.append(
-                {
-                    "snapshot_id": int(m["snapshot_id"]),
-                    "parent_id": m.get("parent_id"),
-                    "n_buckets": len(m["buckets"]),
-                    "n_files": len(files),
-                    "n_rows": int(
-                        m.get("stats", {}).get(
-                            "n_rows", m.get("stats", {}).get("n_rows_raw", -1)
-                        )
-                    ),
-                    "batch_id": int(props.get("batch_id", -1)),
-                    "global_hwm": int(props.get("global_hwm", -1)),
-                    "read_mode": m.get("read_mode", "plain"),
-                }
-            )
-        return self.spark.createDataFrame(
-            rows,
-            "snapshot_id long, parent_id long, n_buckets int, n_files int, "
-            "n_rows long, batch_id long, global_hwm long, read_mode string",
-        )
-
-    def meta_files(self, snapshot: dict[str, Any] | None = None) -> DataFrame:
-        """Iceberg ``table.files`` analog: (bucket, path, n_rows,
-        size_bytes) of the current (or given) snapshot, row counts from
-        parquet footers — the input to maintenance policy decisions."""
-        import pyarrow.parquet as pq
-
-        m = snapshot or self.current_manifest()
-        rows = []
-        for b, fs in m["buckets"].items():
-            for f in fs:
-                try:
-                    nr = pq.ParquetFile(f).metadata.num_rows
-                    sz = os.path.getsize(f)
-                except OSError:
-                    nr, sz = -1, -1
-                rows.append(
-                    {"bucket": int(b), "path": f, "n_rows": nr,
-                     "size_bytes": sz}
-                )
-        return self.spark.createDataFrame(
-            rows, "bucket int, path string, n_rows long, size_bytes long"
-        )
-
-    # ---------------------------------------------------------- maintenance
-    def maintenance_tick(
-        self,
-        max_files_per_bucket: int = 4,
-        keep_snapshots: int | None = 20,
-        sort_by: list[str] | None = None,
-    ) -> dict[str, Any]:
-        """One scheduled-maintenance pass (the Iceberg maintenance-job
-        trio, policy-driven): compact buckets that exceeded the file
-        cap (MoR deltas fatten buckets every batch), then expire old
-        snapshots + GC orphan files. Idempotent; call it on a timer or
-        every N batches — at 10^10 events unmaintained tables die of
-        file-count long before they die of bytes."""
-        report: dict[str, Any] = {"compacted": 0}
-        res = self.compact(
-            max_files_per_bucket=max_files_per_bucket, sort_by=sort_by
-        )
-        if res is not None:
-            report["compacted"] = len(res.touched_buckets)
-        report.update(self.vacuum_orphans(keep_snapshots=keep_snapshots))
-        return report
-
     # ------------------------------------------------------------------ lock
     _LOCK_TTL = 30.0  # break locks whose mtime is older than this
 
@@ -1901,8 +1781,8 @@ class SnapshotTable:
                 raise ValueError(f"table {self.path} does not exist")
             if self._branch is not None:
                 raise ValueError(
-                    "clone from the main table (tag or fast-forward the "
-                    "branch first)"
+                    "clone from the main table (fast-forward the branch "
+                    "first)"
                 )
             clone = SnapshotTable(
                 self.spark,
@@ -2001,7 +1881,7 @@ class SnapshotTable:
         try:
             # re-resolve every reachable manifest under the lock and
             # swap paths IN PLACE (same shape as purge_key's remap):
-            # history, tags, staged refs, branches, and time travel all
+            # history, staged refs, branches, and time travel all
             # become self-contained, not just the head
             head = self._read_ptr()
             for mm_ in self._walk_manifests():
@@ -3147,7 +3027,7 @@ class SnapshotTable:
         file lists across the committed chain, and unlinks the rest.
 
         ``keep_snapshots``: additionally EXPIRE old snapshots first,
-        keeping only the newest N manifests (time travel shrinks to
+        keeping only the newest N ≥ 1 manifests (time travel shrinks to
         those); files referenced only by expired snapshots become
         orphans and are swept in the same pass. Runs driver-side over
         manifest metadata — O(files) name-set math, no Spark job; at
@@ -3159,6 +3039,11 @@ class SnapshotTable:
         files would look orphaned)."""
         if self._branch is not None:
             raise ValueError("vacuum_orphans runs on the main table")
+        if keep_snapshots is not None and keep_snapshots < 1:
+            raise ValueError(
+                f"keep_snapshots must be >= 1 (got {keep_snapshots}): "
+                "the head snapshot is never expired"
+            )
         lock = self._acquire_lock()
         try:
             chain = self.history()
@@ -3170,14 +3055,6 @@ class SnapshotTable:
                 )
             if keep_snapshots is not None and len(chain) > keep_snapshots:
                 boundary = len(chain) - keep_snapshots
-                # tagged snapshots are retention roots: expiry never
-                # crosses the oldest tag (Iceberg ref-aware expiry)
-                tagged = set(self.refs().values())
-                if tagged:
-                    for i, name in enumerate(chain[:boundary]):
-                        if self._load_manifest(name)["snapshot_id"] in tagged:
-                            boundary = i
-                            break
             else:
                 boundary = 0
             if boundary > 0:
@@ -3240,11 +3117,11 @@ class SnapshotTable:
     def purge_key(self, value) -> "PurgeResult":
         """GDPR right-to-be-forgotten: physically remove every row for
         ``key_col == value`` from EVERY reachable snapshot — committed
-        history, tags, and staged (WAP) manifests alike — not just the
-        head. Iceberg can only purge history by expiring snapshots;
+        history, branches, and staged (WAP) manifests alike — not just
+        the head. Iceberg can only purge history by expiring snapshots;
         because this engine owns its manifests, it rewrites them in
-        place instead, so snapshot ids, parent links, tags, lineage,
-        and time travel all survive with the key excised.
+        place instead, so snapshot ids, parent links, lineage, and time
+        travel all survive with the key excised.
 
         Mechanics: the key's bucket is computable under every bucket
         spec in history (partition evolution included), so candidates

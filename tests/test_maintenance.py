@@ -150,6 +150,12 @@ def test_vacuum_orphans_expires_old_snapshots(spark, tmp_path):
 
     with _pytest.raises(ValueError):
         t.read_at(1)
+    # keeping fewer than one snapshot would expire the head: refused
+    # before anything is cut
+    for bad in (0, -1):
+        with _pytest.raises(ValueError):
+            t.vacuum_orphans(keep_snapshots=bad)
+    assert len(t.history()) == 2
 
 
 def test_merge_upsert_retrying_converges_after_conflict(spark, tmp_path):
@@ -339,77 +345,6 @@ def test_delete_where_and_update_where(spark, tmp_path):
 
     with pytest.raises(ValueError, match="bucketing key"):
         t.update_where(F.lit(True), {"url": F.lit("x")})
-
-
-def test_tags_metadata_tables_and_maintenance_tick(spark, tmp_path):
-    """Catalog/ops parity: snapshot tags survive expiry (retention
-    roots), metadata tables expose snapshots/files as DataFrames, and
-    maintenance_tick compacts fat buckets + expires + GCs in one pass."""
-    import datetime as dt
-
-    import pytest
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from clinvar_ingest_spark.tables import SnapshotTable
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    t = SnapshotTable(spark, str(tmp_path / "t"), "url", 4).create(schema)
-
-    def batch(lo, hi, day):
-        return spark.createDataFrame(
-            [(f"https://s/{i}", dt.datetime(2024, 1, day), lo + i,
-              f"text {i}", "update") for i in range(hi - lo)],
-            "url string, warc_ts timestamp, seq long, text string, op string",
-        )
-
-    # MoR appends fatten buckets -> real compaction work for the tick
-    for b in range(6):
-        t.merge_upsert(batch(b * 100, b * 100 + 30, b + 1), merge_mode="mor")
-    sid_tagged = t.tag("after-batch-6")
-    n_tagged = t.read().count()
-    t.merge_upsert(batch(600, 640, 20), merge_mode="mor")
-
-    assert t.refs() == {"after-batch-6": sid_tagged}
-    assert t.read_ref("after-batch-6").count() == n_tagged
-    with pytest.raises(ValueError, match="no tag"):
-        t.read_ref("nope")
-
-    snaps = t.meta_snapshots().collect()
-    assert [r["snapshot_id"] for r in snaps] == sorted(
-        r["snapshot_id"] for r in snaps
-    )
-    assert len(snaps) == 8  # create + 7 merges
-    files = t.meta_files().collect()
-    assert sum(r["n_rows"] for r in files) == t.read(
-        include_deleted=True, resolve=False
-    ).count()
-    assert max(
-        len([r for r in files if r["bucket"] == b]) for b in range(4)
-    ) > 4  # genuinely fat before the tick
-
-    rep = t.maintenance_tick(max_files_per_bucket=1, keep_snapshots=2)
-    assert rep["compacted"] == 4
-    # expiry kept the TAGGED snapshot even though keep_snapshots=2
-    # would have expired it (retention root)
-    assert t.read_ref("after-batch-6").count() == n_tagged
-    assert any(
-        r["snapshot_id"] == sid_tagged for r in t.meta_snapshots().collect()
-    )
-    # after dropping the tag, the next expiry can remove it
-    t.drop_ref("after-batch-6")
-    t.vacuum_orphans(keep_snapshots=1)
-    assert all(
-        r["snapshot_id"] != sid_tagged for r in t.meta_snapshots().collect()
-    )
-    # state intact throughout: every batch rewrites urls 0..N-1, so
-    # the LWW state is the last batch's 40 distinct urls
-    assert t.read().count() == 40
 
 
 def test_delete_where_preserves_tombstones(spark, tmp_path):

@@ -5,6 +5,8 @@ Reference analogs: processing_history started/finished fencing
 (workflow.py:211-224), parsed_files lineage (processing_history.py:431-443).
 """
 
+import threading
+
 import pytest
 from pyspark.sql import types as T
 
@@ -256,6 +258,40 @@ def test_prefetched_profile_equals_inline(spark, tmp_path):
         for r in p.lineage().collect()
     )
     assert lin(pre) == lin(inline)
+
+
+def test_run_to_end_reports_failed_prefetch(spark, tmp_path, monkeypatch):
+    """When batch 0's merge fails while batch 1's prefetched profile
+    has failed too, run_to_end raises the merge error and attaches the
+    prefetch failure as a note instead of dropping it."""
+    pipe = _pipe(spark, str(tmp_path / "t"), n=900)
+    assert len(pipe.source.plan_batches(-1, 899, 300)) >= 3
+    prefetch_failed = threading.Event()
+
+    def merge_fails(*_a, **_k):
+        # fail only once the prefetch has failed, so its future is
+        # done (not cancellable) when the merge error propagates
+        assert prefetch_failed.wait(60)
+        raise RuntimeError("merge")
+
+    real_profile = pipe._profile_rows
+    calls = []
+
+    def profile(raw):
+        # the single-worker pool runs calls in submission order: the
+        # second call is batch 1's prefetch
+        calls.append(1)
+        if len(calls) == 2:
+            prefetch_failed.set()
+            raise RuntimeError("prefetch")
+        return real_profile(raw)
+
+    monkeypatch.setattr(pipe.target, "merge_upsert", merge_fails)
+    monkeypatch.setattr(pipe, "_profile_rows", profile)
+    with pytest.raises(RuntimeError, match="merge") as ei:
+        pipe.run_to_end(span=300)
+    notes = getattr(ei.value, "__notes__", [])
+    assert any("RuntimeError('prefetch')" in n for n in notes), notes
 
 
 @pytest.mark.parametrize("merge_mode", ["cow", "mor"])
