@@ -26,6 +26,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp dir for a gate's tables, removed at interpreter
+    exit: the DataFrames a gate returns read it lazily, so it has to
+    outlive the query builder. A table whose derived tables or index
+    sit next to it (``<path>__<name>``) goes in a subdirectory, so they
+    are removed with it."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
 # =====================================================================
 # §2.4 A1 — window-rank last-writer-wins dedup (the engine's core op).
 # Reference: create_tables.py:176-222. events plays the change log:
@@ -4007,8 +4022,6 @@ def _run_cdc(
     return_pipe: bool = False, derived=None, log_builder=None,
     dlq: bool = False, row_lineage: bool = False,
 ):
-    import tempfile
-
     from clinvar_ingest_spark.sources import ChangeLogSource
     from clinvar_ingest_spark.streaming import IngestPipeline
     from clinvar_ingest_spark.tables import SnapshotTable
@@ -4027,7 +4040,7 @@ def _run_cdc(
     src = ChangeLogSource(log)
     end = src.max_seq()
     span = end // n_batches + 1
-    path = tempfile.mkdtemp(prefix="cdc_gate_")
+    path = _scratch_dir("cdc_gate_") + "/table"
     tbl = SnapshotTable(spark, path, key_col="url", n_buckets=16).create(
         schema, row_lineage=row_lineage
     )
@@ -4340,8 +4353,6 @@ def q_cdc_clone_state(spark, sf_dir):
     corrupts Delta shallow clones. The clone-aware GC must keep every
     clone-referenced file, so the gate value-hashes BOTH final states:
     main = full replay, clone = frozen mid-replay LWW state."""
-    import tempfile
-
     from clinvar_ingest_spark.sources import ChangeLogSource
     from clinvar_ingest_spark.streaming import IngestPipeline
     from clinvar_ingest_spark.tables import SnapshotTable
@@ -4360,13 +4371,13 @@ def q_cdc_clone_state(spark, sf_dir):
     src = ChangeLogSource(log)
     end = src.max_seq()
     span = end // 2 + 1
-    path = tempfile.mkdtemp(prefix="cdc_clone_gate_")
+    path = _scratch_dir("cdc_clone_gate_")
     tbl = SnapshotTable(spark, path, key_col="url", n_buckets=16).create(
         schema
     )
     pipe = IngestPipeline(spark, src, tbl)
     pipe.run_batch(src.plan_batches(-1, end, span)[0], log_end_seq=end)
-    clone = tbl.shallow_clone(tempfile.mkdtemp(prefix="cdc_clone_dst_"))
+    clone = tbl.shallow_clone(_scratch_dir("cdc_clone_dst_"))
     pipe.run_to_end(span=span, end_seq=end)
     tbl.compact()  # rewrites buckets → pre-clone files leave the head
     tbl.vacuum_orphans(keep_snapshots=1)  # …and leave history entirely
@@ -4928,8 +4939,6 @@ def q_cdc_widen_state(spark, sf_dir):
     rewritten), replay the rest with values past the int range — reads
     resolve the narrow epoch with a plan-side cast, so the final state
     mixes both epochs in one bigint column."""
-    import tempfile
-
     from clinvar_ingest_spark.sources import ChangeLogSource  # noqa: F401
     from clinvar_ingest_spark.tables import SnapshotTable
     from pyspark.sql import types as T
@@ -4943,7 +4952,7 @@ def q_cdc_widen_state(spark, sf_dir):
         T.StructField("n_views", T.IntegerType()),
     ])
     base = _events_as_change_log(spark, sf_dir).drop("part")
-    path = tempfile.mkdtemp(prefix="cdc_widen_")
+    path = _scratch_dir("cdc_widen_")
     tbl = SnapshotTable(spark, path, key_col="url", n_buckets=16).create(schema)
     tbl.merge_upsert(
         base.filter(F.col("seq") % 2 == 0)
@@ -4963,8 +4972,6 @@ def q_cdc_eqdelete_state(spark, sf_dir):
     to small delete files, reads anti-join older files), replay the
     rest — post-delete events re-insert freely because their files are
     newer than the delete commit."""
-    import tempfile
-
     from clinvar_ingest_spark.tables import SnapshotTable
     from pyspark.sql import types as T
 
@@ -4977,7 +4984,7 @@ def q_cdc_eqdelete_state(spark, sf_dir):
     ])
     base = _events_as_change_log(spark, sf_dir).drop("part")
     mid = base.agg(F.max("seq")).collect()[0][0] // 2
-    path = tempfile.mkdtemp(prefix="cdc_eqdel_")
+    path = _scratch_dir("cdc_eqdel_")
     tbl = SnapshotTable(spark, path, key_col="url", n_buckets=16).create(schema)
     tbl.merge_upsert(base.filter(F.col("seq") <= mid), merge_mode="mor")
     tbl.delete_where(F.col("seq") % 5 == 0, mode="delta")
@@ -5023,8 +5030,6 @@ def q_cdc_default_state(spark, sf_dir):
     replay half the log, ADD priority int DEFAULT 5 (zero files
     rewritten — pre-add rows serve the default from metadata), replay
     the rest with real values; the final state mixes both epochs."""
-    import tempfile
-
     from clinvar_ingest_spark.tables import SnapshotTable
     from pyspark.sql import types as T
 
@@ -5036,7 +5041,7 @@ def q_cdc_default_state(spark, sf_dir):
         T.StructField("text", T.StringType()),
     ])
     base = _events_as_change_log(spark, sf_dir).drop("part")
-    path = tempfile.mkdtemp(prefix="cdc_default_")
+    path = _scratch_dir("cdc_default_")
     tbl = SnapshotTable(spark, path, key_col="url", n_buckets=16).create(schema)
     tbl.merge_upsert(base.filter(F.col("seq") % 2 == 0))
     tbl.add_column("priority", "int", default=5)
@@ -5280,7 +5285,6 @@ def q_stream_change_feed(spark, sf_dir):
     check was rows-only because batch boundaries were nondeterministic;
     pinning files to batches closes that gap."""
     import os as _os
-    import tempfile as _tmp
 
     from clinvar_ingest_spark.streaming.stateful import lww_change_feed
 
@@ -5299,7 +5303,7 @@ def q_stream_change_feed(spark, sf_dir):
         op.alias("op"),
         (F.col("event_id") % 3).cast("int").alias("b"),
     )
-    root = _tmp.mkdtemp(prefix="stream_gate_")
+    root = _scratch_dir("stream_gate_")
     log_dir = _os.path.join(root, "log")
     for i in range(3):
         p = _os.path.join(log_dir, f"b{i}.parquet")
@@ -6270,8 +6274,6 @@ def q_cdc_incremental_neardup(spark, sf_dir):
     band-partition replace → probe → affected-closure recompute). The
     oracle is the SAME full-recompute SQL as cdc_curated_corpus:
     incremental == full is the contract, enforced by the driver hash."""
-    import tempfile
-
     from clinvar_ingest_spark.operators.incremental_dedup import NearDupIndex
     from clinvar_ingest_spark.sources import ChangeLogSource
     from clinvar_ingest_spark.streaming import IngestPipeline
@@ -6290,7 +6292,7 @@ def q_cdc_incremental_neardup(spark, sf_dir):
     log = _documents_as_change_log(spark, sf_dir)
     src = ChangeLogSource(log)
     end = src.max_seq()
-    path = tempfile.mkdtemp(prefix="cdc_incdedup_")
+    path = _scratch_dir("cdc_incdedup_") + "/table"
     tbl = SnapshotTable(spark, path, key_col="url", n_buckets=16).create(schema)
     pipe = IngestPipeline(spark, src, tbl)
     idx = NearDupIndex(tbl)
@@ -6606,8 +6608,6 @@ def q_cdc_schema_evolution(spark, sf_dir):
     new winners carry the value — the reference's schema_version
     stamping (config.py:49) as live column evolution. Oracle replays
     LWW and nulls lang for pre-evolution winners."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from clinvar_ingest_spark.tables import SnapshotTable
@@ -6623,7 +6623,7 @@ def q_cdc_schema_evolution(spark, sf_dir):
             T.StructField("text", T.StringType()),
         ]
     )
-    path = tempfile.mkdtemp(prefix="cdc_evo_")
+    path = _scratch_dir("cdc_evo_")
     tbl = SnapshotTable(spark, path, key_col="url", n_buckets=16).create(schema)
     text = F.regexp_replace(
         F.decode(F.col("html"), "UTF-8"), "<[^>]+>", ""
@@ -6753,12 +6753,10 @@ def q_ndjson_roundtrip(spark, sf_dir):
     read_any with a DECLARED schema (no inference pass), aggregate.
     The oracle reads the original parquet — a lossy round-trip would
     hash-mismatch."""
-    import tempfile
-
     from clinvar_ingest_spark.sources.files import read_any, write_ndjson
 
     n = _t(spark, sf_dir, "nation")
-    path = tempfile.mkdtemp(prefix="ndjson_rt_") + "/nation"
+    path = _scratch_dir("ndjson_rt_") + "/nation"
     write_ndjson(n, path, compression="gzip")
     back = read_any(
         spark, path, "ndjson",

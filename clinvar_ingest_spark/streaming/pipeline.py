@@ -283,15 +283,23 @@ class IngestPipeline:
         The expensive transform (extraction) runs AFTER the LWW dedup
         inside the merge — only once per surviving key, and only once
         per batch (winners are persisted across the merge's actions).
+
+        The fence, the merge plan and the commit's CAS all use ONE read
+        of the head manifest: a commit that lands after the fence makes
+        this batch's CAS fail with ``CommitConflictError``, so a range
+        can never be committed twice.
         """
-        hwm = self.global_hwm()
+        m_cur = self.target.current_manifest()
+        props0 = (m_cur or {}).get("properties", {})
+        hwm = int(props0.get("global_hwm", -1))
+        last_batch_id = int(props0.get("batch_id", -1))
         if rng.hi <= hwm:
             # Fencing: already committed (reference analog: skip-existing
             # copy, workflow.py:211-224; started-row check). A skipped
             # range means a prior run committed it — heal any sidecar
             # rows that crash lost after that commit.
             self.ensure_sidecars()
-            return BatchReport(self.last_batch_id(), rng.lo, rng.hi, skipped=True)
+            return BatchReport(last_batch_id, rng.lo, rng.hi, skipped=True)
         if rng.lo != hwm:
             raise ValueError(
                 f"non-contiguous batch: hwm={hwm}, requested lo={rng.lo}"
@@ -300,9 +308,8 @@ class IngestPipeline:
         from clinvar_ingest_spark.metrics import stage
 
         t0 = time.monotonic()
-        batch_id = self.last_batch_id() + 1
+        batch_id = last_batch_id + 1
         raw = self.source.batch(rng)
-        m_cur = self.target.current_manifest() or {}
 
         n_dead = 0
         if self.dlq:
@@ -354,7 +361,7 @@ class IngestPipeline:
         #   leaves the serial floor entirely.
         local_pool = None
         fut = _prefetched_profile if not self.dlq else None
-        bootstrap = not self.dlq and not m_cur.get("buckets")
+        bootstrap = not self.dlq and not (m_cur or {}).get("buckets")
         if bootstrap and fut is None:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -381,7 +388,7 @@ class IngestPipeline:
                 agg["seq_hi"] = max(agg["seq_hi"], int(r["hi"]))
                 agg["n_rows"] += int(r["n"])
             part_ranges = [by_part[p] for p in sorted(by_part)]
-            hwm_by_part = self.checkpoints()
+            hwm_by_part = dict(props0.get("hwm_by_part", {}))
             for pr in part_ranges:
                 hwm_by_part[str(pr["part"])] = max(
                     pr["seq_hi"], hwm_by_part.get(str(pr["part"]), -1)
@@ -446,6 +453,7 @@ class IngestPipeline:
                     batch_stats=batch_stats,
                     merge_mode=self.merge_mode,
                     post_merge_transform=self.transform,
+                    parent=m_cur,
                 )
         finally:
             # merge failure hygiene: never leave a still-pending profile

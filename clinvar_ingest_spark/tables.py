@@ -90,12 +90,6 @@ _TYPE_BY_NAME = {
 ROW_ID_COL = "_row_id"
 
 
-class CheckViolation(ValueError):
-    """A batch (or the existing table, for add_check) fails a stored
-    CHECK constraint. Raised BEFORE anything is written — the commit
-    never happens, matching Delta constraint semantics."""
-
-
 class CommitConflictError(RuntimeError):
     """Another writer committed between our snapshot read and our commit.
 
@@ -965,10 +959,10 @@ class SnapshotTable:
 
     def rollback_to(self, snapshot_id: int) -> CommitResult:
         """Iceberg ``rollback_to_snapshot`` analog: a METADATA-ONLY
-        commit whose content — file lists, row totals, schema, evolution log, read
-        mode, sort order, bucket spec, properties (so CHECK constraints
-        and retention settings revert too) — is the target snapshot's,
-        with parent = the CURRENT head. No data file is touched or
+        commit whose content — file lists, row totals, schema, evolution
+        log, read mode, sort order, bucket spec, properties (so retention
+        settings revert too) — is the target snapshot's, with parent =
+        the CURRENT head. No data file is touched or
         rewritten; the abandoned snapshots stay on the committed chain,
         so they remain time-travelable and their files stay GC-safe
         until normal retention expires them. Reference analog: the
@@ -2184,6 +2178,8 @@ class SnapshotTable:
         batch_stats: dict[str, Any] | None = None,
         merge_mode: str = "cow",
         stage_ref: str | None = None,
+        *,
+        parent: dict[str, Any] | None = None,
     ) -> CommitResult:
         """MERGE the batch into the table with LWW semantics.
 
@@ -2228,8 +2224,14 @@ class SnapshotTable:
         reads LWW-resolve versions bucket-locally until ``compact()``
         folds them; the scale path when uniform update keys would make
         CoW rewrite the whole table every batch — see SCALE.md).
+
+        ``parent``: the manifest to plan and CAS against; default the
+        current head. A caller that fenced its batch on a manifest it
+        read passes that manifest, so a commit that lands after the
+        fence fails the CAS with :class:`CommitConflictError` instead
+        of committing the batch twice.
         """
-        m = self.current_manifest()
+        m = self.current_manifest() if parent is None else parent
         if m is None:
             raise ValueError(f"table {self.path} does not exist; create() it first")
 
@@ -2254,10 +2256,6 @@ class SnapshotTable:
         batch = batch.withColumn(
             BUCKET_COL, bucket_expr(self.key_col, self.n_buckets)
         )
-        # CHECK constraints gate the incoming LIVE rows (tombstones are
-        # payload-free delete markers) before any write happens
-        self._enforce_checks(batch, F.col(op_col) != F.lit(delete_op))
-
         # --- additive schema evolution (from the batch's own columns) ---
         target_schema = T.StructType.fromJson(m["schema"])
         new_fields = [
@@ -2460,8 +2458,8 @@ class SnapshotTable:
 
         The row count is recorded under ``stats_key`` (default
         ``n_rows``). A commit that adds and replaces no files and names
-        no ``stats_key`` (schema evolution, properties, equality
-        deletes) keeps the parent's stats: its files are the parent's.
+        no ``stats_key`` (schema evolution, equality deletes) keeps the
+        parent's stats: its files are the parent's.
 
         ``properties`` may be a callable, evaluated just before the
         atomic commit — callers overlap side computations with the
@@ -2785,87 +2783,6 @@ class SnapshotTable:
             n_rows_after=int(m.get("stats", {}).get("n_rows", -1)),
         )
 
-    # -- CHECK constraints (Delta ADD CONSTRAINT analog) ---------------
-    # Stored in table properties as ``check.<name> -> SQL expr`` so they
-    # version with the manifest chain (time travel shows which checks
-    # guarded which snapshot). SQL semantics: a row VIOLATES when the
-    # expression evaluates to FALSE; NULL passes. Enforced on ingest
-    # batches (merge_upsert) and merge_into sources BEFORE anything is
-    # written — one map-side aggregate over the incoming rows, cost ∝
-    # batch, never table.
-    _CHECK_PREFIX = "check."
-
-    def alter_properties(self, updates: dict[str, Any]) -> "CommitResult":
-        """Metadata-only commit: same buckets/schema, updated props."""
-        m = self.current_manifest()
-        if m is None:
-            raise ValueError(f"table {self.path} does not exist")
-        props = dict(m.get("properties", {}))
-        for k, v in updates.items():
-            if v is None:
-                props.pop(k, None)
-            else:
-                props[k] = v
-        # the new map REPLACES the parent's (a None value removed its
-        # key), so the commit starts from no properties
-        return self._commit_files(
-            {**m, "properties": {}}, {}, {}, [], properties=props
-        )
-
-    def add_check(self, name: str, expr_sql: str) -> "CommitResult":
-        """Register a CHECK constraint; existing LIVE rows must already
-        satisfy it (validated with one pruned scan, like Delta)."""
-        # fail fast on unparseable expressions
-        probe = self.read().limit(0)
-        probe.filter(F.expr(expr_sql)).schema  # raises on bad SQL
-        bad = (
-            self.read()
-            .filter(F.coalesce(~F.expr(expr_sql), F.lit(False)))
-            .limit(1)
-            .collect()
-        )
-        if bad:
-            raise CheckViolation(
-                f"existing row violates check {name!r} ({expr_sql}): "
-                f"{bad[0].asDict()}"
-            )
-        return self.alter_properties({self._CHECK_PREFIX + name: expr_sql})
-
-    def drop_check(self, name: str) -> "CommitResult":
-        return self.alter_properties({self._CHECK_PREFIX + name: None})
-
-    def checks(self) -> dict[str, str]:
-        m = self.current_manifest() or {}
-        pre = self._CHECK_PREFIX
-        return {
-            k[len(pre):]: v
-            for k, v in m.get("properties", {}).items()
-            if k.startswith(pre)
-        }
-
-    def _enforce_checks(self, df: DataFrame, live_mask=None) -> None:
-        """Raise CheckViolation when any (live) row fails any stored
-        check. ONE aggregate pass computes every check's violation
-        count — map-side combinable, no shuffle beyond the final
-        scalar."""
-        checks = self.checks()
-        if not checks:
-            return
-        scoped = df.filter(live_mask) if live_mask is not None else df
-        aggs = [
-            F.sum(
-                F.coalesce(~F.expr(sql), F.lit(False)).cast("long")
-            ).alias(name)
-            for name, sql in checks.items()
-        ]
-        row = scoped.agg(*aggs).collect()[0]
-        violated = {n: int(row[n] or 0) for n in checks if row[n]}
-        if violated:
-            details = ", ".join(
-                f"{n} ({checks[n]}): {c} rows" for n, c in violated.items()
-            )
-            raise CheckViolation(f"batch violates checks — {details}")
-
     def merge_into(
         self,
         source: DataFrame,
@@ -2980,11 +2897,6 @@ class SnapshotTable:
             ).alias(BUCKET_COL)
         )
         result = j.filter(~delete_mask & (stored | insert_mask)).select(*out)
-        # checks validate the FINAL live rows of the touched buckets —
-        # update expressions and inserts both gated before the rewrite
-        self._enforce_checks(
-            result, ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        )
         return self._rewrite_buckets(m, touched, result)
 
     def _rewrite_buckets(self, m, touched, df) -> CommitResult:

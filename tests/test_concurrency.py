@@ -272,3 +272,41 @@ def test_release_lock_checks_ownership(spark, tmp_path):
         f.write(str(os.getpid()))               # ours
     t._release_lock(lock)
     assert not os.path.exists(lock)
+
+
+def test_racing_pipeline_cannot_commit_a_fenced_range(
+    spark, tmp_path, monkeypatch
+):
+    """The HWM fence and the merge's CAS read ONE manifest: when another
+    pipeline commits the same range after this batch passed its fence,
+    this batch's commit fails instead of applying the range twice, and
+    its retry is fenced off."""
+    path = str(tmp_path / "t")
+    log = synthetic_change_log(spark, 600, n_urls=100)
+    SnapshotTable(spark, path, "url", 8).create(PAGES)
+    pipe_a = IngestPipeline(
+        spark, ChangeLogSource(log), SnapshotTable(spark, path, "url", 8)
+    )
+    pipe_b = IngestPipeline(
+        spark, ChangeLogSource(log), SnapshotTable(spark, path, "url", 8)
+    )
+    pipe_a.run_batch(OffsetRange(-1, 299), log_end_seq=599)
+
+    merge_a = pipe_a.target.merge_upsert
+
+    def racing_merge(*args, **kwargs):
+        # B commits the range between A's fence and A's merge
+        assert not pipe_b.run_batch(OffsetRange(299, 599), log_end_seq=599).skipped
+        return merge_a(*args, **kwargs)
+
+    monkeypatch.setattr(pipe_a.target, "merge_upsert", racing_merge)
+    with pytest.raises(CommitConflictError):
+        pipe_a.run_batch(OffsetRange(299, 599), log_end_seq=599)
+    monkeypatch.undo()
+
+    t = pipe_a.target
+    batch_ids = [
+        t._load_manifest(n)["properties"].get("batch_id") for n in t.history()
+    ]
+    assert batch_ids.count(1) == 1
+    assert pipe_a.run_batch(OffsetRange(299, 599), log_end_seq=599).skipped

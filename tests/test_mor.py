@@ -181,7 +181,6 @@ def _footer_bucket_rows(m):
 _META_OPS = {
     "rename_column": lambda t: t.rename_column("text", "body"),
     "add_column": lambda t: t.add_column("extra", "string", default="d"),
-    "add_check": lambda t: t.add_check("seq_nonneg", "seq >= 0"),
     "delete_where_delta": lambda t: t.delete_where(
         F.col("url") == "u25", mode="delta"
     ),

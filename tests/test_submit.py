@@ -13,6 +13,7 @@ import os
 import shutil
 import subprocess
 import sys
+import textwrap
 
 import pytest
 
@@ -130,3 +131,32 @@ def test_driver_window_membership_is_pinned():
     # lm_perplexity: row-local log-space floats, deterministic within
     # the engine but not bit-portable across libms -> rows-only check
     assert no_oracle <= {"multimodal_features", "lm_perplexity"}, no_oracle
+
+
+def test_gate_tables_removed_at_exit(tmp_path):
+    """Gates write their tables under the temp dir and return DataFrames
+    that read them lazily, so the tables must live until the process
+    exits and be gone after: repeated oracle sweeps leave nothing, not
+    even a derived table written next to its source table."""
+    from tests.test_plans import SF
+
+    prefixes = ("ndjson_rt_", "cdc_gate_")
+    child = textwrap.dedent(f"""
+        import os, tempfile
+        import __spark_entry__ as e
+        from clinvar_ingest_spark.session import get_spark
+        spark = get_spark("gate-cleanup", master="local[2]", shuffle_partitions=4)
+        for name in ("ndjson_roundtrip", "cdc_pipeline_state", "cdc_domain_stats"):
+            e.queries()[name](spark, {SF!r}).collect()
+        print(" ".join(sorted(os.listdir(tempfile.gettempdir()))))
+    """)
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=REPO)
+    r = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    during = r.stdout.splitlines()[-1].split()
+    for p in prefixes:
+        assert any(n.startswith(p) for n in during), (p, during)
+    assert [n for n in os.listdir(tmp_path) if n.startswith(prefixes)] == []

@@ -306,46 +306,6 @@ def test_bloom_sidecar_is_snapshot_scoped(spark, tmp_table_dir):
     assert t.bloom_prune_buckets("text", "beta") is not None
 
 
-def test_check_constraints_gate_commits(spark, tmp_table_dir):
-    """Delta-style CHECK constraints: violating batches are refused
-    BEFORE any write (snapshot unchanged), NULL passes (SQL
-    semantics), add_check validates existing rows, drop_check lifts
-    the gate, and merge_into's final rows are gated too."""
-    import pytest
-
-    from clinvar_ingest_spark.tables import CheckViolation
-
-    t = _mk(spark, tmp_table_dir)
-    t.merge_upsert(_batch(spark, [("u1", TS, 1, "ok", "insert")]))
-    t.add_check("seq_positive", "seq > 0")
-    assert t.checks() == {"seq_positive": "seq > 0"}
-    sid = t.snapshot_id()
-    with pytest.raises(CheckViolation, match="seq_positive"):
-        t.merge_upsert(_batch(spark, [("u2", TS, -5, "bad", "insert")]))
-    assert t.snapshot_id() == sid  # nothing committed
-    # NULL passes; tombstones exempt even when the payload would fail
-    t.merge_upsert(
-        _batch(
-            spark,
-            [("u3", TS, None, "nullseq", "insert"),
-             ("u1", TS + dt.timedelta(1), -1, None, "delete")],
-        )
-    )
-    # add_check refuses when existing rows violate
-    with pytest.raises(CheckViolation, match="existing row"):
-        t.add_check("short_text", "length(text) <= 2")
-    # merge_into update expressions are gated on the FINAL rows
-    src = spark.createDataFrame(
-        [("u3", TS, 9, "x")],
-        "url string, warc_ts timestamp, seq long, text string",
-    )
-    with pytest.raises(CheckViolation):
-        t.merge_into(src, when_matched_update={"seq": F.lit(-7)})
-    t.drop_check("seq_positive")
-    t.merge_upsert(_batch(spark, [("u4", TS, -5, "now ok", "insert")]))
-    assert t.read().filter(F.col("url") == "u4").count() == 1
-
-
 def test_wap_stage_audit_publish(spark, tmp_table_dir):
     """Write-audit-publish: a staged merge is invisible to readers
     until published; publish is a CAS (an interleaved commit forces
