@@ -4084,12 +4084,10 @@ def q_cdc_row_lineage(spark, sf_dir):
 
 def q_cdc_wap_state(spark, sf_dir):
     """Write-audit-publish through the CDC pipeline: batch 1 commits
-    directly, batch 2 is STAGED (readers still see batch 1), audited
-    via read_staged, then published — the final state must equal the
-    direct 2-batch replay, which is exactly what the shared LWW oracle
-    asserts."""
-    from clinvar_ingest_spark.sources import ChangeLogSource
-
+    directly, batch 2 is staged on an ``audit`` branch (main readers
+    still see batch 1), audited through the branch view, then published
+    by fast-forward — the final state must equal the direct 2-batch
+    replay, which is exactly what the shared LWW oracle asserts."""
     tbl = _run_cdc(spark, sf_dir, n_batches=1, return_table=True,
                    log_builder=lambda s, d: _events_as_change_log(s, d)
                    .filter(F.col("seq") % 2 == 0))
@@ -4098,16 +4096,16 @@ def q_cdc_wap_state(spark, sf_dir):
     log = _events_as_change_log(spark, sf_dir).filter(
         F.col("seq") % 2 == 1
     )
-    tbl.merge_upsert(
+    tbl.create_branch("audit")
+    audit = tbl.branch("audit")
+    audit.merge_upsert(
         log.drop("part"),
         post_merge_transform=lambda df: df.withColumn(
             "text", F.coalesce(F.col("text"), extract_text("html"))
         ),
-        stage_ref="audit",
     )
-    n_staged = tbl.read_staged("audit").count()
-    assert n_staged > 0  # the audit step
-    tbl.publish_staged("audit")
+    assert audit.read().count() > 0  # the audit step
+    tbl.fast_forward("audit")
     return tbl.read().select("url", "seq", "text").orderBy("url")
 
 

@@ -53,11 +53,14 @@ _MANIFESTS = "_manifests"
 _DATA = "data"
 _LOCK = "_commit.lock"
 # JSON sidecars at the table root, each read-modify-written under _LOCK
-_STAGED = "_staged.json"
 _BRANCHES = "_branches.json"
 _CLONES = "_clones.json"
 BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"
+# the evolution log (renames, widenings, defaulted adds) and equality
+# delete files: carried from parent to child manifest by every commit,
+# because read() resolves each data file against them
+_EVO_KEYS = ("renames", "widens", "adds", "delete_files")
 # Iceberg-style type promotion (widen_column): the only allowed
 # metadata-only type changes — strictly lossless widenings, so files
 # written before the widen are read under their narrow stored type and
@@ -238,7 +241,7 @@ class SnapshotTable:
         # caller constructing with a stale n_buckets (or the default)
         # would otherwise bucket its batches differently than the
         # stored layout — heal silently, constructor value only seeds
-        # create()/rebucket()
+        # create()
         if int(m.get("n_buckets", self.n_buckets)) != self.n_buckets:
             self.n_buckets = int(m["n_buckets"])
         return m
@@ -293,15 +296,12 @@ class SnapshotTable:
     ) -> Iterator[dict[str, Any]]:
         """Yield every manifest reachable from the table's roots, each
         once, by parent links: ``chain`` (default: the committed
-        :meth:`history`) plus the staged (WAP) and branch heads, whose
-        commits are off the main chain. Names that fail to load are
-        skipped. The one manifest-graph walk: the orphan GC, clone
-        materialization, GDPR purge and vacuum all read through it."""
-        stack = (
-            (self.history() if chain is None else list(chain))
-            + list(self._load_side(_STAGED, {}).values())
-            + list(self._load_side(_BRANCHES, {}).values())
-        )
+        :meth:`history`) plus the branch heads, whose commits are off
+        the main chain. Names that fail to load are skipped. The one
+        manifest-graph walk: the orphan GC, clone materialization, GDPR
+        purge and vacuum all read through it."""
+        stack = self.history() if chain is None else list(chain)
+        stack += self._load_side(_BRANCHES, {}).values()
         seen: set[str] = set()
         while stack:
             name = stack.pop()
@@ -321,9 +321,8 @@ class SnapshotTable:
         commits); runs inside the commit lock so no concurrent writer's
         in-flight manifest can be swept."""
         d = os.path.join(self.path, _MANIFESTS)
-        # staged (write-audit-publish) manifests and branch heads are
-        # roots too: they are not on the pointer chain, but
-        # publish_staged / fast_forward will need them
+        # branch heads are roots too: they are not on the pointer
+        # chain, but fast_forward will need them
         reachable = set()
         for m in self._walk_manifests([chain_head]):
             if "parent_name" not in m:
@@ -960,7 +959,7 @@ class SnapshotTable:
     def rollback_to(self, snapshot_id: int) -> CommitResult:
         """Iceberg ``rollback_to_snapshot`` analog: a METADATA-ONLY
         commit whose content — file lists, row totals, schema, evolution
-        log, read mode, sort order, bucket spec, properties (so retention
+        log, read mode, sort order, properties (so retention
         settings revert too) — is the target snapshot's, with parent =
         the CURRENT head. No data file is touched or
         rewritten; the abandoned snapshots stay on the committed chain,
@@ -977,66 +976,25 @@ class SnapshotTable:
             raise ValueError(f"already at snapshot {snapshot_id}")
         t = self.manifest_at(snapshot_id)  # committed-chain resolution only
         buckets = {int(b): list(fs) for b, fs in t["buckets"].items()}
-        old_n = self.n_buckets
-        self.n_buckets = int(t.get("n_buckets", old_n))
-        try:
-            sid, mp = self._commit(
-                buckets,
-                T.StructType.fromJson(t["schema"]),
-                dict(t.get("properties", {})),
-                m["snapshot_id"],
-                dict(t.get("stats", {})),
-                read_mode=t.get("read_mode", "plain"),
-                order_cols=t.get("order_cols"),
-                parent_name=m["_name"],
-                # restore the TARGET's evolution log verbatim (empty
-                # lists override _commit's copy-forward from the head,
-                # so a rollback across a rename/drop really reverts it)
-                schema_evolution={
-                    "renames": list(t.get("renames", [])),
-                    "dropped": list(t.get("dropped", [])),
-                    "widens": list(t.get("widens", [])),
-                    "adds": list(t.get("adds", [])),
-                    "delete_files": list(t.get("delete_files", [])),
-                },
-                bucket_rows=_bucket_rows(t),
-            )
-        except BaseException:
-            self.n_buckets = old_n
-            raise
+        sid, mp = self._commit(
+            buckets,
+            T.StructType.fromJson(t["schema"]),
+            dict(t.get("properties", {})),
+            m["snapshot_id"],
+            dict(t.get("stats", {})),
+            read_mode=t.get("read_mode", "plain"),
+            order_cols=t.get("order_cols"),
+            parent_name=m["_name"],
+            # the TARGET's evolution log verbatim (empty lists included,
+            # so a rollback across a rename really reverts it)
+            schema_evolution={k: list(t.get(k, [])) for k in _EVO_KEYS},
+            bucket_rows=_bucket_rows(t),
+        )
         return CommitResult(
             sid, mp, sorted(buckets), 0, 0,
             int(t.get("stats", {}).get("n_rows", -1)),
             dict(t.get("properties", {})),
         )
-
-    def rebucket(self, new_n_buckets: int) -> CommitResult:
-        """Partition evolution: rewrite the whole table under a new
-        bucket count (the Iceberg partition-spec-evolution analog for a
-        bucketed layout — ours requires a rewrite because bucket id is
-        baked into file placement). The one-time full shuffle buys every
-        later merge finer write parallelism / smaller task state; MoR
-        deltas are folded in the process, so the result reads plain."""
-        m = self.current_manifest()
-        if m is None:
-            raise ValueError(f"table {self.path} does not exist")
-        if new_n_buckets == self.n_buckets:
-            raise ValueError(f"table already has {new_n_buckets} buckets")
-        df = self.read(include_deleted=True).drop(BUCKET_COL).withColumn(
-            BUCKET_COL, bucket_expr(self.key_col, new_n_buckets)
-        )
-        old_n = self.n_buckets
-        self.n_buckets = new_n_buckets
-        try:
-            new_files, new_rows = self._write_buckets(df, m["snapshot_id"] + 1)
-            # every bucket is replaced
-            return self._commit_files(
-                {**m, "buckets": {}}, new_files, new_rows, sorted(new_files),
-                stats_key="n_rows", read_mode="plain",
-            )
-        except BaseException:
-            self.n_buckets = old_n
-            raise
 
     # --------------------------------------------------- schema evolution
     _PROTECTED_COLS = (BUCKET_COL, DELETED_COL, ROW_ID_COL)
@@ -1067,12 +1025,6 @@ class SnapshotTable:
                 "on this table; reusing it would make pre-rename "
                 "files ambiguous — pick a fresh name"
             )
-        if new in set(m.get("dropped", [])):
-            raise ValueError(
-                f"column name {new!r} was dropped from this table; "
-                "renaming onto it would resurrect stale bytes from "
-                "pre-drop files — pick a fresh name"
-            )
         if old in (m.get("order_cols") or []):
             raise ValueError(f"cannot rename order column {old!r}")
         new_schema = T.StructType(
@@ -1087,30 +1039,6 @@ class SnapshotTable:
         log.append({"sid": m["snapshot_id"] + 1, "from": old, "to": new})
         return self._commit_files(
             m, {}, {}, [], schema=new_schema, schema_evolution={"renames": log}
-        )
-
-    def drop_column(self, name: str) -> CommitResult:
-        """METADATA-ONLY column drop: the field leaves the schema, old
-        files' bytes are simply never read again. The name is recorded
-        in ``dropped`` and cannot be re-added by additive evolution —
-        re-adding it would resurrect stale bytes from pre-drop files."""
-        m = self.current_manifest()
-        if m is None:
-            raise ValueError(f"table {self.path} does not exist")
-        schema = T.StructType.fromJson(m["schema"])
-        if name == self.key_col or name in self._PROTECTED_COLS:
-            raise ValueError(f"cannot drop {name!r}")
-        if name in (m.get("order_cols") or []):
-            raise ValueError(f"cannot drop order column {name!r}")
-        if name not in schema.names:
-            raise ValueError(f"no column {name!r}")
-        new_schema = T.StructType(
-            [f for f in schema.fields if f.name != name]
-        )
-        dropped = list(m.get("dropped", []))
-        dropped.append(name)
-        return self._commit_files(
-            m, {}, {}, [], schema=new_schema, schema_evolution={"dropped": dropped}
         )
 
     def add_column(
@@ -1136,12 +1064,6 @@ class SnapshotTable:
         schema = T.StructType.fromJson(m["schema"])
         if name in schema.names:
             raise ValueError(f"column {name!r} already exists")
-        if name in set(m.get("dropped", [])):
-            raise ValueError(
-                f"column name {name!r} was dropped from this table; "
-                "re-adding it would resurrect stale bytes from "
-                "pre-drop files — use a new column name"
-            )
         if name in {r["from"] for r in m.get("renames", [])}:
             raise ValueError(
                 f"column name {name!r} is a historical rename source "
@@ -1315,13 +1237,12 @@ class SnapshotTable:
         hold it for milliseconds) or, best-effort on a local FS, when the
         recorded pid is no longer alive. A writer SIGKILLed between lock
         creation and the finally-unlink previously wedged the table
-        forever (every commit, including merge_upsert_retrying, spun the
-        full wait and raised). Breaking goes through
-        :meth:`_break_stale_lock`: a secondary breaker lock serializes
-        breakers, and the break is verified by inode so a stale lock
-        that was released-and-reacquired by a live writer between the
-        staleness check and the rename is restored, not stolen
-        (round-3 ADVICE TOCTOU)."""
+        forever (every commit spun the full wait and raised). Breaking
+        goes through :meth:`_break_stale_lock`: a secondary breaker lock
+        serializes breakers, and the break is verified by inode so a
+        stale lock that was released-and-reacquired by a live writer
+        between the staleness check and the rename is restored, not
+        stolen (round-3 ADVICE TOCTOU)."""
         lock = os.path.join(self.path, _LOCK)
         deadline = time.monotonic() + wait
         while True:
@@ -1453,21 +1374,14 @@ class SnapshotTable:
         order_cols: list[str] | None = None,
         parent_name: str | None = None,
         schema_evolution: dict[str, Any] | None = None,
-        stage_ref: str | None = None,
         bucket_rows: dict[int, int] | None = None,
     ) -> tuple[int, str]:
         """Commit = CAS on the pointer (Iceberg catalog analog).
 
         ``bucket_rows`` holds the row total of each bucket in
         ``buckets``; only a commit with no buckets may omit it.
-
-        ``stage_ref``: write-audit-publish staging — the manifest is
-        written and registered under ``_staged.json[stage_ref]`` but
-        the pointer does NOT move; readers keep seeing the parent
-        snapshot until :meth:`publish_staged` swaps the pointer (after
-        the audit passes) or :meth:`abort_staged` discards it. The CAS
-        check still runs at stage time so the staged commit is planned
-        against the current state, and runs AGAIN at publish.
+        ``schema_evolution`` is the manifest's whole evolution log
+        (:data:`_EVO_KEYS`): the caller carries it from the parent.
 
         The swap itself is atomic (``os.replace``); conflict detection
         makes it a compare-and-swap: under a short-lived lock file we
@@ -1478,26 +1392,8 @@ class SnapshotTable:
         commits N+1; the loser must re-read and retry. Manifests written
         by a commit that lost the race (or crashed pre-swap) are orphans:
         unreachable from the pointer chain and GC'd here."""
-        if stage_ref is not None and self._branch is not None:
-            raise ValueError(
-                "WAP staging and branch commits don't compose — commit "
-                "to the branch directly (it already is the audit copy)"
-            )
         os.makedirs(os.path.join(self.path, _MANIFESTS), exist_ok=True)
         sid = parent + 1
-        # schema-evolution log rides every manifest: copied forward from
-        # the parent here (single touch point) so rename/drop history
-        # survives merges, compactions, and DML without each caller
-        # threading it through
-        evo: dict[str, Any] = {}
-        if parent_name is not None:
-            try:
-                pm = self._load_manifest(parent_name)
-                for k in ("renames", "dropped", "widens", "adds", "delete_files"):
-                    if pm.get(k):
-                        evo[k] = pm[k]
-            except OSError:
-                pass
         manifest = {
             "snapshot_id": sid,
             "parent_id": parent,
@@ -1515,7 +1411,6 @@ class SnapshotTable:
         }
         if order_cols:
             manifest["order_cols"] = list(order_cols)
-        manifest.update(evo)
         if schema_evolution:
             manifest.update(schema_evolution)
         name = f"m-{sid:08d}-{uuid.uuid4().hex[:8]}.json"
@@ -1531,11 +1426,7 @@ class SnapshotTable:
                 )
             with open(mpath, "w") as f:
                 json.dump(manifest, f)
-            if stage_ref is not None:
-                staged = self._load_side(_STAGED, {})
-                staged[stage_ref] = name
-                self._save_side(_STAGED, staged)
-            elif self._branch is not None:
+            if self._branch is not None:
                 # branch commit: the CAS above already compared against
                 # the branch head (branch-aware _read_ptr); advance the
                 # branch ref, never the main pointer
@@ -1552,63 +1443,6 @@ class SnapshotTable:
             self._release_lock(lock)
         return sid, mpath
 
-    # -- write-audit-publish staging (Iceberg WAP analog) --------------
-    def staged_refs(self) -> dict[str, str]:
-        return dict(self._load_side(_STAGED, {}))
-
-    def read_staged(self, ref: str) -> DataFrame:
-        """Read the staged snapshot (the audit step's view)."""
-        staged = self._load_side(_STAGED, {})
-        if ref not in staged:
-            raise ValueError(f"no staged ref {ref!r}")
-        return self.read(snapshot=self._load_manifest(staged[ref]))
-
-    def publish_staged(self, ref: str) -> int:
-        """Audit passed: atomically make the staged snapshot current.
-        CAS semantics — fails with :class:`CommitConflictError` if the
-        table advanced since the stage was planned (the staged merge
-        would silently drop the interleaved commit's rows; re-stage
-        against the new state instead)."""
-        if self._branch is not None:
-            raise ValueError("publish_staged runs on the main table")
-        lock = self._acquire_lock()
-        try:
-            staged = self._load_side(_STAGED, {})
-            if ref not in staged:
-                raise ValueError(f"no staged ref {ref!r}")
-            name = staged.pop(ref)
-            man = self._load_manifest(name)
-            current = self._read_ptr()
-            if current != man.get("parent_name"):
-                raise CommitConflictError(
-                    f"staged ref {ref!r} was planned against "
-                    f"{man.get('parent_name')!r} but the pointer now "
-                    f"names {current!r} — abort and re-stage"
-                )
-            _atomic_write(self._ptr_path(), name)
-            self._save_side(_STAGED, staged)
-            self._gc_orphan_manifests(name)
-            return man["snapshot_id"]
-        finally:
-            self._release_lock(lock)
-
-    def abort_staged(self, ref: str) -> None:
-        """Audit failed: discard the staged manifest (its data files
-        become orphans; vacuum_orphans sweeps them)."""
-        lock = self._acquire_lock()
-        try:
-            staged = self._load_side(_STAGED, {})
-            if ref not in staged:
-                raise ValueError(f"no staged ref {ref!r}")
-            name = staged.pop(ref)
-            self._save_side(_STAGED, staged)
-            try:
-                os.unlink(os.path.join(self.path, _MANIFESTS, name))
-            except OSError:
-                pass
-        finally:
-            self._release_lock(lock)
-
     # -- branch refs (Iceberg branch analog) ---------------------------
     # A branch is a named head in _branches.json that advances through
     # the SAME _commit CAS as main (compare-and-swap against the branch
@@ -1617,18 +1451,9 @@ class SnapshotTable:
     # writer resolves its head through the branch-aware _read_ptr, so
     # the whole write surface works on a branch with zero extra code:
     # Iceberg's branch semantics, but uniform across the whole engine.
-    # WAP staging (stage_ref) is the single-commit special case;
-    # branches are the multi-commit generalization.
-
-    def branches(self) -> dict[str, int]:
-        """branch name -> head snapshot id."""
-        out = {}
-        for name, mname in self._load_side(_BRANCHES, {}).items():
-            try:
-                out[name] = self._load_manifest(mname)["snapshot_id"]
-            except OSError:
-                continue
-        return out
+    # Write-audit-publish is a branch too: create it, commit the batch
+    # on its view, audit that view, then fast_forward (publish) or
+    # drop_branch (abort) — Iceberg's own WAP runs on branches.
 
     def create_branch(self, name: str, snapshot_id: int | None = None) -> int:
         """Create branch ``name`` at the current MAIN head (or at a
@@ -1668,9 +1493,11 @@ class SnapshotTable:
         return view
 
     def drop_branch(self, name: str) -> None:
-        """Delete the branch ref; its exclusive manifests/files become
-        orphans (swept by the next commit's manifest GC and by
-        vacuum_orphans)."""
+        """Delete the branch ref — the abort half of write-audit-publish;
+        its exclusive manifests/files become orphans (swept by the next
+        commit's manifest GC and by vacuum_orphans). A failed audit must
+        end here: a live branch pins its files and makes
+        ``vacuum_orphans(keep_snapshots=)`` refuse to expire."""
         lock = self._acquire_lock()
         try:
             brs = self._load_side(_BRANCHES, {})
@@ -1821,7 +1648,7 @@ class SnapshotTable:
             }
             if m.get("order_cols"):
                 manifest["order_cols"] = list(m["order_cols"])
-            for k in ("renames", "dropped", "widens", "adds", "delete_files"):
+            for k in _EVO_KEYS:
                 if m.get(k):
                     manifest[k] = m[k]
             os.makedirs(os.path.join(dst_path, _MANIFESTS), exist_ok=True)
@@ -1852,9 +1679,9 @@ class SnapshotTable:
         m = self.current_manifest()
         if m is None:
             raise ValueError(f"table {self.path} does not exist")
-        # ALL reachable manifests — staged (WAP) and branch chains
-        # reference files too; remapping only the main chain would
-        # deregister while they still point at the source
+        # ALL reachable manifests — branch chains reference files
+        # too; remapping only the main chain would deregister while
+        # they still point at the source
         foreign = set(self._foreign_files(list(self._walk_manifests())))
         if not foreign:
             return None
@@ -1875,8 +1702,8 @@ class SnapshotTable:
         try:
             # re-resolve every reachable manifest under the lock and
             # swap paths IN PLACE (same shape as purge_key's remap):
-            # history, staged refs, branches, and time travel all
-            # become self-contained, not just the head
+            # history, branches, and time travel all become
+            # self-contained, not just the head
             head = self._read_ptr()
             for mm_ in self._walk_manifests():
                 changed = False
@@ -2065,14 +1892,15 @@ class SnapshotTable:
             df = df.withColumn(DELETED_COL, F.lit(False))
         os.makedirs(self.path, exist_ok=True)
         buckets, rows = self._write_buckets(df, m["snapshot_id"] + 1)
-        # the parent contributes its properties only: every bucket, the
-        # read mode and the sort order are replaced
+        # the parent contributes its properties and evolution log only:
+        # every bucket, the read mode and the sort order are replaced
         res = self._commit_files(
             {
                 "snapshot_id": m["snapshot_id"],
                 "_name": m["_name"],
                 "buckets": {},
                 "properties": m.get("properties", {}),
+                **{k: m[k] for k in _EVO_KEYS if k in m},
             },
             buckets, rows, sorted(buckets),
             schema=df.schema, properties=properties,
@@ -2177,7 +2005,6 @@ class SnapshotTable:
         post_merge_transform=None,
         batch_stats: dict[str, Any] | None = None,
         merge_mode: str = "cow",
-        stage_ref: str | None = None,
         *,
         parent: dict[str, Any] | None = None,
     ) -> CommitResult:
@@ -2263,22 +2090,14 @@ class SnapshotTable:
             for f in batch.schema.fields
             if f.name not in target_schema.names and f.name != op_col
         ]
-        dropped = set(m.get("dropped", []))
-        # historical rename SOURCES are just as poisonous as dropped
-        # names: surviving pre-rename files still store their bytes
-        # under the old name, so re-introducing it makes
-        # _schema_at_write map two current columns onto one stored
-        # name and every read of the snapshot fails with
-        # COLUMN_ALREADY_EXISTS (without field IDs, name reuse is
-        # unambiguous only if we forbid it).
+        # historical rename SOURCES are poisonous: surviving
+        # pre-rename files still store their bytes under the old
+        # name, so re-introducing it makes _schema_at_write map two
+        # current columns onto one stored name and every read of the
+        # snapshot fails with COLUMN_ALREADY_EXISTS (without field IDs,
+        # name reuse is unambiguous only if we forbid it).
         renamed_from = {r["from"] for r in m.get("renames", [])}
         for f in new_fields:
-            if f.name in dropped:
-                raise ValueError(
-                    f"column {f.name!r} was dropped from this table; "
-                    "re-adding it would resurrect stale bytes from "
-                    "pre-drop files — use a new column name"
-                )
             if f.name in renamed_from:
                 raise ValueError(
                     f"column {f.name!r} is a historical rename source "
@@ -2420,7 +2239,6 @@ class SnapshotTable:
             read_mode="lww" if mor else None,
             order_cols=list(order_cols) if mor else None,
             batch_stats=batch_stats,
-            stage_ref=stage_ref,
         )
 
     def _commit_files(
@@ -2437,7 +2255,6 @@ class SnapshotTable:
         read_mode: str | None = None,
         order_cols: list[str] | None = None,
         batch_stats: dict[str, Any] | None = None,
-        stage_ref: str | None = None,
         schema_evolution: dict[str, Any] | None = None,
     ) -> CommitResult:
         """The one commit tail for every data and metadata commit after
@@ -2467,7 +2284,10 @@ class SnapshotTable:
         event counts in ``batch_stats`` are read AFTER that call, so a
         callable that resolves deferred stats reports true counts.
         ``schema``, ``read_mode`` and ``order_cols`` default to the
-        parent's."""
+        parent's. The evolution log (:data:`_EVO_KEYS`) is copied
+        forward from ``m``, each key overridden by ``schema_evolution``
+        — so rename/widen/add history survives merges, compactions and
+        DML without each caller threading it through."""
         buckets = {int(b): list(f) for b, f in m["buckets"].items()}
         rows = _bucket_rows(m)
         if append:
@@ -2492,6 +2312,8 @@ class SnapshotTable:
         if batch_stats is not None:
             n_up = int(batch_stats["n_upserts"])
             n_del = int(batch_stats["n_deletes"])
+        evo = {k: m[k] for k in _EVO_KEYS if m.get(k)}
+        evo.update(schema_evolution or {})
         with _stage("merge.commit"):
             sid, mp = self._commit(
                 buckets,
@@ -2502,28 +2324,10 @@ class SnapshotTable:
                 read_mode=read_mode or m.get("read_mode", "plain"),
                 order_cols=order_cols or m.get("order_cols"),
                 parent_name=m["_name"],
-                schema_evolution=schema_evolution,
-                stage_ref=stage_ref,
+                schema_evolution=evo,
                 bucket_rows=rows,
             )
         return CommitResult(sid, mp, list(touched), n_up, n_del, n_after, props)
-
-    def merge_upsert_retrying(
-        self, batch: DataFrame, retries: int = 3, **kwargs
-    ) -> CommitResult:
-        """CAS-with-retry merge (the full Iceberg commit loop): on
-        :class:`CommitConflictError` the merge re-reads the NEW current
-        snapshot and re-applies — safe because the merge is
-        LWW-idempotent over {stored ∪ batch}, so applying after a
-        concurrent commit converges to the same state as any serial
-        order of the two commits."""
-        last: CommitConflictError | None = None
-        for _ in range(retries + 1):
-            try:
-                return self.merge_upsert(batch, **kwargs)
-            except CommitConflictError as e:  # re-plan against new parent
-                last = e
-        raise last
 
     def compact(
         self,
@@ -2986,9 +2790,9 @@ class SnapshotTable:
                 chain = cut
         finally:
             self._release_lock(lock)
-        # staged (unpublished) snapshots' and branch chains' files are
-        # NOT orphans. Shallow clones reference this table's files by
-        # absolute path: every live clone's reachable manifests are GC
+        # branch chains' files are NOT orphans. Shallow clones
+        # reference this table's files by absolute path: every live
+        # clone's reachable manifests are GC
         # roots too (this is the contract Delta's VACUUM breaks — a
         # vacuumed source silently corrupts its shallow clones).
         # Dropped clones fall out of clones() and stop pinning anything.
@@ -3029,15 +2833,15 @@ class SnapshotTable:
     def purge_key(self, value) -> "PurgeResult":
         """GDPR right-to-be-forgotten: physically remove every row for
         ``key_col == value`` from EVERY reachable snapshot — committed
-        history, branches, and staged (WAP) manifests alike — not just
-        the head. Iceberg can only purge history by expiring snapshots;
-        because this engine owns its manifests, it rewrites them in
+        history and branches alike — not just the head. Iceberg can
+        only purge history by expiring snapshots; because this engine
+        owns its manifests, it rewrites them in
         place instead, so snapshot ids, parent links, lineage, and time
         travel all survive with the key excised.
 
-        Mechanics: the key's bucket is computable under every bucket
-        spec in history (partition evolution included), so candidates
-        are O(#snapshots) files, never a table scan. Each candidate is
+        Mechanics: the key's bucket is the same in every snapshot (a
+        table's bucket count is fixed at ``create``), so candidates are
+        O(#snapshots) files, never a table scan. Each candidate is
         rewritten by an executor task (pyarrow read → filter → write at
         a final path in the SAME ``s{sid}-`` epoch dir, preserving
         write-epoch schema resolution); files whose every row was the
@@ -3053,10 +2857,10 @@ class SnapshotTable:
         AFTER the purge began are new data and are not covered — re-run
         to purge them.
 
-        scale: one tiny Spark job computes the bucket per distinct
-        bucket spec (≤ #specs rows collected); the rewrite is one task
-        per candidate file; the serial section under the lock is pure
-        manifest JSON (metadata-sized).
+        scale: one tiny Spark job computes the key's bucket (one row
+        collected); the rewrite is one task per candidate file; the
+        serial section under the lock is pure manifest JSON
+        (metadata-sized).
         """
         if value is None:
             raise ValueError("cannot purge a null key")
@@ -3079,9 +2883,9 @@ class SnapshotTable:
                 f"the clones still reference: {live_clones} — purge and "
                 "materialize (or drop) each clone first"
             )
-        # main chain + staged (WAP) heads + branch heads, with parent
-        # walks: branch-only commits are NOT on the main chain but
-        # absolutely carry the key — GDPR covers them
+        # main chain + branch heads, with parent walks: branch-only
+        # commits are NOT on the main chain but absolutely carry the
+        # key — GDPR covers them
         manifests = list(self._walk_manifests())
         if self._foreign_files(manifests):
             raise ValueError(
@@ -3090,9 +2894,6 @@ class SnapshotTable:
                 "table; call materialize() first"
             )
 
-        nb_specs = sorted(
-            {int(m.get("n_buckets", self.n_buckets)) for m in manifests}
-        )
         key_field = next(
             f for f in T.StructType.fromJson(head["schema"]).fields
             if f.name == self.key_col
@@ -3100,19 +2901,11 @@ class SnapshotTable:
         one = self.spark.createDataFrame(
             [(value,)], T.StructType([key_field])
         )
-        brow = one.select(
-            *[bucket_expr(self.key_col, n).alias(f"b{n}") for n in nb_specs]
-        ).collect()[0]
-        bucket_of = {nb: int(brow[f"b{nb}"]) for nb in nb_specs}
+        bucket = str(
+            one.select(bucket_expr(self.key_col, self.n_buckets)).collect()[0][0]
+        )
         candidates = sorted(
-            {
-                f
-                for m in manifests
-                for f in m["buckets"].get(
-                    str(bucket_of[int(m.get("n_buckets", self.n_buckets))]),
-                    [],
-                )
-            }
+            {f for m in manifests for f in m["buckets"].get(bucket, [])}
         )
         rewrites: dict[str, tuple[str | None, int]] = {}
         if candidates:

@@ -31,9 +31,10 @@ def test_branch_commits_isolated_then_fast_forward(spark, tmp_table_dir):
         "u1": "v1b",
         "u2": "v2",
     }
-    assert t.branches() == {"dev": 3}
     sid = t.fast_forward("dev")
-    assert sid == 3 and t.branches() == {}
+    assert sid == 3
+    with pytest.raises(ValueError):
+        t.branch("dev")  # fast-forward dropped the ref
     assert {r["url"]: r["text"] for r in t.read().collect()} == {
         "u1": "v1b",
         "u2": "v2",
@@ -52,7 +53,8 @@ def test_fast_forward_refused_on_divergence(spark, tmp_table_dir):
     with pytest.raises(CommitConflictError):
         t.fast_forward("dev")
     t.drop_branch("dev")
-    assert t.branches() == {}
+    with pytest.raises(ValueError):
+        t.branch("dev")
     assert set(r["url"] for r in t.read().collect()) == {"u1", "u3"}
 
 
@@ -121,10 +123,6 @@ def test_branch_guard_rails(spark, tmp_table_dir):
         dev.branch("dev")  # no nested branch views
     with pytest.raises(ValueError):
         dev.create_branch("x")
-    with pytest.raises(ValueError):
-        dev.merge_upsert(
-            _batch(spark, [("u2", TS, 2, "v", "insert")]), stage_ref="wap"
-        )
     with pytest.raises(ValueError):
         t.branch("nope")
     t.drop_branch("dev")

@@ -310,3 +310,29 @@ def test_racing_pipeline_cannot_commit_a_fenced_range(
     ]
     assert batch_ids.count(1) == 1
     assert pipe_a.run_batch(OffsetRange(299, 599), log_end_seq=599).skipped
+
+
+def test_batch_commit_parses_head_once_plus_gc_chain(
+    spark, tmp_path, monkeypatch
+):
+    """A non-bootstrap batch parses its head manifest once (the fence,
+    the plan and the commit share it) and then each chain manifest once
+    in the commit's orphan GC: 1 + len(history()) parses, no re-read of
+    the parent to carry the evolution log forward."""
+    path = str(tmp_path / "t")
+    tbl = SnapshotTable(spark, path, "url", 8).create(PAGES)
+    log = synthetic_change_log(spark, 600, n_urls=100)
+    pipe = IngestPipeline(spark, ChangeLogSource(log), tbl)
+    pipe.run_batch(OffsetRange(-1, 299), log_end_seq=599)
+
+    loads = []
+    orig = SnapshotTable._load_manifest
+
+    def counting(self, name):
+        loads.append(name)
+        return orig(self, name)
+
+    monkeypatch.setattr(SnapshotTable, "_load_manifest", counting)
+    pipe.run_batch(OffsetRange(299, 599), log_end_seq=599)
+    monkeypatch.undo()
+    assert len(loads) == 1 + len(tbl.history()) == 4

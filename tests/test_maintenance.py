@@ -158,55 +158,6 @@ def test_vacuum_orphans_expires_old_snapshots(spark, tmp_path):
     assert len(t.history()) == 2
 
 
-def test_merge_upsert_retrying_converges_after_conflict(spark, tmp_path):
-    """Two writers planning from the same parent: the loser's retry
-    re-reads the winner's commit and converges (serializable outcome)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from clinvar_ingest_spark.tables import SnapshotTable
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    path = str(tmp_path / "t")
-    TS = dt.datetime(2020, 1, 1)
-    t = SnapshotTable(spark, path, "url", 8).create(schema)
-    t.merge_upsert(spark.createDataFrame(
-        [("u1", TS, 1, "v1", "insert")],
-        "url string, warc_ts timestamp, seq long, text string, op string",
-    ))
-
-    # writer B plans from snapshot 1... then writer A commits snapshot 2
-    writer_b = SnapshotTable(spark, path, "url", 8)
-    orig = SnapshotTable._commit
-    raced = {"done": False}
-
-    def racing_commit(self, *args, **kw):
-        if not raced["done"]:
-            raced["done"] = True
-            # sneak writer A's commit in first, against the same parent
-            t.merge_upsert(spark.createDataFrame(
-                [("u2", TS, 2, "v2", "insert")],
-                "url string, warc_ts timestamp, seq long, text string, op string",
-            ))
-        return orig(self, *args, **kw)
-
-    SnapshotTable._commit = racing_commit
-    try:
-        writer_b.merge_upsert_retrying(spark.createDataFrame(
-            [("u3", TS, 3, "v3", "insert")],
-            "url string, warc_ts timestamp, seq long, text string, op string",
-        ))
-    finally:
-        SnapshotTable._commit = orig
-    assert {r["url"] for r in t.read().collect()} == {"u1", "u2", "u3"}
-
-
 def test_compact_sort_by_orders_files_and_prunes(spark, tmp_path):
     """compact(sort_by=['url']) must leave each rewritten file sorted by
     url with tight per-row-group min/max url stats — the Iceberg

@@ -231,7 +231,6 @@ _REWRITE_OPS = {
     "overwrite": lambda t: t.overwrite(
         t.read(include_deleted=True).drop(BUCKET_COL)
     ),
-    "rebucket": lambda t: t.rebucket(4),
     "vacuum_tombstones": lambda t: t.vacuum_tombstones(dt.datetime(2021, 1, 1)),
 }
 

@@ -135,19 +135,6 @@ def test_purge_absent_key_is_noop(spark, tmp_table_dir):
     assert files_before == files_after
 
 
-def test_purge_survives_partition_evolution(spark, tmp_table_dir):
-    t = _mk(spark, tmp_table_dir)
-    t.rebucket(8)  # key lives in different buckets per epoch
-    t.merge_upsert(
-        _batch(spark, [("u1", TS + dt.timedelta(2), 6, "one v3", "update")])
-    )
-    t.purge_key("u1")
-    sids = sorted(t._load_manifest(n)["snapshot_id"] for n in t.history())
-    for sid in sids[1:]:
-        assert "u1" not in _urls_at(t, sid)
-    assert {r["url"] for r in t.read().collect()} == {"u2", "u3", "u4"}
-
-
 def test_purge_tombstoned_key_including_marker(spark, tmp_table_dir):
     t = _mk(spark, tmp_table_dir)
     t.merge_upsert(

@@ -133,9 +133,7 @@ def test_guards(spark, tmp_table_dir):
             ),
             row_lineage=True,
         )
-    # _row_id is rename/drop-protected
-    with pytest.raises(ValueError):
-        t.drop_column(ROW_ID_COL)
+    # _row_id is rename-protected
     with pytest.raises(ValueError):
         t.rename_column(ROW_ID_COL, "rid")
 

@@ -1,4 +1,4 @@
-"""Full schema evolution: metadata-only rename/drop (Iceberg-style,
+"""Full schema evolution: metadata-only rename/widen/add (Iceberg-style,
 beyond the additive evolution the merge already does)."""
 
 import datetime as dt
@@ -66,24 +66,6 @@ def test_rename_is_metadata_only_and_read_resolves_epochs(spark, tmp_path):
         t.rename_column("lang", "content")
 
 
-def test_drop_column_blocks_resurrection(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"), "url", 4).create(SCHEMA)
-    t.merge_upsert(_batch(spark, 0, 10, 1))
-    t.drop_column("lang")
-    assert "lang" not in t.read().columns
-    # a batch re-introducing the dropped name must be refused: pre-drop
-    # files still hold bytes under that name and would resurface
-    with pytest.raises(ValueError, match="dropped"):
-        t.merge_upsert(_batch(spark, 50, 5, 2))
-    # a batch without the column flows normally
-    t.merge_upsert(
-        _batch(spark, 50, 5, 2).drop("lang")
-    )
-    assert t.read().count() == 15
-    with pytest.raises(ValueError, match="cannot drop"):
-        t.drop_column("url")
-
-
 def test_changes_between_across_rename(spark, tmp_path):
     """A renamed column diffs as the SAME column across the rename
     (older side mapped forward); a rename-only commit reports zero row
@@ -109,47 +91,26 @@ def test_changes_between_across_rename(spark, tmp_path):
     assert row["after"]["body"].startswith("body ")
 
 
-def test_rebucket_partition_evolution(spark, tmp_path):
-    """rebucket rewrites the table under a new bucket count; merges
-    after it bucket consistently (manifest owns n_buckets — a reader
-    constructed with a stale count heals from the manifest), tombstones
-    survive, time travel still serves the old layout."""
-    t = SnapshotTable(spark, str(tmp_path / "t"), "url", 4).create(SCHEMA)
+def test_stale_bucket_count_heals_from_manifest(spark, tmp_path):
+    """The manifest owns the bucket count (fixed at create): a reader
+    constructed with a stale n_buckets heals from the manifest, so its
+    merges bucket consistently with the stored layout."""
+    path = str(tmp_path / "t")
+    t = SnapshotTable(spark, path, "url", 16).create(SCHEMA)
     t.merge_upsert(_batch(spark, 0, 30, 1))
-    # one tombstone
-    t.merge_upsert(
-        spark.createDataFrame(
-            [("https://s/3", dt.datetime(2024, 1, 2), 99, None, None,
-              "delete")],
-            "url string, warc_ts timestamp, seq long, text string, "
-            "lang string, op string",
-        )
-    )
-    sid_pre = t.snapshot_id()
-    t.rebucket(16)
-    assert t.n_buckets == 16
-    assert len(t.current_manifest()["buckets"]) <= 16
-    assert t.read().count() == 29
-    # tombstone survived the rewrite: a STALE late update stays dead
-    t.merge_upsert(
-        spark.createDataFrame(
-            [("https://s/3", dt.datetime(2024, 1, 1), 3, "text 3", "en",
-              "update")],
-            "url string, warc_ts timestamp, seq long, text string, "
-            "lang string, op string",
-        )
-    )
-    assert t.read().filter("url = 'https://s/3'").count() == 0
 
-    # stale-constructed reader heals to the manifest's bucket count
-    t2 = SnapshotTable(spark, str(tmp_path / "t"), "url", 4)
+    t2 = SnapshotTable(spark, path, "url", 4)
     t2.current_manifest()
     assert t2.n_buckets == 16
-    t2.merge_upsert(_batch(spark, 100, 5, 3))
-    assert t2.read().count() == 34
-
-    # pre-rebucket time travel reads the old 4-bucket layout
-    assert t.read_at(sid_pre).count() == 29
+    # keys 20..29 update in place, 30..34 are new
+    t2.merge_upsert(_batch(spark, 20, 15, 2))
+    assert t2.current_manifest()["n_buckets"] == 16
+    rows = t2.read(include_deleted=True).select(
+        "url", "seq", F.col("_bucket").alias("b"),
+        F.pmod(F.xxhash64("url"), F.lit(16)).cast("int").alias("want"),
+    ).collect()
+    assert sorted(r["seq"] for r in rows) == list(range(35))
+    assert all(r["b"] == r["want"] for r in rows)
 
 
 def test_rename_source_names_cannot_be_reintroduced(spark, tmp_path):
@@ -171,10 +132,6 @@ def test_rename_source_names_cannot_be_reintroduced(spark, tmp_path):
     # renaming another column ONTO the historical source name: refused
     with pytest.raises(ValueError, match="rename source"):
         t.rename_column("lang", "text")
-    # renaming onto a dropped name: refused too
-    t.drop_column("lang")
-    with pytest.raises(ValueError, match="dropped"):
-        t.rename_column("body", "lang")
     # table still fully readable after all refusals
     assert t.read().count() == 10
 
@@ -372,9 +329,6 @@ def test_add_column_guards_and_changes_between(spark, tmp_path):
     t.merge_upsert(_wbatch(spark, 0, 8, 1))
     with pytest.raises(ValueError, match="already exists"):
         t.add_column("n", "int")
-    t.drop_column("score")
-    with pytest.raises(ValueError, match="dropped"):
-        t.add_column("score", "float")
     with pytest.raises(ValueError, match="plain scalar"):
         t.add_column("meta", "string", default=["x"])
 
@@ -384,7 +338,6 @@ def test_add_column_guards_and_changes_between(spark, tmp_path):
     assert t.changes_between(s1, t.snapshot_id()).count() == 0
     t.merge_upsert(
         _wbatch(spark, 0, 1, 5)
-        .drop("score")  # 'score' was dropped above; re-adding is fenced
         .withColumn("rank", F.lit(1).cast("int"))
     )
     ch = t.changes_between(s1, t.snapshot_id()).collect()

@@ -306,48 +306,6 @@ def test_bloom_sidecar_is_snapshot_scoped(spark, tmp_table_dir):
     assert t.bloom_prune_buckets("text", "beta") is not None
 
 
-def test_wap_stage_audit_publish(spark, tmp_table_dir):
-    """Write-audit-publish: a staged merge is invisible to readers
-    until published; publish is a CAS (an interleaved commit forces
-    abort + re-stage); aborted stages are swept as orphans while LIVE
-    staged files are protected from vacuum."""
-    import pytest
-
-    from clinvar_ingest_spark.tables import CommitConflictError
-
-    t = _mk(spark, tmp_table_dir)
-    t.merge_upsert(_batch(spark, [("u1", TS, 1, "v1", "insert")]))
-    base_sid = t.snapshot_id()
-    t.merge_upsert(
-        _batch(spark, [("u2", TS, 2, "v2", "insert")]), stage_ref="wap1"
-    )
-    # invisible to normal readers; visible to the audit view
-    assert {r["url"] for r in t.read().collect()} == {"u1"}
-    assert t.snapshot_id() == base_sid
-    staged = {r["url"] for r in t.read_staged("wap1").collect()}
-    assert staged == {"u1", "u2"}
-    # staged files survive vacuum while staged
-    swept = t.vacuum_orphans()
-    assert t.read_staged("wap1").count() == 2
-    # audit passes -> publish
-    sid = t.publish_staged("wap1")
-    assert sid == base_sid + 1 and t.snapshot_id() == sid
-    assert {r["url"] for r in t.read().collect()} == {"u1", "u2"}
-    assert t.staged_refs() == {}
-
-    # CAS: stage, interleave a commit, publish must refuse
-    t.merge_upsert(
-        _batch(spark, [("u3", TS, 3, "v3", "insert")]), stage_ref="wap2"
-    )
-    t.merge_upsert(_batch(spark, [("u9", TS, 9, "v9", "insert")]))
-    with pytest.raises(CommitConflictError):
-        t.publish_staged("wap2")
-    t.abort_staged("wap2")
-    assert t.staged_refs() == {}
-    t.vacuum_orphans()  # aborted stage's files are now orphans
-    assert {r["url"] for r in t.read().collect()} == {"u1", "u2", "u9"}
-
-
 def test_rollback_restores_state_metadata_only(spark, tmp_table_dir):
     t = _mk(spark, tmp_table_dir)
     rows = [(f"u{i}", TS, i, "good", "insert") for i in range(20)]
