@@ -164,9 +164,7 @@ def run_ingest(
         _pages_schema()
     )
     src = ChangeLogSource(spark.read.parquet(log_path))
-    pipe = IngestPipeline(
-        spark, src, tbl, dedup_strategy="window", merge_mode=merge_mode
-    )
+    pipe = IngestPipeline(spark, src, tbl, merge_mode=merge_mode)
     _metrics.reset()
     t0 = time.monotonic()
     # default: catch-up replay mode — one offset range covering the

@@ -16,6 +16,9 @@ Exactly-once: the HWM lives in the *same atomic commit* as the data
 a batch that was never visible (idempotent merge) or skips a batch the
 fencing sees as done. Resuming from any checkpoint reproduces the full
 replay byte-for-byte (tested in tests/test_pipeline.py).
+
+A batch runs start to finish on the caller's thread, one step after
+another; all parallelism lives inside the Spark jobs it submits.
 """
 
 from __future__ import annotations
@@ -53,12 +56,9 @@ class IngestPipeline:
         spark: SparkSession,
         source: ChangeLogSource,
         target: SnapshotTable,
-        transform: Callable[[DataFrame], DataFrame] | None = None,
-        dedup_strategy: str = "window",
         merge_mode: str = "cow",
         derived: dict[str, Callable[[DataFrame], DataFrame]] | None = None,
         dlq: bool = False,
-        dlq_reason: Callable[[], object] | None = None,
     ):
         self.spark = spark
         self.source = source
@@ -71,12 +71,8 @@ class IngestPipeline:
         # Kafka/Debezium DLQ contract. Exactly-once composes with the
         # HWM fence: a fenced (already-committed) batch never rewrites
         # its DLQ dir; a replayed UNcommitted batch overwrites the same
-        # dir idempotently. dlq_reason() may supply a custom Column —
-        # NULL for valid rows, a short reason string otherwise.
+        # dir idempotently.
         self.dlq = dlq
-        self._dlq_reason = dlq_reason
-        self.transform = transform or self.default_transform
-        self.dedup_strategy = dedup_strategy
         self.merge_mode = merge_mode
         # normalization fan-out (reference disassemble → entity tables,
         # parse.py:232-252): name → derivation over the pages state,
@@ -118,8 +114,6 @@ class IngestPipeline:
         """NULL for valid rows, else the FIRST failing rule's name
         (precedence: null_key, null_seq, bad_op) — one codegen
         when-chain, no Python."""
-        if self._dlq_reason is not None:
-            return self._dlq_reason()
         return (
             F.when(F.col(self.target.key_col).isNull(), F.lit("null_key"))
             .when(F.col(self.source.seq_col).isNull(), F.lit("null_seq"))
@@ -276,9 +270,11 @@ class IngestPipeline:
         self,
         rng: OffsetRange,
         log_end_seq: int | None = None,
-        _prefetched_profile=None,
     ) -> BatchReport:
-        """Apply one offset range exactly once.
+        """Apply one offset range exactly once, every step on the
+        caller's thread: fence → DLQ → profile → merge → commit →
+        sidecars. Each Spark job is parallel inside; the batch itself
+        is serial, like the reference's begin → copy/parse → finish.
 
         The expensive transform (extraction) runs AFTER the LWW dedup
         inside the merge — only once per surviving key, and only once
@@ -345,37 +341,13 @@ class IngestPipeline:
         # touched-bucket/upsert/delete stats from its (|parts|·|buckets|,
         # metadata-sized) result — the merge then runs with precomputed
         # batch_stats, so a batch costs exactly two Spark jobs: profile
-        # + merge-write. At high parallelism the saved scan and job
-        # round-trip come straight off the serial Amdahl floor.
-        # Two overlap paths take even that off the critical path
-        # (guide §2.6 — overlap independent jobs):
-        # * run_to_end PREFETCHES the next batch's profile while the
-        #   current batch's merge runs (the profile reads only the
-        #   immutable log, so it is independent of every earlier
-        #   commit);
-        # * a BOOTSTRAP batch (target has no data files yet — nothing
-        #   to prune, so the merge plan does not need `touched`) runs
-        #   the profile CONCURRENTLY with its own merge and only awaits
-        #   it in the commit-time properties callable — the profile's
-        #   tasks back-fill the merge's scheduling gaps and its wall
-        #   leaves the serial floor entirely.
-        local_pool = None
-        fut = _prefetched_profile if not self.dlq else None
-        bootstrap = not self.dlq and not (m_cur or {}).get("buckets")
-        if bootstrap and fut is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            local_pool = ThreadPoolExecutor(1)
-            fut = local_pool.submit(self._profile_rows, raw)
-
-        folded: dict = {}
-
-        def _fold(prof) -> dict:
-            part_col = self.source.part_col
-            by_part: dict[int, dict] = {}
-            touched: set[int] = set()
-            n_up = n_del = 0
-            for r in prof:
+        # + merge-write.
+        part_col = self.source.part_col
+        by_part: dict[int, dict] = {}
+        touched: set[int] = set()
+        n_up = n_del = 0
+        with stage("batch.profile"):
+            for r in self._profile_rows(raw):
                 touched.add(int(r["_b"]))
                 n_up += int(r["u"] or 0)
                 n_del += int(r["d"] or 0)
@@ -387,94 +359,33 @@ class IngestPipeline:
                 agg["seq_lo"] = min(agg["seq_lo"], int(r["lo"]))
                 agg["seq_hi"] = max(agg["seq_hi"], int(r["hi"]))
                 agg["n_rows"] += int(r["n"])
-            part_ranges = [by_part[p] for p in sorted(by_part)]
-            hwm_by_part = dict(props0.get("hwm_by_part", {}))
-            for pr in part_ranges:
-                hwm_by_part[str(pr["part"])] = max(
-                    pr["seq_hi"], hwm_by_part.get(str(pr["part"]), -1)
-                )
-            return {
-                "part_ranges": part_ranges,
-                "touched": sorted(touched),
-                "n_upserts": n_up,
-                "n_deletes": n_del,
-                "hwm_by_part": hwm_by_part,
-            }
+        part_ranges = [by_part[p] for p in sorted(by_part)]
+        hwm_by_part = dict(props0.get("hwm_by_part", {}))
+        for pr in part_ranges:
+            hwm_by_part[str(pr["part"])] = max(
+                pr["seq_hi"], hwm_by_part.get(str(pr["part"]), -1)
+            )
 
-        if bootstrap:
-            # stats resolve lazily, just before the atomic commit (the
-            # merge job has long finished the scan by then); `touched`
-            # is derived by merge_upsert from the writer's own output —
-            # exact on an empty table, every written bucket IS touched
-            batch_stats = {"touched": None, "n_upserts": 0, "n_deletes": 0}
-
-            def props():
-                # the stage clock here records only the RESOLVE wait
-                # (the profile job itself overlapped the merge); that
-                # small wait also sits inside batch.merge, which is the
-                # price of nesting — ~ms once the overlap has worked.
-                with stage("batch.profile"):
-                    folded.update(_fold(fut.result()))
-                # write the real applied-event counts back into the
-                # shared batch_stats dict: merge_upsert re-reads them
-                # after this callable so its CommitResult carries true
-                # counts in the deferred mode too (not the placeholders)
-                batch_stats["n_upserts"] = folded["n_upserts"]
-                batch_stats["n_deletes"] = folded["n_deletes"]
-                return {
+        with stage("batch.merge"):
+            res = self.target.merge_upsert(
+                raw.drop(part_col),
+                order_cols=("warc_ts", "seq"),
+                op_col="op",
+                properties={
                     "global_hwm": rng.hi,
                     "batch_id": batch_id,
-                    "hwm_by_part": folded["hwm_by_part"],
-                }
-        else:
-            with stage("batch.profile"):
-                folded.update(
-                    _fold(fut.result() if fut is not None else self._profile_rows(raw))
-                )
-            batch_stats = {
-                "touched": folded["touched"],
-                "n_upserts": folded["n_upserts"],
-                "n_deletes": folded["n_deletes"],
-            }
-            props = {
-                "global_hwm": rng.hi,
-                "batch_id": batch_id,
-                "hwm_by_part": folded["hwm_by_part"],
-            }
-
-        try:
-            with stage("batch.merge"):
-                res = self.target.merge_upsert(
-                    raw.drop(self.source.part_col),
-                    order_cols=("warc_ts", "seq"),
-                    op_col="op",
-                    properties=props,
-                    dedup_strategy=self.dedup_strategy,
-                    batch_stats=batch_stats,
-                    merge_mode=self.merge_mode,
-                    post_merge_transform=self.transform,
-                    parent=m_cur,
-                )
-        finally:
-            # merge failure hygiene: never leave a still-pending profile
-            # future unobserved — cancel it if it has not started, and
-            # swallow (rather than lose) its exception if it is already
-            # running, so a retry loop cannot accumulate silently
-            # failing background jobs. Applies to the locally-created
-            # bootstrap future AND a prefetched one handed in by
-            # run_to_end (on success both are already consumed, and the
-            # done-callback on a done future is a no-op observe).
-            if fut is not None and not fut.done():
-                fut.cancel()
-            if fut is not None:
-                fut.add_done_callback(
-                    lambda f: f.cancelled() or f.exception()
-                )
-            if local_pool is not None:
-                local_pool.shutdown(wait=False)
+                    "hwm_by_part": hwm_by_part,
+                },
+                batch_stats={
+                    "touched": sorted(touched),
+                    "n_upserts": n_up,
+                    "n_deletes": n_del,
+                },
+                merge_mode=self.merge_mode,
+                post_merge_transform=self.default_transform,
+                parent=m_cur,
+            )
         wall = time.monotonic() - t0
-        part_ranges = folded["part_ranges"]
-        n_up, n_del = folded["n_upserts"], folded["n_deletes"]
 
         # Sidecar tables are re-derivable from the manifest chain; their
         # writes are idempotent per batch_id (overwrite of batch=N dir),
@@ -607,57 +518,13 @@ class IngestPipeline:
     def run_to_end(self, span: int, end_seq: int | None = None) -> list[BatchReport]:
         """Tail the log to its end (availableNow semantics), resuming
         from the committed HWM — call it again after a crash and it
-        continues where the last atomic commit left off.
-
-        The next batch's profile scan is PREFETCHED on a helper thread
-        while the current batch's merge job runs (guide §2.6: overlap
-        independent jobs — the profile reads only the immutable log, so
-        batch k+1's profile has no dependency on batch k's commit; its
-        tasks back-fill executor slots freed by the merge's straggler
-        tail). Exactly-once is untouched: the prefetch computes the
-        same deterministic aggregate run_batch would, and a fenced
-        (skipped) batch simply discards its prefetched rows. DLQ mode
-        profiles inline (quarantine must filter the batch first)."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        continues where the last atomic commit left off. Batches run
+        one after another through :meth:`run_batch`."""
         end = self.source.max_seq() if end_seq is None else end_seq
-        ranges = self.source.plan_batches(self.global_hwm(), end, span)
-        reports: list[BatchReport] = []
-        if self.dlq or len(ranges) <= 1:
-            for rng in ranges:
-                reports.append(self.run_batch(rng, log_end_seq=end))
-            return reports
-        with ThreadPoolExecutor(1) as pool:
-            futs: dict[int, object] = {
-                0: pool.submit(self._profile_rows, self.source.batch(ranges[0]))
-            }
-            try:
-                for i, rng in enumerate(ranges):
-                    if i + 1 < len(ranges):
-                        futs[i + 1] = pool.submit(
-                            self._profile_rows, self.source.batch(ranges[i + 1])
-                        )
-                    reports.append(
-                        self.run_batch(
-                            rng, log_end_seq=end,
-                            _prefetched_profile=futs.pop(i),
-                        )
-                    )
-            except BaseException as e:
-                # a batch failed while the next batch's profile was in
-                # flight: cancel it, or wait for it and attach its own
-                # failure to the propagating error instead of dropping it
-                for k, fut in futs.items():
-                    if fut.cancel():
-                        continue
-                    exc = fut.exception()
-                    if exc is not None:
-                        e.add_note(
-                            f"prefetched profile of batch {ranges[k]} "
-                            f"also failed: {exc!r}"
-                        )
-                raise
-        return reports
+        return [
+            self.run_batch(rng, log_end_seq=end)
+            for rng in self.source.plan_batches(self.global_hwm(), end, span)
+        ]
 
     # ------------------------------------------------------------ audit
     def verify_lineage(self) -> dict:

@@ -485,155 +485,13 @@ class SnapshotTable:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         return df
 
-    # -- bloom-filter file skipping (Parquet/Iceberg bloom sidecar
-    # analog): per-file blooms over chosen NON-key columns let point
-    # lookups skip files the bucket index can't (the bucket index only
-    # prunes on the bucketing key). 4096 bits / 3 hashes per file-column
-    # ≈ 1% fpp at ~420 distinct values per file; false positives only
-    # cost an extra file scan, never wrong results.
-    BLOOM_M = 4096
-    BLOOM_K = 3
-    _BLOOM_DIR = "_blooms"
-
-    def _bloom_path(self, snapshot_id: int) -> str:
-        return os.path.join(
-            self.path, self._BLOOM_DIR, f"s{snapshot_id:08d}.json"
-        )
-
-    @staticmethod
-    def _bloom_positions_py(value, m: int, k: int) -> list[int]:
-        import hashlib
-
-        return [
-            int(
-                hashlib.md5(f"{value}:{i}".encode("utf-8")).hexdigest()[:8],
-                16,
-            )
-            % m
-            for i in range(k)
-        ]
-
-    def build_blooms(self, cols: list[str]) -> str:
-        """Build per-file bloom filters over ``cols`` for the CURRENT
-        snapshot and persist them as a sidecar keyed by snapshot id.
-
-        Scale shape: positions are computed in one distributed pass
-        (md5-derived, the same bytes the Python probe computes) and the
-        per-file bitset is folded INSIDE Spark as 64 bit_or'd words —
-        the driver receives exactly ``n_files × (m/64)`` longs, never
-        the positions. A production writer would fold the same words
-        into the Arrow write path; the sidecar keeps the layout
-        non-invasive and snapshot-scoped (a new commit simply has no
-        sidecar until the next build — pruning degrades to none,
-        correctness unaffected).
-        """
-        m = self.current_manifest()
-        if m is None:
-            raise ValueError(f"table {self.path} does not exist")
-        files = self._files(m)
-        out: dict[str, dict[str, list[int]]] = {c: {} for c in cols}
-        n_words = self.BLOOM_M // 64
-        if files:
-            df = self.spark.read.parquet(*files).withColumn(
-                "_f", F.input_file_name()
-            )
-            for c in cols:
-                s = F.col(c).cast("string")
-                pos = F.array(
-                    *[
-                        F.conv(
-                            F.substring(
-                                F.md5(F.concat(s, F.lit(f":{i}"))), 1, 8
-                            ),
-                            16,
-                            10,
-                        ).cast("long")
-                        % self.BLOOM_M
-                        for i in range(self.BLOOM_K)
-                    ]
-                )
-                exploded = (
-                    df.filter(s.isNotNull())
-                    .select("_f", F.explode(pos).alias("_p"))
-                )
-                words = exploded.groupBy("_f").agg(
-                    *[
-                        F.coalesce(
-                            F.bit_or(
-                                F.when(
-                                    (F.col("_p") / 64).cast("int") == w,
-                                    F.expr(
-                                        "shiftleft(1L, "
-                                        "CAST(_p % 64 AS INT))"
-                                    ),
-                                )
-                            ),
-                            F.lit(0).cast("long"),
-                        ).alias(f"w{w}")
-                        for w in range(n_words)
-                    ]
-                )
-                for r in words.collect():
-                    name = os.path.basename(
-                        r["_f"].replace("file:", "")
-                    )
-                    out[c][name] = [int(r[f"w{w}"]) for w in range(n_words)]
-        os.makedirs(os.path.join(self.path, self._BLOOM_DIR), exist_ok=True)
-        path = self._bloom_path(m["snapshot_id"])
-        _atomic_write(
-            path, json.dumps({"m": self.BLOOM_M, "k": self.BLOOM_K, "cols": out})
-        )
-        return path
-
-    def bloom_prune_buckets(self, col: str, value) -> list[int] | None:
-        """Buckets whose files MIGHT contain ``col == value`` per the
-        current snapshot's bloom sidecar; None when no sidecar covers
-        this snapshot+column (caller must scan everything). Driver-side
-        bitset math over the sidecar only — no Spark job."""
-        m = self.current_manifest()
-        if m is None:
-            raise ValueError(f"table {self.path} does not exist")
-        path = self._bloom_path(m["snapshot_id"])
-        if not os.path.exists(path):
-            return None
-        with open(path) as fh:
-            side = json.load(fh)
-        blooms = side.get("cols", {}).get(col)
-        if blooms is None:
-            return None
-        pos = self._bloom_positions_py(value, side["m"], side["k"])
-        kept: list[int] = []
-        for b, fs in m["buckets"].items():
-            for f in fs:
-                words = blooms.get(os.path.basename(f))
-                if words is None:  # file unknown to sidecar: can't skip
-                    kept.append(int(b))
-                    break
-                if all(words[p // 64] & (1 << (p % 64)) for p in pos):
-                    kept.append(int(b))
-                    break
-        return sorted(kept)
-
-    def point_lookup(self, col: str, value) -> DataFrame:
-        """Equality lookup on a non-key column, bloom-pruned to the
-        buckets that might hold it (falls back to a full scan when no
-        sidecar exists). Key-column lookups should use the bucket index
-        instead — that prune is exact."""
-        buckets = self.bloom_prune_buckets(col, value)
-        if buckets is not None and not buckets:
-            return self.read(buckets=[-1]).limit(0)
-        return self.read(buckets=buckets).filter(
-            F.col(col).cast("string") == F.lit(str(value))
-        )
-
     # -- per-file min/max column stats (Iceberg manifest file-stats
     # analog): range predicates skip whole files whose [min, max]
-    # can't overlap. The bucket index prunes on the KEY; blooms prune
-    # equality on non-key columns; this prunes RANGES — the CDC shape
-    # is time-correlated data ("recent rows live in recent files"), so
-    # a warc_ts range scan touches only the matching commit epochs.
-    # Sidecar layout mirrors _blooms: snapshot-scoped, non-invasive (a
-    # new commit has no sidecar until the next build — pruning degrades
+    # can't overlap. The bucket index prunes on the KEY; this prunes
+    # RANGES — the CDC shape is time-correlated data ("recent rows live
+    # in recent files"), so a warc_ts range scan touches only the
+    # matching commit epochs. The sidecar is snapshot-scoped and
+    # non-invasive (a new commit has no sidecar until the next build — pruning degrades
     # to none, correctness unaffected; Iceberg folds the same stats
     # into its manifests at write time).
     _COLSTATS_DIR = "_colstats"
@@ -1893,7 +1751,8 @@ class SnapshotTable:
         os.makedirs(self.path, exist_ok=True)
         buckets, rows = self._write_buckets(df, m["snapshot_id"] + 1)
         # the parent contributes its properties and evolution log only:
-        # every bucket, the read mode and the sort order are replaced
+        # every bucket, the read mode and the sort order are replaced,
+        # and equality deletes go — they name files no longer read
         res = self._commit_files(
             {
                 "snapshot_id": m["snapshot_id"],
@@ -1905,6 +1764,7 @@ class SnapshotTable:
             buckets, rows, sorted(buckets),
             schema=df.schema, properties=properties,
             stats_key="n_rows", read_mode="plain",
+            schema_evolution={"delete_files": []} if m.get("delete_files") else None,
         )
         return dataclasses.replace(res, n_upserts=res.n_rows_after)
 
@@ -2001,7 +1861,6 @@ class SnapshotTable:
         op_col: str = "op",
         delete_op: str = "delete",
         properties: dict[str, Any] | None = None,
-        dedup_strategy: str = "window",
         post_merge_transform=None,
         batch_stats: dict[str, Any] | None = None,
         merge_mode: str = "cow",
@@ -2039,12 +1898,6 @@ class SnapshotTable:
            (manifest pruning = Iceberg partition-level copy-on-write),
            then the shared commit tail :meth:`_commit_files`.
 
-        ``dedup_strategy``: "window" (default), "salted_window" or
-        "max_by" (skew-proof variants; aggregates get map-side partial
-        combine so hot keys pre-reduce per input partition; their
-        winners are repartitioned to 2x defaultParallelism so the
-        downstream Arrow stage stays wide).
-
         ``merge_mode``: "cow" (above — touched buckets rewritten, reads
         stay plain scans) or "mor" (merge-on-read — batch winners are
         APPENDED as delta files per bucket, nothing is rewritten, and
@@ -2069,11 +1922,6 @@ class SnapshotTable:
                     "row_lineage requires CoW merges: MoR appends batch "
                     "winners without reading the stored row, so the "
                     "stored _row_id is unknowable at write time"
-                )
-            if dedup_strategy != "window":
-                raise ValueError(
-                    "row_lineage requires dedup_strategy='window' (the "
-                    "lineage aggregates reuse its key partitioning)"
                 )
             if ROW_ID_COL in batch.columns:
                 raise ValueError(
@@ -2129,18 +1977,7 @@ class SnapshotTable:
                 "n_upserts": sum(int(r["u"] or 0) for r in stat_rows),
                 "n_deletes": sum(int(r["d"] or 0) for r in stat_rows),
             }
-        # touched=None: the caller defers stats (bootstrap overlap: the
-        # profile job runs concurrently with this merge). touched is
-        # then derived from the writer's own output — exact when the
-        # target holds no data files, because every bucket the merge
-        # writes IS a touched bucket and there is nothing stored to
-        # prune. The un-pruned target read is free on an empty
-        # manifest. The event counts are the caller's PLACEHOLDERS
-        # until its properties() callable writes the real ones back
-        # into batch_stats; _commit_files reads them after that call.
-        touched = batch_stats["touched"]
-        if touched is not None:
-            touched = sorted(int(b) for b in touched)
+        touched = sorted(int(b) for b in batch_stats["touched"])
 
         mor = merge_mode == "mor"
         source = batch.select(*data_cols, op_col)
@@ -2173,17 +2010,17 @@ class SnapshotTable:
                 source = source.withColumn("_li_src", F.lit("b"))
             source = pruned_target.unionByName(source)
 
-        par = self.spark.sparkContext.defaultParallelism * 2
         if lineage:
             # lineage aggregates share the key partitioning across
             # several window specs — keep the one explicit exchange
+            par = self.spark.sparkContext.defaultParallelism * 2
             source = self._lineage_cols(
                 source.repartition(par, F.col(self.key_col)),
                 list(order_cols), op_col, delete_op,
             )
-        # window strategy: NO explicit repartition (docstring step 2) —
-        # one would satisfy the Window's distribution early and suppress
-        # the map-side PARTIAL WindowGroupLimit (guide §2.3 "aggregate
+        # NO explicit repartition (docstring step 2) — one would
+        # satisfy the Window's distribution early and suppress the
+        # map-side PARTIAL WindowGroupLimit (guide §2.3 "aggregate
         # before you shuffle"; measured 2.76→2.24 s on the 2M-event
         # dedup at local[32]). AQE's parallelismFirst keeps the
         # post-shuffle Arrow stage at defaultParallelism width.
@@ -2191,12 +2028,10 @@ class SnapshotTable:
             source,
             key_cols=(self.key_col,),
             order_cols=list(order_cols),
-            strategy=dedup_strategy,
+            strategy="window",
         )
         if lineage:
             merged = self._assign_row_ids(merged, list(order_cols), op_col, delete_op)
-        elif dedup_strategy != "window":
-            merged = merged.repartition(par)
 
         survivors = merged.withColumn(
             DELETED_COL, F.col(op_col) == F.lit(delete_op)
@@ -2220,7 +2055,7 @@ class SnapshotTable:
                     survivors.select(*data_cols, DELETED_COL),
                     m["snapshot_id"] + 1,
                 )
-                if (touched is None or touched)
+                if touched
                 else ({}, {})
             )
         # the CoW/MoR differences are data: MoR APPENDS its deltas,
@@ -2230,8 +2065,7 @@ class SnapshotTable:
         # CoW batch on a MoR table resolves only the touched buckets,
         # the rest may still be multi-version
         return self._commit_files(
-            m, new_files, new_rows,
-            sorted(new_files) if touched is None else touched,
+            m, new_files, new_rows, touched,
             append=mor,
             schema=evolved,
             properties=properties,
@@ -2250,7 +2084,7 @@ class SnapshotTable:
         *,
         append: bool = False,
         schema: T.StructType | None = None,
-        properties=None,
+        properties: dict[str, Any] | None = None,
         stats_key: str | None = None,
         read_mode: str | None = None,
         order_cols: list[str] | None = None,
@@ -2260,8 +2094,8 @@ class SnapshotTable:
         """The one commit tail for every data and metadata commit after
         ``create``: fold ``new_files`` and their per-bucket row counts
         ``new_rows`` (as :meth:`_write_buckets` returns them) into the
-        parent manifest ``m``'s ``buckets`` and ``bucket_rows``, resolve
-        ``properties`` and CAS-commit. No footer is read: the row count
+        parent manifest ``m``'s ``buckets`` and ``bucket_rows``, lay
+        ``properties`` over the parent's and CAS-commit. No footer is read: the row count
         is the sum of the bucket totals (Iceberg manifest record-count
         analog).
 
@@ -2278,11 +2112,6 @@ class SnapshotTable:
         no ``stats_key`` (schema evolution, equality deletes) keeps the
         parent's stats: its files are the parent's.
 
-        ``properties`` may be a callable, evaluated just before the
-        atomic commit — callers overlap side computations with the
-        write while still committing their state atomically. The
-        event counts in ``batch_stats`` are read AFTER that call, so a
-        callable that resolves deferred stats reports true counts.
         ``schema``, ``read_mode`` and ``order_cols`` default to the
         parent's. The evolution log (:data:`_EVO_KEYS`) is copied
         forward from ``m``, each key overridden by ``schema_evolution``
@@ -2307,7 +2136,7 @@ class SnapshotTable:
             n_after = sum(rows.values())
             stats = {stats_key or "n_rows": n_after}
         props = dict(m.get("properties", {}))
-        props.update(properties() if callable(properties) else (properties or {}))
+        props.update(properties or {})
         n_up = n_del = 0
         if batch_stats is not None:
             n_up = int(batch_stats["n_upserts"])
@@ -2851,9 +2680,7 @@ class SnapshotTable:
         lists are swapped old→new with ``bucket_rows`` and the row-count
         stat adjusted exactly, the head manifest logs an md5 audit entry
         (never the key itself), and only then are the old files
-        unlinked. Bloom sidecars keep irreversible hashed bits only and
-        stay conservative ("maybe contains" → bucket read finds
-        nothing), so they need no rebuild. Keys re-inserted by commits
+        unlinked. Keys re-inserted by commits
         AFTER the purge began are new data and are not covered — re-run
         to purge them.
 

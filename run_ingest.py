@@ -42,8 +42,6 @@ def main(argv=None):
     ap.add_argument("--span", type=int, default=1_000_000,
                     help="events per micro-batch")
     ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--strategy", default="window",
-                    choices=["window", "salted_window", "max_by"])
     ap.add_argument("--master", default=None)
     ap.add_argument("--status", action="store_true",
                     help="print table/pipeline status and exit")
@@ -111,9 +109,7 @@ def main(argv=None):
         print("--log is required to ingest", file=sys.stderr)
         return 2
     src = ChangeLogSource(spark.read.parquet(args.log))
-    pipe = IngestPipeline(
-        spark, src, tbl, dedup_strategy=args.strategy, dlq=args.dlq
-    )
+    pipe = IngestPipeline(spark, src, tbl, dlq=args.dlq)
 
     if args.audit:
         print(json.dumps(pipe.verify_lineage()))

@@ -122,6 +122,25 @@ def test_delta_delete_on_mor_and_compaction_folds(spark, tmp_table_dir):
     assert "Join" not in plan
 
 
+def test_vacuum_tombstones_drops_delete_files(spark, tmp_table_dir):
+    """vacuum_tombstones rewrites every row through overwrite(), so the
+    new head names no equality-delete file and reads plan no anti-join;
+    the visible rows are unchanged."""
+    t = _mk(spark, tmp_table_dir)
+    t.merge_upsert(_batch(spark, [
+        (f"u{i}", _ts(i), i, f"v{i}", "update") for i in range(20)
+    ]))
+    t.delete_where(F.col("seq") < 5, mode="delta")
+    before = sorted((r["url"], r["text"]) for r in t.read().collect())
+    assert len(before) == 15
+
+    t.vacuum_tombstones(_ts(0))
+    assert not t.current_manifest().get("delete_files")
+    plan = t.read()._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" not in plan
+    assert sorted((r["url"], r["text"]) for r in t.read().collect()) == before
+
+
 def test_chained_delta_deletes_and_vacuum_keeps_delete_files(spark, tmp_table_dir):
     t = _mk(spark, tmp_table_dir)
     t.merge_upsert(_batch(spark, [

@@ -219,13 +219,11 @@ def test_dlq_fenced_replay_does_not_rewrite(spark, tmp_path):
     assert (sorted(os.listdir(d0)), os.stat(d0).st_mtime_ns) == before
 
 
-def test_prefetched_profile_equals_inline(spark, tmp_path):
-    """run_to_end prefetches batch k+1's profile while batch k's merge
-    runs (round-6 optimization). The prefetched aggregate must be the
-    SAME deterministic result the inline path computes: state, lineage
-    rows, and per-batch upsert/delete counts all agree with a manual
-    batch-by-batch run (which profiles inline), over a parquet-backed
-    log (also exercising the footer-stats max_seq fast path)."""
+def test_run_to_end_equals_batch_by_batch(spark, tmp_path):
+    """run_to_end over several ranges gives the state, lineage rows and
+    per-batch upsert/delete counts of a manual batch-by-batch run, over
+    a parquet-backed log (also exercising the footer-stats max_seq fast
+    path)."""
     log_path = str(tmp_path / "log")
     synthetic_change_log(spark, N, n_urls=150).write.parquet(log_path)
     parquet_log = spark.read.parquet(log_path)
@@ -237,7 +235,7 @@ def test_prefetched_profile_equals_inline(spark, tmp_path):
         .create(SCHEMA),
     )
     assert pre.source.max_seq() == N - 1  # metadata fast path, exact
-    reports = pre.run_to_end(span=301)  # 4 ragged batches, prefetched
+    reports = pre.run_to_end(span=301)  # 4 ragged batches
 
     inline = IngestPipeline(
         spark,
@@ -260,68 +258,27 @@ def test_prefetched_profile_equals_inline(spark, tmp_path):
     assert lin(pre) == lin(inline)
 
 
-def test_run_to_end_reports_failed_prefetch(spark, tmp_path, monkeypatch):
-    """When batch 0's merge fails while batch 1's prefetched profile
-    has failed too, run_to_end raises the merge error and attaches the
-    prefetch failure as a note instead of dropping it."""
+def test_batches_run_on_the_callers_thread(spark, tmp_path, monkeypatch):
+    """Every batch's profile and merge, the bootstrap batch on an empty
+    table included, run on the thread that called run_to_end."""
     pipe = _pipe(spark, str(tmp_path / "t"), n=900)
-    assert len(pipe.source.plan_batches(-1, 899, 300)) >= 3
-    prefetch_failed = threading.Event()
-
-    def merge_fails(*_a, **_k):
-        # fail only once the prefetch has failed, so its future is
-        # done (not cancellable) when the merge error propagates
-        assert prefetch_failed.wait(60)
-        raise RuntimeError("merge")
-
-    real_profile = pipe._profile_rows
-    calls = []
+    assert len(pipe.source.plan_batches(-1, 899, 300)) == 3
+    assert not pipe.target.current_manifest()["buckets"]  # bootstrap first
+    seen = []
+    real_profile, real_merge = pipe._profile_rows, pipe.target.merge_upsert
 
     def profile(raw):
-        # the single-worker pool runs calls in submission order: the
-        # second call is batch 1's prefetch
-        calls.append(1)
-        if len(calls) == 2:
-            prefetch_failed.set()
-            raise RuntimeError("prefetch")
+        seen.append(("profile", threading.get_ident()))
         return real_profile(raw)
 
-    monkeypatch.setattr(pipe.target, "merge_upsert", merge_fails)
+    def merge(*a, **kw):
+        seen.append(("merge", threading.get_ident()))
+        return real_merge(*a, **kw)
+
     monkeypatch.setattr(pipe, "_profile_rows", profile)
-    with pytest.raises(RuntimeError, match="merge") as ei:
-        pipe.run_to_end(span=300)
-    notes = getattr(ei.value, "__notes__", [])
-    assert any("RuntimeError('prefetch')" in n for n in notes), notes
-
-
-@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
-def test_deferred_stats_commit_result_counts(spark, tmp_path, merge_mode):
-    """Bootstrap deferred-stats mode (touched=None): merge_upsert must
-    return a CommitResult with the REAL applied-event counts once the
-    properties() callable has resolved them into the shared dict — the
-    API contract may not diverge between the two batch_stats modes."""
-    log = synthetic_change_log(spark, 400, n_urls=60)
-    batch = log.drop("part")
-    n_up = batch.filter("op <> 'delete'").count()
-    n_del = batch.filter("op = 'delete'").count()
-    assert n_up > 0 and n_del > 0  # fixture really has both kinds
-
-    tbl = SnapshotTable(
-        spark, str(tmp_path / merge_mode), key_col="url", n_buckets=8
-    ).create(SCHEMA)
-    stats = {"touched": None, "n_upserts": 0, "n_deletes": 0}
-
-    def props():
-        # the pipeline resolves its concurrent profile here; the test
-        # stands in for it with the known counts
-        stats["n_upserts"] = n_up
-        stats["n_deletes"] = n_del
-        return {"global_hwm": 399}
-
-    res = tbl.merge_upsert(
-        batch, properties=props, batch_stats=stats, merge_mode=merge_mode
-    )
-    assert (res.n_upserts, res.n_deletes) == (n_up, n_del)
-    assert sorted(res.touched_buckets) == sorted(
-        int(b) for b in tbl.current_manifest()["buckets"]
-    )
+    monkeypatch.setattr(pipe.target, "merge_upsert", merge)
+    reports = pipe.run_to_end(span=300)
+    assert [r.skipped for r in reports] == [False] * 3
+    assert sorted(kind for kind, _ in seen) == ["merge"] * 3 + ["profile"] * 3
+    me = threading.get_ident()
+    assert all(t == me for _, t in seen), seen

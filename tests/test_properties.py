@@ -2,7 +2,7 @@
 
 hypothesis generates adversarial little change logs (key collisions,
 version ties, deletes, ragged batch splits); the engine's final state
-must equal a brute-force LWW simulation, for every dedup strategy and
+must equal a brute-force LWW simulation, for both merge modes and
 any batch partitioning. Spark jobs are slow, so example counts are
 small but the per-example space is nasty on purpose.
 """
@@ -57,7 +57,7 @@ def simulate(events):
     }
 
 
-def run_engine(spark, tmpdir, events, splits, strategy, merge_mode="cow"):
+def run_engine(spark, tmpdir, events, splits, merge_mode="cow"):
     rows = [
         (
             0,
@@ -73,10 +73,7 @@ def run_engine(spark, tmpdir, events, splits, strategy, merge_mode="cow"):
         rows, "part int, seq long, op string, url string, warc_ts timestamp, html binary"
     )
     tbl = SnapshotTable(spark, tmpdir, "url", 4).create(PAGES)
-    pipe = IngestPipeline(
-        spark, ChangeLogSource(log), tbl,
-        dedup_strategy=strategy, merge_mode=merge_mode,
-    )
+    pipe = IngestPipeline(spark, ChangeLogSource(log), tbl, merge_mode=merge_mode)
     lo = -1
     for hi in sorted({min(s, len(events) - 1) for s in splits} | {len(events) - 1}):
         if hi > lo:
@@ -88,13 +85,7 @@ def run_engine(spark, tmpdir, events, splits, strategy, merge_mode="cow"):
 
 
 @pytest.mark.parametrize(
-    "strategy,merge_mode",
-    [
-        ("window", "cow"),
-        ("salted_window", "cow"),
-        ("max_by", "cow"),
-        ("window", "mor"),
-    ],
+    "merge_mode", ["cow", "mor"], ids=["window-cow", "window-mor"]
 )
 @settings(
     max_examples=6,
@@ -106,10 +97,10 @@ def run_engine(spark, tmpdir, events, splits, strategy, merge_mode="cow"):
     splits=st.sets(st.integers(min_value=0, max_value=11), max_size=3),
 )
 def test_engine_equals_simulation(
-    spark, tmp_path_factory, events, splits, strategy, merge_mode
+    spark, tmp_path_factory, events, splits, merge_mode
 ):
     tmpdir = str(tmp_path_factory.mktemp("prop"))
-    got = run_engine(spark, tmpdir, events, splits, strategy, merge_mode)
+    got = run_engine(spark, tmpdir, events, splits, merge_mode)
     assert got == simulate(events)
 
 

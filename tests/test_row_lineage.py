@@ -122,8 +122,6 @@ def test_guards(spark, tmp_table_dir):
     b = _batch(spark, [("a", _ts(1), 1, "x", "update")])
     with pytest.raises(ValueError, match="CoW"):
         t.merge_upsert(b, merge_mode="mor")
-    with pytest.raises(ValueError, match="window"):
-        t.merge_upsert(b, dedup_strategy="max_by")
     with pytest.raises(ValueError, match="engine-assigned"):
         t.merge_upsert(b.withColumn(ROW_ID_COL, F.lit(7)))
     with pytest.raises(ValueError, match="assigned by the engine"):

@@ -267,45 +267,6 @@ def test_merge_into_insert_only_and_empty(spark, tmp_table_dir):
     assert state == {"u1": "v1", "u2": "v2"}
 
 
-def test_bloom_point_lookup_prunes_and_matches(spark, tmp_table_dir):
-    """Bloom sidecar: point lookup on a NON-key column scans fewer
-    buckets than the table holds and returns exactly the full-scan
-    answer; a value absent from the table returns zero rows."""
-    t = _mk(spark, tmp_table_dir)
-    # domain d{i%13} is NOT the bucketing key (url is); 13 domains
-    # spread over 8 buckets
-    rows = [
-        (f"https://d{i % 13}.site/u{i}", TS, i, f"d{i % 13}", "insert")
-        for i in range(120)
-    ]
-    t.merge_upsert(_batch(spark, rows))
-    t.build_blooms(["text"])
-    full = sorted(
-        r["url"] for r in t.read().filter(F.col("text") == "d7").collect()
-    )
-    pruned = t.bloom_prune_buckets("text", "d7")
-    assert pruned is not None and 0 < len(pruned) <= 8
-    got = sorted(r["url"] for r in t.point_lookup("text", "d7").collect())
-    assert got == full and len(got) > 0
-    assert t.point_lookup("text", "nope").count() == 0
-
-
-def test_bloom_sidecar_is_snapshot_scoped(spark, tmp_table_dir):
-    """A commit after build_blooms leaves the new snapshot without a
-    sidecar: pruning degrades to None (full scan) and lookups stay
-    correct."""
-    t = _mk(spark, tmp_table_dir)
-    t.merge_upsert(_batch(spark, [("u1", TS, 1, "alpha", "insert")]))
-    t.build_blooms(["text"])
-    assert t.bloom_prune_buckets("text", "alpha") is not None
-    t.merge_upsert(_batch(spark, [("u2", TS, 2, "beta", "insert")]))
-    assert t.bloom_prune_buckets("text", "beta") is None
-    assert t.point_lookup("text", "beta").count() == 1
-    # rebuilding covers the new snapshot
-    t.build_blooms(["text"])
-    assert t.bloom_prune_buckets("text", "beta") is not None
-
-
 def test_rollback_restores_state_metadata_only(spark, tmp_table_dir):
     t = _mk(spark, tmp_table_dir)
     rows = [(f"u{i}", TS, i, "good", "insert") for i in range(20)]
