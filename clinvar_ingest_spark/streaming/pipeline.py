@@ -571,8 +571,6 @@ class IngestPipeline:
         hi, verify the batches' snapshots are committed, and re-check
         the per-part HWM equality. Returns the verdict and the cursor a
         clean audit advances to."""
-        import json as _json
-
         import pyarrow.parquet as _pq
 
         root = f"{self.target.path}/_lineage"
@@ -592,8 +590,7 @@ class IngestPipeline:
         snaps = set()
         if new_bids:  # snapshot set only needed when there is new work
             for name in self.target.history():
-                with open(f"{self.target.path}/_manifests/{name}") as f:
-                    snaps.add(_json.load(f)["snapshot_id"])
+                snaps.add(self.target._load_manifest(name)["snapshot_id"])
         n_rows = 0
         for bid in new_bids:
             t = _pq.read_table(f"{root}/batch={bid}/part-0.parquet")

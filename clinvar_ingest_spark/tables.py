@@ -132,11 +132,9 @@ def _parquet_rows(files: list[str]) -> int:
 
 
 def _bucket_rows(m: dict[str, Any]) -> dict[int, int]:
-    """Manifest ``m``'s per-bucket row totals, int-keyed. A manifest
-    written before the totals were recorded counts its footers once."""
-    if "bucket_rows" in m:
-        return {int(b): int(n) for b, n in m["bucket_rows"].items()}
-    return {int(b): _parquet_rows(fs) for b, fs in m["buckets"].items()}
+    """Manifest ``m``'s per-bucket row totals, int-keyed (every commit
+    records them)."""
+    return {int(b): int(n) for b, n in m["bucket_rows"].items()}
 
 
 @dataclass
@@ -265,44 +263,22 @@ class SnapshotTable:
         by walking ``parent_name`` links from the current pointer — an
         orphan manifest (crash between manifest write and pointer swap)
         is unreachable from the pointer and never surfaces here, even
-        though its snapshot_id collides with the next real commit.
-        Pre-upgrade manifests lacking ``parent_name`` fall back to a
-        name-sorted directory listing."""
-        name = self._read_ptr()
-        if name is None:
-            return []
+        though its snapshot_id collides with the next real commit."""
         chain: list[str] = []
+        name = self._read_ptr()
         while name is not None:
             chain.append(name)
-            m = self._load_manifest(name)
-            if "parent_name" not in m:  # legacy manifest: no chain info
-                d = os.path.join(self.path, _MANIFESTS)
-                legacy = sorted(n for n in os.listdir(d) if n.startswith("m-"))
-                # prefix = names strictly OLDER than the legacy manifest
-                # the walk stopped at (chain[-1]), minus anything already
-                # on the chain — slicing at chain[0] (the CURRENT head)
-                # re-included every walked ancestor, duplicating them and
-                # letting vacuum_orphans expire a kept manifest.
-                seen = set(chain)
-                prefix = [
-                    n for n in legacy[: legacy.index(chain[-1])] if n not in seen
-                ]
-                return prefix + list(reversed(chain))
-            name = m["parent_name"]
+            name = self._load_manifest(name)["parent_name"]
         return list(reversed(chain))
 
-    def _walk_manifests(
-        self, chain: list[str] | None = None
-    ) -> Iterator[dict[str, Any]]:
-        """Yield every manifest reachable from the table's roots, each
-        once, by parent links: ``chain`` (default: the committed
-        :meth:`history`) plus the branch heads, whose commits are off
-        the main chain. Names that fail to load are skipped. The one
-        manifest-graph walk: the orphan GC, clone materialization, GDPR
-        purge and vacuum all read through it."""
-        stack = self.history() if chain is None else list(chain)
-        stack += self._load_side(_BRANCHES, {}).values()
-        seen: set[str] = set()
+    def _walk_manifests(self) -> Iterator[dict[str, Any]]:
+        """Yield every manifest reachable from the table's roots — the
+        MAIN pointer and the branch heads, whose commits are off the
+        main chain — each parsed once, by parent links. Names that fail
+        to load are skipped. The one manifest-graph walk: clone
+        materialization, GDPR purge and vacuum all read through it."""
+        stack = [self._read_main_ptr(), *self._load_side(_BRANCHES, {}).values()]
+        seen: set[str | None] = {None}
         while stack:
             name = stack.pop()
             if name in seen:
@@ -313,27 +289,7 @@ class SnapshotTable:
             except OSError:
                 continue
             yield m
-            if m.get("parent_name") is not None:
-                stack.append(m["parent_name"])
-
-    def _gc_orphan_manifests(self, chain_head: str) -> None:
-        """Drop manifests unreachable from the committed chain (torn
-        commits); runs inside the commit lock so no concurrent writer's
-        in-flight manifest can be swept."""
-        d = os.path.join(self.path, _MANIFESTS)
-        # branch heads are roots too: they are not on the pointer
-        # chain, but fast_forward will need them
-        reachable = set()
-        for m in self._walk_manifests([chain_head]):
-            if "parent_name" not in m:
-                return  # legacy chain: can't prove orphan-ness, keep all
-            reachable.add(m["_name"])
-        for f in os.listdir(d):
-            if f not in reachable:
-                try:
-                    os.unlink(os.path.join(d, f))
-                except OSError:
-                    pass
+            stack.append(m["parent_name"])
 
     # ------------------------------------------------------------------ read
     def _files(self, manifest: dict[str, Any], buckets: list[int] | None = None):
@@ -803,11 +759,14 @@ class SnapshotTable:
 
     def manifest_at(self, snapshot_id: int) -> dict[str, Any]:
         """Resolve a snapshot id through the committed parent chain only
-        — an orphan manifest with a colliding id is never returned."""
-        for name in self.history():
+        — an orphan manifest with a colliding id is never returned. The
+        walk goes head→root and stops at the target."""
+        name = self._read_ptr()
+        while name is not None:
             m = self._load_manifest(name)
             if m["snapshot_id"] == snapshot_id:
                 return m
+            name = m["parent_name"]
         raise ValueError(f"snapshot {snapshot_id} not found in {self.path}")
 
     def read_at(self, snapshot_id: int) -> DataFrame:
@@ -1248,8 +1207,9 @@ class SnapshotTable:
         planned against — two concurrent writers (ingest racing a
         compaction, say) can both *plan* from snapshot N but only one
         commits N+1; the loser must re-read and retry. Manifests written
-        by a commit that lost the race (or crashed pre-swap) are orphans:
-        unreachable from the pointer chain and GC'd here."""
+        by a commit that crashed pre-swap are orphans: unreachable from
+        the pointer chain, never read, and swept by
+        :meth:`vacuum_orphans`."""
         os.makedirs(os.path.join(self.path, _MANIFESTS), exist_ok=True)
         sid = parent + 1
         manifest = {
@@ -1291,12 +1251,8 @@ class SnapshotTable:
                 brs = self._load_side(_BRANCHES, {})
                 brs[self._branch] = name
                 self._save_side(_BRANCHES, brs)
-                main = self._read_main_ptr()
-                if main is not None:
-                    self._gc_orphan_manifests(main)
             else:
                 _atomic_write(self._ptr_path(), name)  # the commit point
-                self._gc_orphan_manifests(name)
         finally:
             self._release_lock(lock)
         return sid, mpath
@@ -1316,8 +1272,8 @@ class SnapshotTable:
     def create_branch(self, name: str, snapshot_id: int | None = None) -> int:
         """Create branch ``name`` at the current MAIN head (or at a
         historical ``snapshot_id``). Returns the branch head snapshot
-        id. The branch's manifests are GC roots until it is dropped or
-        fast-forwarded."""
+        id. The branch head is a root of :meth:`vacuum_orphans` until
+        the branch is dropped or fast-forwarded."""
         if self._branch is not None:
             raise ValueError("create_branch must run on the main table")
         lock = self._acquire_lock()
@@ -1352,8 +1308,8 @@ class SnapshotTable:
 
     def drop_branch(self, name: str) -> None:
         """Delete the branch ref — the abort half of write-audit-publish;
-        its exclusive manifests/files become orphans (swept by the next
-        commit's manifest GC and by vacuum_orphans). A failed audit must
+        its exclusive manifests/files become orphans (swept by
+        :meth:`vacuum_orphans`). A failed audit must
         end here: a live branch pins its files and makes
         ``vacuum_orphans(keep_snapshots=)`` refuse to expire."""
         lock = self._acquire_lock()
@@ -1386,7 +1342,7 @@ class SnapshotTable:
                     ok = True
                     break
                 try:
-                    n = self._load_manifest(n).get("parent_name")
+                    n = self._load_manifest(n)["parent_name"]
                 except OSError:
                     break
             if not ok:
@@ -1399,7 +1355,6 @@ class SnapshotTable:
                 _atomic_write(self._ptr_path(), head)
             brs.pop(name)
             self._save_side(_BRANCHES, brs)
-            self._gc_orphan_manifests(head)
             return self._load_manifest(head)["snapshot_id"]
         finally:
             self._release_lock(lock)
@@ -1758,6 +1713,7 @@ class SnapshotTable:
                 "snapshot_id": m["snapshot_id"],
                 "_name": m["_name"],
                 "buckets": {},
+                "bucket_rows": {},
                 "properties": m.get("properties", {}),
                 **{k: m[k] for k in _EVO_KEYS if k in m},
             },
@@ -2562,26 +2518,30 @@ class SnapshotTable:
         return self.overwrite(kept)
 
     def vacuum_orphans(self, keep_snapshots: int | None = None) -> dict[str, int]:
-        """GC data files unreachable from the committed manifest chain
-        (Iceberg remove_orphan_files analog).
+        """Sweep manifests and data files no root reaches (Iceberg
+        ``remove_orphan_files`` plus ``expire_snapshots``) — the only
+        sweeper: commits never delete anything.
 
-        The direct writer places files at final paths before the commit,
-        so a crashed/conflicted/speculatively-retried write leaves
-        orphans — invisible (no manifest references them) but consuming
-        storage. This walks the data dirs, diffs against the union of
-        file lists across the committed chain, and unlinks the rest.
+        A torn commit (crash between manifest write and pointer swap), a
+        dropped branch, or a crashed/conflicted/speculatively-retried
+        write leaves orphans: invisible (the pointer never reaches them)
+        but consuming storage. Under the commit lock — so no commit is
+        in flight — this unlinks every file in ``_manifests`` that the
+        MAIN pointer and branch heads do not reach, then diffs the data
+        dirs against the union of those manifests' file lists and
+        unlinks the rest.
 
         ``keep_snapshots``: additionally EXPIRE old snapshots first,
         keeping only the newest N ≥ 1 manifests (time travel shrinks to
-        those); files referenced only by expired snapshots become
-        orphans and are swept in the same pass. Runs driver-side over
-        manifest metadata — O(files) name-set math, no Spark job; at
+        those); manifests and files referenced only by expired snapshots
+        become orphans and are swept in the same pass. Runs driver-side
+        over manifest metadata — O(files) name-set math, no Spark job; at
         10^10 rows this is exactly Iceberg's maintenance shape
         (metadata-only planning, storage-API deletes).
 
         Single-writer maintenance op: run it like compaction, not
         concurrently with an ingest (a concurrent UNCOMMITTED write's
-        files would look orphaned)."""
+        data files would look orphaned)."""
         if self._branch is not None:
             raise ValueError("vacuum_orphans runs on the main table")
         if keep_snapshots is not None and keep_snapshots < 1:
@@ -2599,24 +2559,23 @@ class SnapshotTable:
                     "fast-forward branches first"
                 )
             if keep_snapshots is not None and len(chain) > keep_snapshots:
-                boundary = len(chain) - keep_snapshots
-            else:
-                boundary = 0
-            if boundary > 0:
-                cut = chain[boundary:]
+                chain = chain[-keep_snapshots:]
                 # re-link the oldest kept manifest as the new chain root
                 # (atomically: a truncated manifest would break history()
                 # and therefore every future commit)
-                root = self._load_manifest(cut[0])
+                root = self._load_manifest(chain[0])
                 root["parent_name"] = None
                 root["parent_id"] = -1
                 self._rewrite_manifest(root)
-                for name in chain[:boundary]:
+            manifests = list(self._walk_manifests())
+            reachable = {m["_name"] for m in manifests}
+            mdir = os.path.join(self.path, _MANIFESTS)
+            for f in os.listdir(mdir):
+                if f not in reachable:
                     try:
-                        os.unlink(os.path.join(self.path, _MANIFESTS, name))
+                        os.unlink(os.path.join(mdir, f))
                     except OSError:
                         pass
-                chain = cut
         finally:
             self._release_lock(lock)
         # branch chains' files are NOT orphans. Shallow clones
@@ -2625,7 +2584,7 @@ class SnapshotTable:
         # roots too (this is the contract Delta's VACUUM breaks — a
         # vacuumed source silently corrupts its shallow clones).
         # Dropped clones fall out of clones() and stop pinning anything.
-        walks = [self._walk_manifests(chain)] + [
+        walks = [manifests] + [
             SnapshotTable(self.spark, c, key_col=self.key_col)._walk_manifests()
             for c in self.clones()
         ]

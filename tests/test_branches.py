@@ -5,6 +5,7 @@ when main is an ancestor. Every write path (merge, DML, compact) works
 on a branch view because head resolution is branch-aware."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,20 +74,23 @@ def test_branch_dml_compact_and_time_travel(spark, tmp_table_dir):
     assert fix.read_at(2).count() == 10
 
 
-def test_branch_manifests_survive_main_commit_gc(spark, tmp_table_dir):
+def test_branch_manifests_are_gc_roots(spark, tmp_table_dir):
     t = _mk(spark, tmp_table_dir)
     t.merge_upsert(_batch(spark, [("u1", TS, 1, "v1", "insert")]))
     t.create_branch("dev")
     dev = t.branch("dev")
     dev.merge_upsert(_batch(spark, [("u2", TS, 2, "v2", "insert")]))
-    # a MAIN commit runs manifest GC — branch heads are roots
     t.merge_upsert(_batch(spark, [("u3", TS, 3, "v3", "insert")]))
     assert {r["url"] for r in dev.read().collect()} == {"u1", "u2"}
-    # vacuum on main keeps branch files; after drop, they are orphans
+    # vacuum on main keeps branch manifests and files — branch heads
+    # are roots; after drop, they are orphans
     assert t.vacuum_orphans()["removed"] == 0
     assert {r["url"] for r in dev.read().collect()} == {"u1", "u2"}
+    mdir = os.path.join(tmp_table_dir, "_manifests")
+    assert len(os.listdir(mdir)) == len(t.history()) + 1
     t.drop_branch("dev")
     assert t.vacuum_orphans()["removed"] > 0
+    assert len(os.listdir(mdir)) == len(t.history())
 
 
 def test_branch_from_snapshot_and_expiry_guard(spark, tmp_table_dir):

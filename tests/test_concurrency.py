@@ -73,7 +73,8 @@ def test_concurrent_commit_raises_conflict(spark, tmp_table_dir):
 def test_orphan_manifest_never_surfaces_in_time_travel(spark, tmp_table_dir):
     """A manifest written but never pointer-swapped (torn commit) shares
     snapshot_id with the next real commit; read_at must resolve through
-    the committed parent chain and the orphan must be GC'd."""
+    the committed parent chain. Commits never sweep: the orphan stays
+    until vacuum_orphans removes it."""
     import json
 
     t = SnapshotTable(spark, tmp_table_dir, "url", 8).create(SCHEMA)
@@ -100,10 +101,15 @@ def test_orphan_manifest_never_surfaces_in_time_travel(spark, tmp_table_dir):
     # never the empty orphan
     rows = {r["url"] for r in t.read_at(2).collect()}
     assert rows == {"u1", "u2"}
-    # the orphan was GC'd by the successful commit
-    assert orphan_name not in os.listdir(os.path.join(tmp_table_dir, "_manifests"))
+    # the successful commit left the orphan in place
+    mdir = os.path.join(tmp_table_dir, "_manifests")
+    assert orphan_name in os.listdir(mdir)
     # history walks the parent chain: create, batch1, batch2
     assert len(t.history()) == 3
+    # vacuum_orphans sweeps it: only the committed chain remains
+    t.vacuum_orphans()
+    assert sorted(os.listdir(mdir)) == sorted(t.history())
+    assert {r["url"] for r in t.read_at(2).collect()} == {"u1", "u2"}
 
 
 def test_ensure_sidecars_rebuilds_lost_lineage(spark, tmp_path):
@@ -177,40 +183,6 @@ def test_live_lock_still_blocks_commit(spark, tmp_table_dir):
             t._acquire_lock(wait=0.5)
     finally:
         os.unlink(lock)
-
-
-def test_history_with_legacy_manifest_chain(spark, tmp_table_dir):
-    """Pre-upgrade manifests (no parent_name) must appear exactly once in
-    history(), and expiry over a mixed chain must not unlink a kept
-    manifest (round-2 ADVICE: the legacy prefix duplicated walked
-    ancestors)."""
-    import json
-
-    t = SnapshotTable(spark, tmp_table_dir, "url", 8).create(SCHEMA)
-    t.merge_upsert(_batch(spark, [("u1", TS, 1, "v1", "insert")]))
-    t.merge_upsert(_batch(spark, [("u2", TS, 2, "v1", "insert")]))
-    t.merge_upsert(_batch(spark, [("u3", TS, 3, "v1", "insert")]))
-    chain = t.history()
-    assert len(chain) == 4  # create + 3 merges
-
-    # strip parent_name from the SECOND manifest → walk stops there,
-    # legacy fallback must splice in only the strictly-older prefix
-    mdir = os.path.join(tmp_table_dir, "_manifests")
-    legacy_name = chain[1]
-    with open(os.path.join(mdir, legacy_name)) as f:
-        m = json.load(f)
-    del m["parent_name"]
-    with open(os.path.join(mdir, legacy_name), "w") as f:
-        json.dump(m, f)
-
-    got = t.history()
-    assert got == chain  # same order, no duplicates
-    assert len(set(got)) == len(got)
-
-    # expiry keeps the newest 2 and must leave them readable
-    t.vacuum_orphans(keep_snapshots=2)
-    assert len(t.history()) == 2
-    assert t.read().count() == 3  # state intact
 
 
 def test_stale_break_verifies_inode_and_restores_live_lock(spark, tmp_path):
@@ -312,13 +284,11 @@ def test_racing_pipeline_cannot_commit_a_fenced_range(
     assert pipe_a.run_batch(OffsetRange(299, 599), log_end_seq=599).skipped
 
 
-def test_batch_commit_parses_head_once_plus_gc_chain(
-    spark, tmp_path, monkeypatch
-):
-    """A non-bootstrap batch parses its head manifest once (the fence,
-    the plan and the commit share it) and then each chain manifest once
-    in the commit's orphan GC: 1 + len(history()) parses, no re-read of
-    the parent to carry the evolution log forward."""
+def test_batch_commit_parses_head_once(spark, tmp_path, monkeypatch):
+    """A non-bootstrap batch parses its head manifest once: the fence,
+    the plan and the commit share it, the parent is not re-read to carry
+    the evolution log forward, and the commit walks no chain (orphan
+    manifests wait for vacuum_orphans)."""
     path = str(tmp_path / "t")
     tbl = SnapshotTable(spark, path, "url", 8).create(PAGES)
     log = synthetic_change_log(spark, 600, n_urls=100)
@@ -335,4 +305,4 @@ def test_batch_commit_parses_head_once_plus_gc_chain(
     monkeypatch.setattr(SnapshotTable, "_load_manifest", counting)
     pipe.run_batch(OffsetRange(299, 599), log_end_seq=599)
     monkeypatch.undo()
-    assert len(loads) == 1 + len(tbl.history()) == 4
+    assert len(loads) == 1

@@ -122,6 +122,7 @@ def test_vacuum_orphans_sweeps_unreferenced_files(spark, tmp_path):
 
 def test_vacuum_orphans_expires_old_snapshots(spark, tmp_path):
     import datetime as dt
+    import os
 
     from pyspark.sql import types as T
 
@@ -144,6 +145,7 @@ def test_vacuum_orphans_expires_old_snapshots(spark, tmp_path):
     res = t.vacuum_orphans(keep_snapshots=2)
     assert res["snapshots"] == 2
     assert len(t.history()) == 2
+    assert len(os.listdir(os.path.join(t.path, "_manifests"))) == 2
     # current state intact; expired snapshot ids no longer resolvable
     assert {r["url"] for r in t.read().collect()} == {"u0", "u1", "u2", "u3"}
     import pytest as _pytest

@@ -316,35 +316,3 @@ def test_rollback_rejects_bad_targets(spark, tmp_table_dir):
         t.rollback_to(t.snapshot_id())  # already there
     with pytest.raises(ValueError):
         t.rollback_to(99999)  # never committed
-
-
-def test_manifest_without_bucket_rows_is_counted_once_from_footers(
-    spark, tmp_table_dir
-):
-    """A head manifest written before per-bucket row totals existed:
-    the next commit counts its buckets from the footers and records the
-    totals, so every later commit sums them again."""
-    import pyarrow.parquet as pq
-
-    t = _mk(spark, tmp_table_dir)
-    t.merge_upsert(
-        _batch(spark, [(f"u{i}", TS, i, "v1", "insert") for i in range(12)])
-    )
-    head = t.current_manifest()
-    legacy = {k: v for k, v in head.items() if k != "bucket_rows"}
-    t._rewrite_manifest(legacy)
-
-    res = t.merge_upsert(
-        _batch(
-            spark,
-            [("u1", TS, 20, "v2", "update"), ("u30", TS, 21, "v1", "insert")],
-        ),
-        merge_mode="mor",
-    )
-    m = t.current_manifest()
-    footers = {
-        b: sum(pq.ParquetFile(f).metadata.num_rows for f in fs)
-        for b, fs in m["buckets"].items()
-    }
-    assert m["bucket_rows"] == footers
-    assert res.n_rows_after == m["stats"]["n_rows_raw"] == 14
