@@ -1,4 +1,4 @@
-"""HTML→text extraction as a vectorized pandas/Arrow UDF.
+"""HTML→text extraction as a vectorized Arrow UDF.
 
 This is the engine's analog of the reference's per-record payload decode
 (XML element → typed model, clinvar_ingest/reader.py:144-189 +
@@ -8,13 +8,14 @@ model/variation_archive.py:1076-1194). Two contract points carried over:
   always produce the same ``text`` bytes (the reference asserts exact
   field values in test/test_parse.py; our tests assert byte-identical
   extraction across replays, partitionings, and parallelism levels),
-* it runs **only** through Arrow-vectorized pandas UDFs, never
-  row-at-a-time Python (BASELINE.json input_hint).
+* it runs **only** through an Arrow-vectorized ``arrow_udf`` — pyarrow
+  arrays in and out, no pandas conversion — never a row-at-a-time
+  Python UDF (BASELINE.json input_hint).
 
 The extraction itself is intentionally dependency-free (no bs4/lxml in
 the sandbox): strip script/style blocks, strip tags, decode a fixed
 entity set, collapse whitespace. All operations are bytes/regex level —
-no locale, no float paths — so results are stable across pandas/PyArrow
+no locale, no float paths — so results are stable across PyArrow
 versions.
 """
 
@@ -22,10 +23,11 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import StringType
 
 # Fixed entity table; decoded in ONE left-to-right regex pass (no
@@ -120,7 +122,7 @@ def extract_text_py(html: bytes | None) -> str | None:
 
 # ---- Arrow/RE2 fast path -------------------------------------------
 # pyarrow.compute string kernels are RE2-backed C++ — measured ~1.3x the
-# CPython-regex pandas chain on KB pages (microbench), on the operator
+# CPython-regex chain on KB pages (microbench), on the operator
 # that is ~47% of merge wall time. End-to-end wall is NOISE-NEUTRAL at
 # local[4] (the UDF stage overlaps shuffle/write), but the CPU-seconds
 # saved are real — at cluster scale cores are the budget, so the cheaper
@@ -133,17 +135,14 @@ def extract_text_py(html: bytes | None) -> str | None:
 #   replacement output contains '&', and a global single-pattern pass
 #   never rescans its own output);
 # * Arrow's utf8 cast is STRICT — rows holding invalid UTF-8 take the
-#   pandas chain (errors="replace") PER ROW, so a row's output never
-#   depends on which rows share its Arrow batch.
+#   scalar extract_text_py (errors="replace") PER ROW, so a row's
+#   output never depends on which rows share its Arrow batch.
 _NON_AMP_ENTITIES = ["&lt;", "&gt;", "&quot;", "&#39;", "&apos;", "&nbsp;"]
 
 
-def _extract_arrow(binary_arr):
+def _extract_arrow(binary_arr: pa.Array) -> pa.Array | None:
     """RE2 path over a pyarrow binary array; None if the array holds
-    invalid UTF-8 (caller splits those rows to the pandas path)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    invalid UTF-8 (caller splits those rows to the scalar path)."""
     try:
         txt = binary_arr.cast(pa.string())
     except pa.lib.ArrowInvalid:
@@ -156,15 +155,6 @@ def _extract_arrow(binary_arr):
     return pc.utf8_trim(out, characters=_WS_CHARS)
 
 
-def _extract_pandas(html: pd.Series) -> pd.Series:
-    """CPython-regex path (lossy utf-8 decode), shared pattern strings
-    with the Arrow path — byte-identical by construction."""
-    s = html.map(lambda b: None if b is None else b.decode("utf-8", errors="replace"))
-    s = s.str.replace(_RE_MARKUP, " ", regex=True)
-    s = s.str.replace(_RE_ENTITY, _decode_entity, regex=True)
-    return s.str.replace(_RE_WS, " ", regex=True).str.strip(_WS_CHARS)
-
-
 def _utf8_ok(b) -> bool:
     if b is None:
         return True
@@ -175,33 +165,23 @@ def _utf8_ok(b) -> bool:
         return False
 
 
-@pandas_udf(StringType())
-def _extract_text_udf(html: pd.Series) -> pd.Series:
-    import pyarrow as pa
-
-    arr = pa.Array.from_pandas(html, type=pa.binary())
-    fast = _extract_arrow(arr)
+@arrow_udf(StringType())
+def _extract_text_udf(html: pa.Array) -> pa.Array:
+    fast = _extract_arrow(html)
     if fast is not None:
-        return fast.to_pandas()
+        return fast
     # Rare path: the batch holds ≥1 invalid-UTF-8 row. Split PER ROW —
     # valid rows always take the Arrow kernel, invalid rows always the
-    # lossy-decode pandas chain — so extraction output is a pure
+    # lossy-decode scalar reference — so extraction output is a pure
     # function of the row, never of its batch-mates (determinism across
     # partitionings/replays; round-2 ADVICE item).
-    html = html.reset_index(drop=True)
-    mask = html.map(_utf8_ok)
-    res = pd.Series([None] * len(html), dtype=object)
-    good = html[mask]
-    if len(good):
-        garr = pa.Array.from_pandas(good, type=pa.binary())
-        fast = _extract_arrow(garr)
-        # fast can't be None here (all rows valid); keep a safe fallback
-        got = fast.to_pandas() if fast is not None else _extract_pandas(good)
-        res[mask.to_numpy()] = got.to_numpy()
-    bad = html[~mask]
-    if len(bad):
-        res[(~mask).to_numpy()] = _extract_pandas(bad).to_numpy()
-    return res
+    raw = html.to_pylist()
+    mask = [_utf8_ok(b) for b in raw]
+    good = iter(_extract_arrow(html.filter(pa.array(mask))).to_pylist())
+    return pa.array(
+        [next(good) if ok else extract_text_py(b) for b, ok in zip(raw, mask)],
+        type=pa.string(),
+    )
 
 
 def extract_text(html_col: Column | str) -> Column:

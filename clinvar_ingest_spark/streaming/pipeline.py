@@ -6,7 +6,7 @@ checkpoint-begin → copy/parse → checkpoint-end becomes
     plan offset range   (ready-work query, processing_history.py:596-696)
     fencing check       (check_started_exists, processing_history.py:193-226)
     batch = log(lo,hi]  (Kafka offset replay, read-topic.py:37-81)
-    extract text        (parse step, vectorized pandas UDF)
+    extract text        (parse step, vectorized Arrow UDF)
     merge_upsert        (CTAS + window-rank LWW, create_tables.py:161-286)
     commit w/ HWM props (write_finished, processing_history.py:431-489)
     lineage + metrics   (parsed_files JSON lineage, progress logger)
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from clinvar_ingest_spark.functions.extract import extract_text
 from clinvar_ingest_spark.sources.change_log import ChangeLogSource, OffsetRange
-from clinvar_ingest_spark.tables import SnapshotTable, _atomic_write
+from clinvar_ingest_spark.tables import SnapshotTable, _atomic_write, bucket_expr
 
 
 @dataclass
@@ -209,8 +209,7 @@ class IngestPipeline:
         Returns the healed batch_ids."""
         commits = []  # (batch_id, lo, hi, snapshot_id) per ingest commit
         prev_hwm, prev_bid = -1, -1
-        for name in self.target.history():
-            m = self.target._load_manifest(name)
+        for m in reversed(list(self.target._chain())):
             props = m.get("properties", {})
             bid = int(props.get("batch_id", -1))
             hwm = int(props.get("global_hwm", -1))
@@ -246,8 +245,6 @@ class IngestPipeline:
     def _profile_rows(self, raw: DataFrame) -> list:
         """The per-(source partition, target bucket) profile aggregate
         of a batch slice — collected rows (metadata-sized)."""
-        from clinvar_ingest_spark.tables import bucket_expr
-
         part_col, seq_col = self.source.part_col, self.source.seq_col
         return (
             raw.groupBy(
@@ -587,10 +584,8 @@ class IngestPipeline:
         new_bids.sort()
 
         problems: list[str] = []
-        snaps = set()
-        if new_bids:  # snapshot set only needed when there is new work
-            for name in self.target.history():
-                snaps.add(self.target._load_manifest(name)["snapshot_id"])
+        # the snapshot set is only needed when there is new work
+        snaps = {m["snapshot_id"] for m in self.target._chain()} if new_bids else set()
         n_rows = 0
         for bid in new_bids:
             t = _pq.read_table(f"{root}/batch={bid}/part-0.parquet")
@@ -634,10 +629,14 @@ class IngestPipeline:
         return self.target.read().drop("_bucket", "_deleted")
 
     def lookup(self, url: str) -> DataFrame:
-        """Point lookup with manifest bucket pruning — O(1 bucket) scan."""
-        b = self.spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(url)), F.lit(self.target.n_buckets))
-            .cast("int")
-            .alias("b")
-        ).collect()[0]["b"]
-        return self.target.read(buckets=[int(b)]).filter(F.col("url") == url)
+        """Point lookup with manifest bucket pruning — O(1 bucket) scan.
+        The head manifest is read first: it owns the bucket count, which
+        a freshly opened table only learns from it."""
+        m = self.target.current_manifest()
+        key = self.target.key_col
+        b = (
+            self.spark.range(1).select(F.lit(url).alias(key))
+            .select(bucket_expr(key, self.target.n_buckets))
+            .collect()[0][0]
+        )
+        return self.target.read(buckets=[b], snapshot=m).filter(F.col(key) == url)

@@ -258,18 +258,21 @@ class SnapshotTable:
         m = self.current_manifest()
         return {} if m is None else m.get("properties", {})
 
-    def history(self) -> list[str]:
-        """Manifest names of COMMITTED snapshots, root→current, resolved
-        by walking ``parent_name`` links from the current pointer — an
+    def _chain(self) -> Iterator[dict[str, Any]]:
+        """Yield the COMMITTED manifests head→root, each parsed once, by
+        walking ``parent_name`` links from the current pointer — an
         orphan manifest (crash between manifest write and pointer swap)
         is unreachable from the pointer and never surfaces here, even
         though its snapshot_id collides with the next real commit."""
-        chain: list[str] = []
         name = self._read_ptr()
         while name is not None:
-            chain.append(name)
-            name = self._load_manifest(name)["parent_name"]
-        return list(reversed(chain))
+            m = self._load_manifest(name)
+            yield m
+            name = m["parent_name"]
+
+    def history(self) -> list[str]:
+        """Manifest names of committed snapshots, root→current."""
+        return [m["_name"] for m in self._chain()][::-1]
 
     def _walk_manifests(self) -> Iterator[dict[str, Any]]:
         """Yield every manifest reachable from the table's roots — the
@@ -761,12 +764,9 @@ class SnapshotTable:
         """Resolve a snapshot id through the committed parent chain only
         — an orphan manifest with a colliding id is never returned. The
         walk goes head→root and stops at the target."""
-        name = self._read_ptr()
-        while name is not None:
-            m = self._load_manifest(name)
+        for m in self._chain():
             if m["snapshot_id"] == snapshot_id:
                 return m
-            name = m["parent_name"]
         raise ValueError(f"snapshot {snapshot_id} not found in {self.path}")
 
     def read_at(self, snapshot_id: int) -> DataFrame:
@@ -2702,9 +2702,13 @@ class SnapshotTable:
                 import pyarrow.compute as pc
                 import pyarrow.parquet as pq
 
-                for pdf in batches:
+                out_schema = pa.schema(
+                    [("old", pa.string()), ("new", pa.string()),
+                     ("removed", pa.int64())]
+                )
+                for batch in batches:
                     out = []
-                    for path in pdf["path"]:
+                    for path in batch.column("path").to_pylist():
                         t = pq.read_table(path)
                         mask = pc.fill_null(
                             pc.not_equal(
@@ -2715,28 +2719,24 @@ class SnapshotTable:
                         kept = t.filter(mask)
                         removed = t.num_rows - kept.num_rows
                         if removed == 0:
-                            out.append((path, path, 0))
+                            new = path
                         elif kept.num_rows == 0:
-                            out.append((path, None, removed))
+                            new = None
                         else:
                             new = os.path.join(
                                 os.path.dirname(path),
                                 f"purge-{uuid.uuid4().hex[:8]}.parquet",
                             )
                             pq.write_table(kept, new)
-                            out.append((path, new, removed))
-                    import pandas as pd
-
-                    yield pd.DataFrame(
-                        out, columns=["old", "new", "removed"]
-                    )
+                        out.append({"old": path, "new": new, "removed": removed})
+                    yield pa.RecordBatch.from_pylist(out, schema=out_schema)
 
             res = (
                 self.spark.createDataFrame(
                     [(p,) for p in candidates], "path string"
                 )
                 .repartition(min(len(candidates), 64))
-                .mapInPandas(_rewrite, "old string, new string, removed long")
+                .mapInArrow(_rewrite, "old string, new string, removed long")
                 .collect()
             )
             rewrites = {

@@ -98,44 +98,55 @@ def test_judge_reported_divergence_cases():
 
 
 def test_invalid_utf8_falls_back_to_lossy_decode():
-    import pandas as pd
     import pyarrow as pa
 
     from clinvar_ingest_spark.functions.extract import (
         _extract_arrow,
-        _extract_pandas,
+        _extract_text_udf,
         extract_text_py,
     )
 
     raw = [b"<p>ok\xff\xfe</p>", b"<p>fine</p>", None]
     assert _extract_arrow(pa.array(raw, type=pa.binary())) is None  # strict cast
-    got = _extract_pandas(pd.Series(raw)).tolist()
+    got = _extract_text_udf.func(pa.array(raw, type=pa.binary())).to_pylist()
     want = [extract_text_py(b) for b in raw]
     assert got == want and got[0] == "ok��"
 
 
 def test_utf8_fallback_is_per_row():
-    """Rows with invalid UTF-8 take the lossy pandas path; VALID rows in
+    """Rows with invalid UTF-8 take the lossy scalar path; VALID rows in
     the same batch still take the Arrow path — output is a pure function
     of the row, independent of batch composition (round-2 ADVICE)."""
-    import pandas as pd
+    import pyarrow as pa
 
     from clinvar_ingest_spark.functions.extract import (
         _extract_text_udf,
         extract_text_py,
     )
 
+    def fn(rows):  # the unwrapped arrow_udf over one binary batch
+        return _extract_text_udf.func(pa.array(rows, pa.binary())).to_pylist()
+
     raw = [b"<p>ok\xff\xfe</p>", b"<p>fine</p>", None,
            "<script>x</script\xa0>after".encode(), b"\xff<script>"]
-    fn = _extract_text_udf.func  # unwrap the pandas_udf
-    got = fn(pd.Series(raw)).tolist()
+    got = fn(raw)
     want = [extract_text_py(b) for b in raw]
     assert got == want and got[0] == "ok��"
     # batch-composition independence: each row alone == row in the batch
     for b, w in zip(raw, want):
-        assert fn(pd.Series([b])).tolist() == [w]
+        assert fn([b]) == [w]
     # and in reversed batch order
-    assert fn(pd.Series(list(reversed(raw)))).tolist() == list(reversed(want))
+    assert fn(list(reversed(raw))) == list(reversed(want))
+
+
+def test_extract_udf_is_arrow_native():
+    """The extraction UDF takes and returns pyarrow arrays: an arrow_udf,
+    not a pandas_udf (no Arrow→pandas→Arrow round trip per batch)."""
+    from pyspark.util import PythonEvalType
+
+    from clinvar_ingest_spark.functions.extract import _extract_text_udf
+
+    assert _extract_text_udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
 
 
 def test_ws_collapse_fast_pattern_equals_naive_collapse():

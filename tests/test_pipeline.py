@@ -141,6 +141,51 @@ def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):
     assert pipe.lookup("https://nope.example.com/x").count() == 0
 
 
+def test_first_lookup_on_reopened_table_uses_stored_bucket_count(spark, tmp_path):
+    """A table reopened without its bucket count (constructor default
+    64, stored 8) learns the count from the head manifest BEFORE the
+    first lookup hashes the key — so even the first lookup on each
+    freshly opened table finds its row."""
+    path = str(tmp_path / "t")
+    pipe = _pipe(spark, path, n=600)
+    pipe.run_to_end(span=600)
+    urls = [r["url"] for r in pipe.current_state().select("url").limit(20).collect()]
+    got = [
+        IngestPipeline(spark, pipe.source, SnapshotTable(spark, path, "url"))
+        .lookup(u).count()
+        for u in urls
+    ]
+    assert got == [1] * len(urls)
+
+
+def test_chain_walks_parse_each_manifest_once(spark, tmp_path, monkeypatch):
+    """The lineage audits and the sidecar heal walk the committed chain
+    once, parsing each manifest once; the audits' one extra parse is the
+    head read for the checkpoint HWM."""
+    pipe = _pipe(spark, str(tmp_path / "t"), n=900)
+    pipe.run_to_end(span=300)
+    n = len(pipe.target.history())
+    assert n == 4  # create + 3 batches
+
+    loads = []
+    orig = SnapshotTable._load_manifest
+
+    def counting(self, name):
+        loads.append(name)
+        return orig(self, name)
+
+    monkeypatch.setattr(SnapshotTable, "_load_manifest", counting)
+    counts = {}
+    for audit in (pipe.verify_lineage, pipe.ensure_sidecars,
+                  pipe.verify_lineage_incremental):
+        loads.clear()
+        audit()
+        counts[audit.__name__] = len(loads)
+    monkeypatch.undo()
+    assert counts == {"verify_lineage": n + 1, "ensure_sidecars": n,
+                      "verify_lineage_incremental": n + 1}
+
+
 def _corrupt(log):
     """Unknown op every 10th seq; null key every 7th."""
     from pyspark.sql import functions as F
